@@ -12,13 +12,15 @@ import org.apache.spark.sql.{DataFrame, Row}
   * of silently growing a driver loop. The cap is a correctness fuse,
   * not a tuning knob — at 100 TB the folds stay safe exactly because
   * the collected frames are alphabet/dim-bounded, never corpus-scale.
+  * The collect itself is capped at cap+1 rows, so an oversized frame
+  * fails before the driver holds more than one row past the bound.
   */
 object Bounded {
   def collect(df: DataFrame, cap: Int, what: String): Array[Row] = {
-    val rows = df.collect()
+    val rows = df.limit(cap + 1).collect()
     require(rows.length <= cap,
-      s"$what: ${rows.length} rows exceed the documented <=$cap bound " +
-        "the driver fold is sized for")
+      s"$what: at least ${rows.length} rows exceed the documented <=$cap " +
+        "bound the driver fold is sized for")
     rows
   }
 }

@@ -27,7 +27,7 @@ object Dedup {
     * self-join downstream (the 100 TB shape: set operations over content
     * hashes, never raw n-gram strings; a 64-bit collision perturbs a
     * Jaccard count with probability ~n²/2⁶⁴ per doc pair). */
-  // private[graft]: PlanHygieneSpec audits this RAW build plan (the
+  // private[graft]: InventorySpec audits this RAW build plan (the
   // memoized shingles3Shared/shingles5Shared hide it behind a
   // LogicalRDD scan)
   /** The raw (pre-distinct) k-shingle occurrence stream behind
@@ -123,7 +123,7 @@ object Dedup {
     * pairwise comparison. The self-join's two identical shuffle subtrees
     * are deduplicated by ReuseExchange — no cache needed (and a cache here
     * would leak: the caller owns the action). */
-  // private[graft]: PlanHygieneSpec audits this RAW declarative plan
+  // private[graft]: InventorySpec audits this RAW declarative plan
   // directly, since every declared consumer now rides the checkpointed
   // lshPairsShared (whose LogicalRDD scan hides the band join)
   private[graft] def lshPairs(s: SparkSession, d: String): DataFrame = {
@@ -152,7 +152,7 @@ object Dedup {
     * candidate pair. `dedup_lsh_pairs` rides the shared frame too (it
     * was the most expensive dedup query while recomputing work two
     * sibling queries had already materialized); the raw declarative
-    * join shape stays under audit via PlanHygieneSpec's explicit
+    * join shape stays under audit via InventorySpec's explicit
     * `lshPairs` entry.
     *
     * Durable form (r7 verdict ask #5, the same seam as Similarity's
@@ -248,7 +248,7 @@ object Dedup {
     * stage in the family. Consumers: k=3 — dedup_lsh_verified's
     * exact-verify stage and text_novelty's first-occurrence index;
     * k=5 — dedup_jaccard_pairs' and dedup_containment's candidate
-    * joins. Raw build plan under PlanHygieneSpec audit via `shingles`.
+    * joins. Raw build plan under InventorySpec audit via `shingles`.
     *
     * Size trade, stated deliberately: unlike the constant-size sketch
     * tables these frames are O(corpus shingles) — exactly the pinning
@@ -313,7 +313,7 @@ object Dedup {
     * joins plus the value-distinct, so without materialization the
     * md5-per-token fold runs up to four times in one query;
     * dedup_simhash is a fifth build of the same table. Raw plan under
-    * PlanHygieneSpec audit via `simhash`. */
+    * InventorySpec audit via `simhash`. */
   private val simhashCache = new FrameMemo
   private def simhashShared(s: SparkSession, d: String): DataFrame =
     simhashCache.get(s, d)(simhash(s, d).localCheckpoint())

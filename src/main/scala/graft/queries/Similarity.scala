@@ -92,7 +92,7 @@ object Similarity {
     * consumers — so like pqIndex it is materialized once per (session,
     * dir) via the FrameMemo; the within-cell pair JOIN (the actual
     * O(n^1.5) term) stays per-query and is what ScaleStress measures.
-    * The raw build plan stays under PlanHygieneSpec audit via
+    * The raw build plan stays under InventorySpec audit via
     * ivfCellsRaw. */
   private[graft] def ivfCellsRaw(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -511,7 +511,7 @@ object Similarity {
     * broadcast codebook. Rebuilding these per query repeated the full
     * codebook fold for every consumer; a production deployment builds
     * the index once and queries scan codes — this memo IS that index
-    * build. The raw build plan stays under PlanHygieneSpec audit via
+    * build. The raw build plan stays under InventorySpec audit via
     * pqIndexRaw. */
   private[graft] def pqIndexRaw(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -1873,8 +1873,8 @@ object Similarity {
         .toDF("vec_id", "before_present", "after_present",
           "n_before", "n_after", "codebook_stale")
       // an empty corpus has nothing to index or forget — schema-
-      // preserving empty result (EmptyInputSpec contract); memoized
-      // dataset metadata, not a per-rep probe job (r17)
+      // preserving empty result (InventorySpec empty-input contract);
+      // memoized dataset metadata, not a per-rep probe job (r17)
       if (embShape(s, d)._1 == 0L) emptyOut
       else {
       // per-rep CLONE of the write-once full fixture (r15): the row
@@ -1932,8 +1932,8 @@ object Similarity {
     "sim_index_append_serve" -> ((s, d) => {
       import s.implicits._
       // empty corpus: nothing to build from or append — schema-
-      // preserving empty result (EmptyInputSpec contract); memoized
-      // dataset metadata, not a per-rep probe job (r17)
+      // preserving empty result (InventorySpec empty-input contract);
+      // memoized dataset metadata, not a per-rep probe job (r17)
       if (embShape(s, d)._1 == 0L)
         Seq.empty[(Long, Double, Long, Long, Boolean)]
           .toDF("q_id", "top_sim", "n_base", "n_after", "quantizer_kept")
@@ -2137,7 +2137,8 @@ object Similarity {
     "sim_index_stats" -> ((s, d) => {
       import s.implicits._
       // empty corpus: nothing to index — schema-preserving empty
-      // result (EmptyInputSpec contract); memoized metadata (r17)
+      // result (InventorySpec empty-input contract); memoized
+      // metadata (r17)
       if (embShape(s, d)._1 == 0L)
         Seq.empty[(Long, Long, Long, Double, Double, Boolean, Boolean,
             Long, Boolean)]

@@ -96,7 +96,7 @@ object Sketches {
 
   /** Raw sketch builds — each is ONE corpus pass folding into a
     * constant-size table (≤ D·W CountMin cells; MBits/63 Bloom longs).
-    * private[graft]: PlanHygieneSpec audits these raw plans (the
+    * private[graft]: InventorySpec audits these raw plans (the
     * memoized shared frames hide them behind LogicalRDD scans). */
   private[graft] def cmsBuild(s: SparkSession, d: String): DataFrame =
     cmsFold(words(s, d))

@@ -388,7 +388,7 @@ object TextAnalysis {
     "text_bpe_store_roundtrip" -> ((s, d) => {
       import s.implicits._
       // empty corpus: nothing to fit — schema-preserving empty result
-      // (EmptyInputSpec contract)
+      // (InventorySpec empty-input contract)
       if (t(s, d, "documents").head(1).isEmpty)
         Seq.empty[(String, Long, Long, Boolean, Boolean, Boolean)]
           .toDF("source", "n_words", "n_cps", "stored_equals_fresh",
@@ -1247,7 +1247,7 @@ object TextAnalysis {
     * doc-partitioned window pass (a per-doc sort) is the expensive
     * extraction stage both run over the identical input. Same
     * build-once index discipline as Dedup's shingle tables; the raw
-    * plan stays under PlanHygieneSpec audit via winnowFingerprints. */
+    * plan stays under InventorySpec audit via winnowFingerprints. */
   private val winnowCache = new graft.engine.FrameMemo
   private[queries] def winnowShared(s: SparkSession, d: String)
       : org.apache.spark.sql.DataFrame =

@@ -22,7 +22,7 @@ import graft.Tables.t
   * no float-division drift on the selection boundary.
   *
   * Scalar corpus aggregates (Q11, Q15, Q20, Q22) broadcast a 1-row frame
-  * (constant size at any scale — PlanHygieneSpec's scalarBroadcastOk);
+  * (constant size at any scale — InventorySpec's scalarBroadcastOk);
   * everything else is equi-join + two-phase aggregation.
   */
 object TpchDeep {

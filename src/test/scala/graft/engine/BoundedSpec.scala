@@ -1,5 +1,7 @@
 package graft.engine
 
+import org.apache.spark.sql.functions.{col, lit, raise_error, when}
+
 import graft.SparkSpec
 
 /** The driver-fold boundedness fuse (r16 verdict ask #6): the three
@@ -26,5 +28,19 @@ class BoundedSpec extends SparkSpec {
     assert(e.getMessage.contains("4097"))
     assert(e.getMessage.contains("4096"))
     assert(e.getMessage.contains("synthetic alphabet blowup"))
+  }
+
+  test("an over-cap frame fails without evaluating rows past cap+1") {
+    // one partition, so rows are produced in order; every row past
+    // cap+1 raises when evaluated, and a full collect would reach them
+    val cap = 10
+    val df = spark.range(1, 10001, 1, 1).select(
+      when(col("id") > cap + 1, raise_error(lit("evaluated past cap+1")))
+        .otherwise(col("id")).as("x"))
+    val e = intercept[IllegalArgumentException] {
+      Bounded.collect(df, cap, what = "lazily failing frame")
+    }
+    assert(e.getMessage.contains(s"<=$cap"))
+    assert(e.getMessage.contains("lazily failing frame"))
   }
 }

@@ -1,10 +1,11 @@
 package graft.streaming
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
+import org.scalatest.BeforeAndAfterAll
 
 import graft.SparkSpec
 import graft.Tables.t
@@ -23,7 +24,7 @@ import graft.Tables.t
   * set) is identical by construction — any divergence is lost or
   * duplicated state, not batching skew.
   */
-class StreamingRestartSpec extends SparkSpec {
+class StreamingRestartSpec extends SparkSpec with BeforeAndAfterAll {
 
   /** Kill offsets (ms after start) — a spread from "before the first
     * batch commits" to "mid-stream" to "nearly drained". */
@@ -61,12 +62,27 @@ class StreamingRestartSpec extends SparkSpec {
     }
   }
 
+  // A kill inside the write of offsets/0 leaves a hidden, empty
+  // `offsets/.0.<uuid>.tmp`; the restart starts at batch 0, where
+  // Spark's guard against two queries sharing a checkpoint counts that
+  // file and fails with STATE_STORE_CHECKPOINT_LOCATION_NOT_EMPTY.
+  // Every run here owns its checkpoint, so this suite turns it off.
+  private val verifyEmpty = "spark.sql.streaming.verifyCheckpointDirectoryEmptyOnStart"
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    spark.conf.set(verifyEmpty, "false")
+  }
+  override def afterAll(): Unit =
+    try spark.conf.unset(verifyEmpty) finally super.afterAll()
+
   /** One uninterrupted run → sink; then a fresh sink/checkpoint with
-    * `killDelaysMs.size` abrupt kills + a final drain. Returns
+    * `kills.size` abrupt kills + a final drain. `prepare` gets the
+    * fresh checkpoint's path before the first start. Returns
     * (reference rows, kill-run rows) as sorted row strings. */
   private def sweepAppend(name: String, src: String,
       schema: org.apache.spark.sql.types.StructType,
-      op: DataFrame => DataFrame): (Seq[String], Seq[String]) = {
+      op: DataFrame => DataFrame, kills: Seq[Long] = killDelaysMs,
+      prepare: String => Unit = _ => ()): (Seq[String], Seq[String]) = {
     val root = Files.createTempDirectory(s"graft_kill_$name").toString
     def reader() = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(src)
@@ -81,7 +97,8 @@ class StreamingRestartSpec extends SparkSpec {
 
     // kill loop: start, let it run killDelay ms, stop abruptly (no
     // processAllAvailable — an in-flight batch dies uncommitted)
-    for (delay <- killDelaysMs) {
+    prepare(s"$root/chk")
+    for (delay <- kills) {
       val q = start(s"$root/sink", s"$root/chk")
       if (delay > 0) Thread.sleep(delay)
       q.stop()
@@ -131,6 +148,18 @@ class StreamingRestartSpec extends SparkSpec {
       df => DocStream.bandIndex(df).toDF())
     assert(ref.nonEmpty, "reference run emitted nothing — test is vacuous")
     assert(got == ref, s"band registry diverged after kills: " +
+      s"ref=${ref.size} rows, got=${got.size}")
+  }
+
+  test("a kill inside the first offset-log write leaves a restartable checkpoint") {
+    val (src, schema) = stage(t(spark, sf(), "documents").select("doc_id"), 2)
+    // what such a kill leaves: offsets/ holds only the empty temp file
+    // of the interrupted offsets/0 write
+    val (ref, got) = sweepAppend("orphan", src, schema, identity, kills = Nil,
+      prepare = chk => Files.createFile(Files.createDirectories(Paths.get(chk,
+        "offsets")).resolve(s".0.${java.util.UUID.randomUUID}.tmp")))
+    assert(ref.nonEmpty, "reference run emitted nothing — test is vacuous")
+    assert(got == ref, s"restart over the orphaned temp file diverged: " +
       s"ref=${ref.size} rows, got=${got.size}")
   }
 

@@ -13,7 +13,31 @@ cd "$(dirname "$0")/.."
 echo "== check.py selftest (negative-zero fixture) =="
 python3 tools/check.py --selftest
 echo "== compile + test =="
-sbt -batch test
+# reports of suites that no longer exist would linger in the table
+rm -rf target/test-reports
+test_status=0
+sbt -batch test || test_status=$?
+echo "== per-suite test time =="
+# one row per suite report, slowest first; failures counts errors too
+python3 - <<'EOF'
+import glob
+import xml.etree.ElementTree as ET
+
+rows = []
+for path in glob.glob("target/test-reports/*.xml"):
+    suite = ET.parse(path).getroot()
+    rows.append((suite.get("name"), int(suite.get("tests", 0)),
+                 int(suite.get("failures", 0)) + int(suite.get("errors", 0)),
+                 float(suite.get("time", 0))))
+rows.sort(key=lambda r: -r[3])
+rows.append(("TOTAL", sum(r[1] for r in rows), sum(r[2] for r in rows),
+             sum(r[3] for r in rows)))
+width = max([len("suite")] + [len(r[0]) for r in rows])
+print(f"{'suite':<{width}} {'tests':>6} {'failures':>8} {'seconds':>9}")
+for name, tests, failures, seconds in rows:
+    print(f"{name:<{width}} {tests:>6} {failures:>8} {seconds:>9.1f}")
+EOF
+[ "$test_status" -eq 0 ] || exit "$test_status"
 echo "== smoke (t1) =="
 sbt -batch "runMain graft.Smoke" | grep '\[smoke\]'
 echo "== verify sf0.001 =="
