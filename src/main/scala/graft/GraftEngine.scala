@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.engine.{Catalog, MrJob, MrLine, MrPipeline}
+import graft.engine.{Catalog, MrJob, MrPipeline}
 
 /** The user-facing entry point — everything a user of the reference
   * system does, on Spark:
@@ -31,19 +31,12 @@ class GraftEngine(val spark: SparkSession, warehouse: String) {
   def delete(name: String): Boolean = catalog.delete(name)
   def info(): Map[String, Long] = catalog.info()
 
-  /** Run an MrJob over stored files (all stored files when `files` is
-    * empty — the reference's default file selection,
-    * `cn/mr_actions.go:61-85`). Returns (reducerId, outputLine) rows. */
-  def mapReduce(job: MrJob, files: Seq[String] = Seq.empty): DataFrame = {
-    val names = if (files.nonEmpty) {
-      val missing = files.filterNot(catalog.list().contains)
-      require(missing.isEmpty, s"unknown files: ${missing.mkString(", ")}")
-      files
-    } else catalog.list()
-    require(names.nonEmpty, "no stored files")
-    val paths = names.map(n => s"$warehouse/$n")
-    MrPipeline.run(spark, MrPipeline.lines(spark, paths), job)
-  }
+  /** Run an MrJob over stored text files, selected by
+    * [[Catalog.mapInputs]] (all stored TXT files when `files` is empty —
+    * the reference's default file selection, `cn/mr_actions.go:61-85`).
+    * Returns (reducerId, outputLine) rows. */
+  def mapReduce(job: MrJob, files: Seq[String] = Seq.empty): DataFrame =
+    MrPipeline.run(spark, MrPipeline.lines(spark, catalog.mapInputs(files)), job)
 
   /** Run an MrJob over an already-loaded table column. */
   def mapReduceTable(job: MrJob, df: DataFrame, file: String,

@@ -313,6 +313,32 @@ class Catalog(spark: SparkSession, warehouse: String) {
     * map-reduce job (cn/mr_actions.go:222: only TXT chunks feed maps). */
   def listTxt(): Seq[String] = list().filter(fileType(_) == "TXT")
 
+  /** M8 input selection, the one rule every map-reduce entry point uses
+    * (`cn/mr_actions.go:72-85, 222`): an empty list
+    * selects every stored TXT file; an explicit list is checked against
+    * the catalog first, every missing name reported in one error, then
+    * de-duplicated (the reference's `filename_map` is a SET, so a repeated
+    * name must not double its counts) and filtered to TXT (the `:222`
+    * filter runs before the membership check, so explicit BIN names and
+    * table directories are skipped too).
+    * @return the selected files' paths, in list order
+    * @throws IllegalArgumentException missing names, or no TXT input left */
+  def mapInputs(fileNames: Seq[String]): Seq[String] = {
+    val names =
+      if (fileNames.isEmpty) listTxt()
+      else {
+        val stored = list().toSet
+        val missing = fileNames.filterNot(stored).distinct
+        if (missing.nonEmpty)
+          throw new IllegalArgumentException(
+            s"file(s) '${missing.mkString("', '")}' not in system")
+        fileNames.distinct.filter(fileType(_) == "TXT")
+      }
+    if (names.isEmpty)
+      throw new IllegalArgumentException("no TXT files stored")
+    names.map(pathOf)
+  }
+
   /** Absolute path of a stored file, for handing to a reader. */
   def pathOf(name: String): String = target(name).toString
 

@@ -9,15 +9,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    submission is rejected while the first is still executing, and the
   *    name frees on completion — success or failure (`jobs_map` guard at
   *    `:56-60`, `defer delete` at `:63`);
-  *  - an explicit file list is validated against the catalog BEFORE any
-  *    work starts; every missing name is reported in one error
-  *    (`:72-85`);
-  *  - an EMPTY file list selects all stored TXT files, and binary
-  *    entries never feed the map phase on EITHER path (`:222`: the
-  *    `FileType_TXT` filter runs in the chunk-scheduling loop, before
-  *    the explicit-list membership check — explicit BIN names are
-  *    skipped there too; this runner errors loudly when the skip
-  *    leaves nothing, where the reference would run an empty job).
+  *  - input selection is [[Catalog.mapInputs]], shared with
+  *    `GraftEngine.mapReduce`: an explicit list is validated BEFORE any
+  *    work starts, and binary entries never feed the map phase
+  *    (`:72-85, 222`).
   *
   * The run is synchronous like the reference's `Map_reduce`: the result
   * is fully materialized (checkpoint-backed) before the method returns
@@ -39,24 +34,8 @@ class JobRunner(spark: SparkSession, catalog: Catalog) {
       throw new IllegalStateException(
         s"there's already a job named $jobName running") // :56-60
     try {
-      val files =
-        if (fileNames.isEmpty) catalog.listTxt() // default-all-TXT (:222)
-        else {
-          val stored = catalog.list().toSet
-          val missing = fileNames.filterNot(stored)
-          if (missing.nonEmpty)
-            throw new IllegalArgumentException(
-              s"file(s) '${missing.mkString("', '")}' not in system") // :72-85
-          // the TXT-only filter applies to explicit lists too (:222 runs
-          // before the filename_map membership check); distinct matches
-          // the reference's filename_map SET semantics (cn/mr_actions
-          // .go:85) — a repeated name must not double its counts
-          fileNames.distinct.filter(catalog.fileType(_) == "TXT")
-        }
-      if (files.isEmpty)
-        throw new IllegalArgumentException("no TXT files stored")
       MrPipeline
-        .run(spark, MrPipeline.lines(spark, files.map(catalog.pathOf)), job)
+        .run(spark, MrPipeline.lines(spark, catalog.mapInputs(fileNames)), job)
         .localCheckpoint() // eager: the job completes inside the call
     } finally running.remove(jobName) // defer delete (:63)
   }

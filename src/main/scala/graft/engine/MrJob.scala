@@ -20,11 +20,19 @@ trait MrJob extends Serializable {
   def R: Int
 
   /** Map: one input line → 0..n string KV pairs
-    * (`sn/mr_actions.go:140`). */
+    * (`sn/mr_actions.go:140`). A `(null, null)` pair is reserved for the
+    * pipeline's empty-shuffle sentinel and never reaches a reducer. */
   def fMap(file: String, lineNo: Long, line: String): Iterator[(String, String)]
 
-  /** Reduce: called ONCE per reducer with the entire sorted partition —
-    * per-key grouping is the job's responsibility
-    * (`sn/mr_actions.go:393-397`; SURVEY.md §7.4). */
+  /** Reduce: called ONCE per reducer, empty reducers included, with the
+    * entire sorted partition — per-key grouping is the job's
+    * responsibility (`sn/mr_actions.go:393-397`; SURVEY.md §7.4).
+    *
+    * Keys and values cross the shuffle as UTF-8, and a partition arrives
+    * sorted by key, then value, in UTF-8 byte (code-point) order — the
+    * order Go compares strings in. It differs from Java's UTF-16
+    * `compareTo` only between supplementary characters and
+    * U+E000-U+FFFF. An unpaired surrogate arrives as `?`, exactly as
+    * [[FirstBytePartitioner]] reads it. */
   def fReduce(partition: Iterator[(String, String)]): Iterator[String]
 }

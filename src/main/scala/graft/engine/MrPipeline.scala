@@ -1,11 +1,10 @@
 package graft.engine
 
 import org.apache.hadoop.io.{LongWritable, Text}
-import org.apache.hadoop.mapred.{FileSplit, TextInputFormat}
-import org.apache.spark.Partitioner
-import org.apache.spark.rdd.{HadoopRDD, RDD}
+import org.apache.hadoop.mapred.{FileSplit, JobConf, TextInputFormat}
+import org.apache.spark.TaskContext
+import org.apache.spark.rdd.HadoopRDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The reference's single-byte shuffle partitioner
@@ -16,17 +15,6 @@ import org.apache.spark.sql.functions._
   * unchanged). Keys in the reference carry `fmt.Sprintln`'s trailing
   * newline, so an empty-token key is the string "\n" → byte 10.
   */
-class FirstBytePartitioner(r: Int) extends Partitioner {
-  require(r > 0)
-  override def numPartitions: Int = r
-  override def getPartition(key: Any): Int = key match {
-    case (k: String, _) => FirstBytePartitioner.of(k, r) // composite (key, value)
-    case k: String      => FirstBytePartitioner.of(k, r)
-    case null           => FirstBytePartitioner.of("", r)
-    case other          => FirstBytePartitioner.of(other.toString, r)
-  }
-}
-
 object FirstBytePartitioner {
   def of(key: String, r: Int): Int = {
     val b =
@@ -39,14 +27,17 @@ object FirstBytePartitioner {
   }
 }
 
-/** The MapReduce dataflow core (SURVEY.md §2.2 M1-M5) on Spark's
-  * sort-based shuffle:
+/** The MapReduce dataflow core (SURVEY.md §2.2 M1-M5): one text scan
+  * and one row-encoded shuffle.
   *
-  * `lines` (S1) → `flatMap fMap` (M1) →
-  * `repartitionAndSortWithinPartitions(FirstBytePartitioner)` (M2+M3;
-  * Spark's ExternalSorter does the spill + k-way merge the reference
-  * hand-rolls at `sn/mr_actions.go:425-485`) →
-  * `mapPartitions fReduce` (M5, whole sorted partition per call).
+  * `lines` (S1: lines numbered inside each input split) →
+  * `flatMap fMap` to `(rid, key, value)` rows with
+  * `rid = FirstBytePartitioner.of(key, R)` (M1+M2) →
+  * `repartitionById(R, rid)` → `sortWithinPartitions(key, value)`
+  * (M3/M4: Spark's unsafe external sort does the spill + k-way merge the
+  * reference hand-rolls at `sn/mr_actions.go:425-485`) →
+  * `mapPartitions fReduce` (M5, whole sorted partition per call, tagged
+  * with the partition's rid).
   *
   * Everything is executor-side and spillable — no driver collects — so
   * the same pipeline shape holds on a 1000-executor cluster.
@@ -54,25 +45,58 @@ object FirstBytePartitioner {
 object MrPipeline {
 
   /** S1: scan text files line-by-line with (file, lineNo) tagging.
-    * Line numbers come from TextInputFormat byte offsets (exact and
-    * split-stable, unlike monotonically_increasing_id) ranked per file. */
+    * TextInputFormat splits a file at byte offsets; each split numbers
+    * its own lines, starting at the line count of the same file's earlier
+    * splits. Those counts take one counting job over the earlier splits,
+    * and no job at all when every file is a single split. `file` is the
+    * full path, so same-named files in different directories stay
+    * distinct. */
   def lines(spark: SparkSession, paths: Seq[String]): Dataset[MrLine] = {
     import spark.implicits._
     val rdd = spark.sparkContext
       .hadoopFile(paths.mkString(","), classOf[TextInputFormat],
         classOf[LongWritable], classOf[Text])
       .asInstanceOf[HadoopRDD[LongWritable, Text]]
-    // full path, not basename: same-named files in different directories
-    // must stay distinct window partitions
-    val tagged = rdd.mapPartitionsWithInputSplit { (split, it) =>
-      val file = split.asInstanceOf[FileSplit].getPath.toUri.getPath
-      it.map { case (off, txt) => (file, off.get(), txt.toString) }
-    }
-    val w = Window.partitionBy($"file").orderBy($"off")
-    tagged.toDF("file", "off", "line")
-      .withColumn("lineNo", row_number().over(w).cast("long") - 1)
-      .select($"file", $"lineNo", $"line")
-      .as[MrLine]
+    val offsets = splitOffsets(rdd)
+    rdd.mapPartitionsWithInputSplit { (split, it) =>
+      val fs = split.asInstanceOf[FileSplit]
+      val file = fs.getPath.toUri.getPath
+      var n =
+        if (fs.getStart == 0) 0L
+        else offsets.getOrElse((file, fs.getStart),
+          throw new IllegalStateException(s"no line offset for $file@${fs.getStart}"))
+      it.map { case (_, txt) => val l = MrLine(file, n, txt.toString); n += 1; l }
+    }.toDS()
+  }
+
+  /** Line-number offset of every split that does not start its file,
+    * keyed by (path, split start): the summed line counts of the same
+    * file's earlier splits. Splits are listed the way `HadoopRDD` lists
+    * them (same input format, conf and minimum split count; empty splits
+    * dropped); each count comes back keyed by the split that produced it,
+    * so a listing that disagreed with the RDD's fails on a missing key
+    * instead of numbering wrongly. */
+  private def splitOffsets(rdd: HadoopRDD[LongWritable, Text]): Map[(String, Long), Long] = {
+    val sc = rdd.sparkContext
+    val conf = new JobConf(rdd.getConf)
+    val format = new TextInputFormat
+    format.configure(conf)
+    val splits = format.getSplits(conf, sc.defaultMinPartitions)
+      .map(_.asInstanceOf[FileSplit]).filter(_.getLength > 0).zipWithIndex
+    val multi = splits.groupBy(_._1.getPath.toUri.getPath).values
+      .filter(_.length > 1).map(_.sortBy(_._1.getStart).toSeq).toSeq
+    if (multi.isEmpty) return Map.empty
+    val counted = sc.runJob(
+      rdd.mapPartitionsWithInputSplit { (split, it) =>
+        val fs = split.asInstanceOf[FileSplit]
+        Iterator(((fs.getPath.toUri.getPath, fs.getStart), it.size.toLong))
+      },
+      (it: Iterator[((String, Long), Long)]) => it.next(),
+      multi.flatMap(_.init.map(_._2)).sorted).toMap
+    multi.flatMap { file =>
+      val keys = file.map { case (s, _) => (s.getPath.toUri.getPath, s.getStart) }
+      keys.tail.zip(keys.init.scanLeft(0L)((acc, k) => acc + counted(k)).tail)
+    }.toMap
   }
 
   /** Adapt a columnar table to the line-oriented map input contract. */
@@ -84,26 +108,28 @@ object MrPipeline {
       .as[MrLine]
   }
 
-  /** M1: the map phase. */
-  def mapped(input: Dataset[MrLine], job: MrJob): RDD[(String, String)] =
-    input.rdd.flatMap(l => job.fMap(l.file, l.lineNo, l.line))
-
-  /** M2+M3/M4: first-byte partitioning with a (key, value) sort — one
-    * sort-based shuffle, identical topology to the reference's
-    * mapper-sort + push-shuffle + reducer k-way merge. */
-  def shuffled(kvs: RDD[(String, String)], r: Int): RDD[(String, String)] = {
-    implicit val ord: Ordering[(String, String)] =
-      Ordering.Tuple2(Ordering.String, Ordering.String)
-    kvs.map(kv => (kv, null: Null))
-      .repartitionAndSortWithinPartitions(new FirstBytePartitioner(r))
-      .map(_._1)
-  }
-
-  /** Full pipeline → (reducerId, outputLine) rows, in reducer order. */
+  /** Full pipeline → (reducerId, outputLine) rows. `repartitionById` is a
+    * fixed-count shuffle, so adaptive execution keeps all R partitions and
+    * the task's partition id is the reducer id. Adaptive execution would
+    * drop the reduce stage of a shuffle that wrote no rows at all, so one
+    * (null, null) sentinel row rides to reducer 0 and is dropped there:
+    * fReduce runs on all R partitions even for an empty input. */
   def run(spark: SparkSession, input: Dataset[MrLine], job: MrJob): DataFrame = {
     import spark.implicits._
-    shuffled(mapped(input, job), job.R)
-      .mapPartitionsWithIndex { (rid, it) => job.fReduce(it).map((rid, _)) }
+    val r = job.R
+    input
+      .flatMap(l => job.fMap(l.file, l.lineNo, l.line)
+        .map { case (k, v) => (FirstBytePartitioner.of(k, r), k, v) })
+      .union(Seq((0, null: String, null: String)).toDS())
+      .toDF("rid", "key", "value")
+      .repartitionById(r, $"rid")
+      .sortWithinPartitions($"key", $"value")
+      .as[(Int, String, String)]
+      .mapPartitions { it =>
+        val rid = TaskContext.getPartitionId()
+        job.fReduce(it.collect { case (_, k, v) if k != null || v != null => (k, v) })
+          .map((rid, _))
+      }
       .toDF("rid", "line")
   }
 }

@@ -2,6 +2,8 @@ package graft.engine.jobs
 
 import java.util.Locale
 
+import scala.collection.mutable
+
 import graft.engine.MrJob
 
 /** Faithful re-expression of the reference's word_count plugin
@@ -19,13 +21,31 @@ import graft.engine.MrJob
 object WordCountJob extends MrJob {
   val R = 26
 
-  private val strip = "[^a-zA-Z0-9]+".r
-
-  override def fMap(file: String, lineNo: Long, line: String): Iterator[(String, String)] =
-    line.toLowerCase(Locale.ROOT)
-      .split("\\s+").iterator
-      .filter(_.nonEmpty)
-      .map(t => (strip.replaceAllIn(t, ""), "1"))
+  /** One pass over the lower-cased line: Java regex `\s` (space and
+    * U+0009-U+000D) separates tokens, and a token keeps only its
+    * `[a-zA-Z0-9]` chars — the same pairs as `split("\\s+")` followed by
+    * a per-token `[^a-zA-Z0-9]+` strip. Lower-casing comes first, so e.g.
+    * the Kelvin sign U+212A counts as `k`. */
+  override def fMap(file: String, lineNo: Long, line: String): Iterator[(String, String)] = {
+    val s = line.toLowerCase(Locale.ROOT)
+    val out = mutable.ArrayBuffer.empty[(String, String)]
+    val tok = new java.lang.StringBuilder
+    var open = false
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (c == ' ' || (c >= '\t' && c <= '\r')) {
+        if (open) { out += ((tok.toString, "1")); tok.setLength(0); open = false }
+      } else {
+        open = true
+        if ((c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') || (c >= '0' && c <= '9'))
+          tok.append(c)
+      }
+      i += 1
+    }
+    if (open) out += ((tok.toString, "1"))
+    out.iterator
+  }
 
   override def fReduce(partition: Iterator[(String, String)]): Iterator[String] =
     sumByKey(partition).map { case (k, v) => "%-12s :: %4d".format(k, v) }

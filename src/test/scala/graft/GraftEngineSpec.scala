@@ -22,12 +22,32 @@ class GraftEngineSpec extends SparkSpec {
       "banana       ::    2",
       "cherry       ::    1"))
 
-    // default file selection = all stored files
+    // default file selection = all stored TXT files
     assert(g.mapReduce(WordCountJob).count() == 3)
     // unknown file rejected (cn/mr_actions.go:69-85)
     intercept[IllegalArgumentException] {
       g.mapReduce(WordCountJob, Seq("nope.txt"))
     }
+  }
+
+  test("mapReduce selects input like JobRunner: TXT only, names de-duplicated") {
+    import spark.implicits._
+    val g = GraftEngine(spark, Files.createTempDirectory("graft_engine_sel").toString)
+    try {
+      val txt = Files.createTempFile("graft", ".txt")
+      Files.writeString(txt, "apple banana apple\n")
+      g.store(txt.toString, "a.txt")
+      val bin = Files.createTempFile("graft", ".bin")
+      Files.write(bin, Array[Byte](0, 1, 2, 3) ++ "binword\n".getBytes("UTF-8"))
+      g.store(bin.toString, "b.bin")
+      g.catalog.storeTable(Seq("tableword").toDF("w"), "t")
+      def words(files: Seq[String]) =
+        g.mapReduce(WordCountJob, files).collect().map(_.getString(1)).sorted.toSeq
+      val want = Seq("apple        ::    2", "banana       ::    1")
+      assert(words(Nil) == want)
+      assert(words(Seq("a.txt", "a.txt")) == words(Seq("a.txt")))
+      assert(words(Seq("a.txt", "b.bin", "t")) == want)
+    } finally g.catalog.close()
   }
 
   test("observed metrics ride the job: progress surface (M9) without extra actions") {

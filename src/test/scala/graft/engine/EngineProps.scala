@@ -114,6 +114,28 @@ object EngineProps extends Properties("engine") {
       WordCountJob.fMap("f", 0, line).size == ws.size
     }
 
+  // The regex definition fMap had before its char loop, kept here only
+  // as the reference the char loop must reproduce.
+  private val stripRef = "[^a-zA-Z0-9]+".r
+  private def wcFMapRef(line: String): List[(String, String)] =
+    line.toLowerCase(java.util.Locale.ROOT).split("\\s+").iterator
+      .filter(_.nonEmpty).map(t => (stripRef.replaceAllIn(t, ""), "1")).toList
+
+  // regex \s separators, chars Java treats as whitespace but \s does
+  // not (NBSP, U+001C, U+0085, U+2028), and chars whose lower case is
+  // ASCII or changes the length (İ → "i̇", Kelvin sign → k)
+  private val wcLineGen: Gen[String] = Gen.listOf(Gen.frequency(
+    4 -> Gen.alphaNumChar.map(_.toString),
+    2 -> Gen.oneOf(" ", "\t", "\n", "\u000b", "\f", "\r"),
+    2 -> Gen.oneOf("\u00a0", "\u001c", "\u0085", "\u2028"),
+    2 -> Gen.oneOf("\u0130", "\u212a", "ß", "É", "😀", "\ud83d"),
+    2 -> Gen.oneOf("--", "-", "'", ".", "x-1", "A+B"))).map(_.mkString)
+
+  property("wc fMap char loop == split + per-token regex strip") =
+    forAll(wcLineGen) { line =>
+      WordCountJob.fMap("f", 0, line).toList == wcFMapRef(line)
+    }
+
   // BPE over ARBITRARY unicode words and arbitrary learned merge
   // tables (round 13) — the fixture spec pins specific corpora; these
   // laws must hold for any input, including surrogate-pair emoji and

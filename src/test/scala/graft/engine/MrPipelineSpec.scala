@@ -5,6 +5,15 @@ import graft.engine.jobs.WordCountJob
 
 class MrPipelineSpec extends SparkSpec {
 
+  /** Echo rows grouped by reducer id, in arrival order. */
+  private def echoed(df: org.apache.spark.sql.DataFrame): Map[Int, Seq[(String, String)]] =
+    df.collect().toSeq.groupMap(_.getInt(0))(_.getString(1)).map { case (rid, ls) =>
+      rid -> ls.filter(_ != MrPipelineSpec.Start).map { l =>
+        val i = l.indexOf('\t')
+        l.substring(0, i) -> l.substring(i + 1)
+      }
+    }
+
   test("FirstBytePartitioner: range, case folding, Go semantics") {
     for (r <- Seq(1, 10, 26); k <- Seq("apple", "Zebra", "0day", "émile", "~", ""))
       assert(FirstBytePartitioner.of(k, r) >= 0 &&
@@ -34,27 +43,40 @@ class MrPipelineSpec extends SparkSpec {
   }
 
   test("shuffle: every key lands in its first-byte partition, sorted") {
-    import spark.implicits._
     val input = MrPipeline.lines(spark, Seq(resource("wordcount_fixture.txt")))
     val r = 7
-    val parts = MrPipeline.shuffled(MrPipeline.mapped(input, WordCountJob), r)
-      .mapPartitionsWithIndex { (pid, it) => Iterator((pid, it.toSeq)) }
-      .collect()
-    assert(parts.length == r)
+    val parts = echoed(MrPipeline.run(spark, input, MrPipelineSpec.WordEcho(r)))
+    assert(parts.keySet == (0 until r).toSet)
     for ((pid, kvs) <- parts) {
       kvs.foreach { case (k, _) =>
         assert(FirstBytePartitioner.of(k, r) == pid, s"key '$k' in partition $pid")
       }
-      assert(kvs == kvs.sorted, s"partition $pid not sorted")
+      assert(kvs == kvs.sorted(MrPipelineSpec.utf8Order), s"partition $pid not byte-sorted")
     }
   }
 
-  test("pipeline word count == naive single-threaded count") {
+  test("shuffle order: keys, then values, arrive in UTF-8 byte order; unpaired surrogates as '?'") {
     import spark.implicits._
+    // U+FF21 'Ａ' is EF BC A1 in UTF-8 and 0xFF21 in UTF-16; U+1F600 is
+    // F0 9F 98 80 and the surrogate pair D83D DE00. Byte order puts 'Ａ'
+    // first, Java's String.compareTo puts the emoji first.
+    assert("😀".compareTo("Ａ") < 0)
+    val df = Seq("😀\tx", "Ａ\tx", "k\t😀", "k\tＡ", "\ud83dz\tx").zipWithIndex
+      .map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
+    val input = MrPipeline.tableLines(df, "f", "id", "text")(spark)
+    val got = echoed(MrPipeline.run(spark, input, MrPipelineSpec.PairEcho))
+    assert(got == Map(0 -> Seq("?z" -> "x", "k" -> "Ａ", "k" -> "😀", "Ａ" -> "x", "😀" -> "x")))
+    // the surrogate key was partitioned by the same '?' byte it arrives as
+    assert(FirstBytePartitioner.of("\ud83dz", 26) == '?'.toInt % 26)
+  }
+
+  test("pipeline word count == naive single-threaded count") {
     val input = MrPipeline.lines(spark, Seq(resource("wordcount_fixture.txt")))
-    val got = MrPipeline.shuffled(MrPipeline.mapped(input, WordCountJob), WordCountJob.R)
-      .mapPartitions(WordCountJob.sumByKey(_))
-      .collect().toMap
+    val got = MrPipeline.run(spark, input, MrPipelineSpec.Sums)
+      .collect().map { row =>
+        val Array(k, v) = row.getString(1).split("\t", -1)
+        k -> v.toLong
+      }.toMap
 
     val naive = scala.io.Source.fromFile(resource("wordcount_fixture.txt"))
       .getLines()
@@ -66,12 +88,70 @@ class MrPipelineSpec extends SparkSpec {
         .getLines().flatMap(_.split("\\s+")).count(_.nonEmpty))
   }
 
+  test("lines(): files spanning several splits number their lines across split boundaries") {
+    import org.apache.hadoop.io.{LongWritable, Text}
+    import org.apache.hadoop.mapred.TextInputFormat
+    val dir = java.nio.file.Files.createTempDirectory("graft_splits")
+    def write(name: String, body: String): String = {
+      val f = dir.resolve(name)
+      java.nio.file.Files.write(f, body.getBytes("UTF-8"))
+      f.toUri.getPath
+    }
+    def text(prefix: String, n: Int) =
+      (0 until n).map(i => s"$prefix line $i " + "x" * (i % 7))
+    // with 256-byte blocks: 674 bytes → 3 splits, 383 → 2, 92 → 1, empty
+    // files → none. 6 splits for 6 paths, so a shortcut that skips the
+    // offsets when every path looks like one split numbers wrongly here.
+    val lf = text("lf", 46)
+    val crlf = text("crlf", 22)
+    val open = text("open", 6)
+    val files = Seq(
+      write("a_lf.txt", lf.map(_ + "\n").mkString) -> lf,
+      write("b_empty.txt", "") -> Nil,
+      write("c_crlf.txt", crlf.map(_ + "\r\n").mkString) -> crlf,
+      write("d_open.txt", open.mkString("\n")) -> open, // no trailing newline
+      write("e_empty.txt", "") -> Nil,
+      write("f_empty.txt", "") -> Nil)
+    val paths = files.map(_._1)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val saved = Seq("fs.local.block.size", "fs.file.impl.disable.cache")
+      .map(k => k -> Option(conf.get(k)))
+    val rows =
+      try {
+        conf.setLong("fs.local.block.size", 256L)
+        // a cached local filesystem keeps the block size it started with
+        conf.setBoolean("fs.file.impl.disable.cache", true)
+        val splits = spark.sparkContext.hadoopFile(paths.mkString(","),
+          classOf[TextInputFormat], classOf[LongWritable], classOf[Text]).getNumPartitions
+        assert(splits == paths.size, s"fixture must give one split per path, got $splits")
+        MrPipeline.lines(spark, paths).collect()
+      } finally saved.foreach {
+        case (k, Some(v)) => conf.set(k, v)
+        case (k, None)    => conf.unset(k)
+      }
+    val byFile = rows.groupBy(_.file)
+    for ((path, want) <- files) {
+      val got = byFile.getOrElse(path, Array.empty).sortBy(_.lineNo).toSeq
+      assert(got.map(_.lineNo) == want.indices.map(_.toLong), s"$path line numbers")
+      assert(got.map(_.line) == want, s"$path text")
+    }
+    assert(rows.length == files.map(_._2.size).sum)
+  }
+
   test("run(): reducer ids cover [0, R) and output is deterministic") {
     val input = MrPipeline.lines(spark, Seq(resource("wordcount_fixture.txt")))
     val df1 = MrPipeline.run(spark, input, WordCountJob).collect().toSeq
     val df2 = MrPipeline.run(spark, input, WordCountJob).collect().toSeq
     assert(df1.toSet == df2.toSet)
     assert(df1.map(_.getInt(0)).forall(r => r >= 0 && r < WordCountJob.R))
+    // the key bytes of this fixture cannot cover 300 reducers, and an
+    // empty input covers none: every reducer still runs fReduce once
+    assert(echoed(MrPipeline.run(spark, input, MrPipelineSpec.WordEcho(300))).keySet ==
+      (0 until 300).toSet)
+    val empty = MrPipeline.lines(spark,
+      Seq(java.nio.file.Files.createTempFile("graft_empty", ".txt").toString))
+    assert(echoed(MrPipeline.run(spark, empty, MrPipelineSpec.WordEcho(7))) ==
+      (0 until 7).map(_ -> Nil).toMap)
   }
 
   test("non-UTF-8 input bytes survive the full pipeline: stable partitions, multiset preserved") {
@@ -128,5 +208,47 @@ class MrPipelineSpec extends SparkSpec {
       val key = parseRow(r.getString(1))._1
       assert(r.getInt(0) == FirstBytePartitioner.of(key, RawJob.R))
     }
+  }
+}
+
+object MrPipelineSpec {
+  val Start = "<start>"
+
+  /** UTF-8 byte order over (key, value) pairs. */
+  val utf8Order: Ordering[(String, String)] = {
+    val bytes = Ordering.comparatorToOrdering(java.util.Arrays.compareUnsigned(
+      _: Array[Byte], _: Array[Byte]))
+    Ordering.by[(String, String), (Array[Byte], Array[Byte])] { case (k, v) =>
+      (k.getBytes("UTF-8"), v.getBytes("UTF-8"))
+    }(Ordering.Tuple2(bytes, bytes))
+  }
+
+  /** Reduce re-emits one start marker, then every pair in arrival order
+    * as "key\tvalue". */
+  trait Echo extends MrJob {
+    def fReduce(it: Iterator[(String, String)]): Iterator[String] =
+      Iterator(Start) ++ it.map { case (k, v) => s"$k\t$v" }
+  }
+
+  /** Word-count map, echo reduce. */
+  case class WordEcho(R: Int) extends Echo {
+    def fMap(file: String, lineNo: Long, line: String) = WordCountJob.fMap(file, lineNo, line)
+  }
+
+  /** Each "key\tvalue" line is one pair; one reducer. */
+  object PairEcho extends Echo {
+    val R = 1
+    def fMap(file: String, lineNo: Long, line: String) = {
+      val i = line.indexOf('\t')
+      Iterator(line.substring(0, i) -> line.substring(i + 1))
+    }
+  }
+
+  /** Word count whose reduce emits "key\tsum". */
+  object Sums extends MrJob {
+    val R = WordCountJob.R
+    def fMap(file: String, lineNo: Long, line: String) = WordCountJob.fMap(file, lineNo, line)
+    def fReduce(it: Iterator[(String, String)]) =
+      WordCountJob.sumByKey(it).map { case (k, v) => s"$k\t$v" }
   }
 }
