@@ -20,8 +20,7 @@ trait MrJob extends Serializable {
   def R: Int
 
   /** Map: one input line → 0..n string KV pairs
-    * (`sn/mr_actions.go:140`). A `(null, null)` pair is reserved for the
-    * pipeline's empty-shuffle sentinel and never reaches a reducer. */
+    * (`sn/mr_actions.go:140`). */
   def fMap(file: String, lineNo: Long, line: String): Iterator[(String, String)]
 
   /** Reduce: called ONCE per reducer, empty reducers included, with the

@@ -1,8 +1,8 @@
 package graft.engine
 
+import org.apache.hadoop.fs.Path
 import org.apache.hadoop.io.{LongWritable, Text}
-import org.apache.hadoop.mapred.{FileSplit, JobConf, TextInputFormat}
-import org.apache.spark.TaskContext
+import org.apache.hadoop.mapred.{FileSplit, TextInputFormat}
 import org.apache.spark.rdd.HadoopRDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -37,27 +37,27 @@ object FirstBytePartitioner {
   * (M3/M4: Spark's unsafe external sort does the spill + k-way merge the
   * reference hand-rolls at `sn/mr_actions.go:425-485`) →
   * `mapPartitions fReduce` (M5, whole sorted partition per call, tagged
-  * with the partition's rid).
+  * with the rid of the partition's sentinel row).
   *
-  * Everything is executor-side and spillable — no driver collects — so
-  * the same pipeline shape holds on a 1000-executor cluster.
+  * Everything is executor-side and spillable — the driver collects only
+  * one line count per split, and only when a file spans several splits —
+  * so the same pipeline shape holds on a 1000-executor cluster.
   */
 object MrPipeline {
 
   /** S1: scan text files line-by-line with (file, lineNo) tagging.
     * TextInputFormat splits a file at byte offsets; each split numbers
     * its own lines, starting at the line count of the same file's earlier
-    * splits. Those counts take one counting job over the earlier splits,
-    * and no job at all when every file is a single split. `file` is the
-    * full path, so same-named files in different directories stay
-    * distinct. */
+    * splits. Those counts take one counting job, and no job at all when
+    * every file is a single split. `file` is the full path, so same-named
+    * files in different directories stay distinct. */
   def lines(spark: SparkSession, paths: Seq[String]): Dataset[MrLine] = {
     import spark.implicits._
     val rdd = spark.sparkContext
       .hadoopFile(paths.mkString(","), classOf[TextInputFormat],
         classOf[LongWritable], classOf[Text])
       .asInstanceOf[HadoopRDD[LongWritable, Text]]
-    val offsets = splitOffsets(rdd)
+    val offsets = splitOffsets(rdd, paths)
     rdd.mapPartitionsWithInputSplit { (split, it) =>
       val fs = split.asInstanceOf[FileSplit]
       val file = fs.getPath.toUri.getPath
@@ -69,33 +69,30 @@ object MrPipeline {
     }.toDS()
   }
 
-  /** Line-number offset of every split that does not start its file,
-    * keyed by (path, split start): the summed line counts of the same
-    * file's earlier splits. Splits are listed the way `HadoopRDD` lists
-    * them (same input format, conf and minimum split count; empty splits
-    * dropped); each count comes back keyed by the split that produced it,
-    * so a listing that disagreed with the RDD's fails on a missing key
-    * instead of numbering wrongly. */
-  private def splitOffsets(rdd: HadoopRDD[LongWritable, Text]): Map[(String, Long), Long] = {
-    val sc = rdd.sparkContext
-    val conf = new JobConf(rdd.getConf)
-    val format = new TextInputFormat
-    format.configure(conf)
-    val splits = format.getSplits(conf, sc.defaultMinPartitions)
-      .map(_.asInstanceOf[FileSplit]).filter(_.getLength > 0).zipWithIndex
-    val multi = splits.groupBy(_._1.getPath.toUri.getPath).values
-      .filter(_.length > 1).map(_.sortBy(_._1.getStart).toSeq).toSeq
-    if (multi.isEmpty) return Map.empty
-    val counted = sc.runJob(
-      rdd.mapPartitionsWithInputSplit { (split, it) =>
-        val fs = split.asInstanceOf[FileSplit]
-        Iterator(((fs.getPath.toUri.getPath, fs.getStart), it.size.toLong))
-      },
-      (it: Iterator[((String, Long), Long)]) => it.next(),
-      multi.flatMap(_.init.map(_._2)).sorted).toMap
-    multi.flatMap { file =>
-      val keys = file.map { case (s, _) => (s.getPath.toUri.getPath, s.getStart) }
-      keys.tail.zip(keys.init.scanLeft(0L)((acc, k) => acc + counted(k)).tail)
+  /** Line-number offset of every split, keyed by (path, split start): the
+    * summed line counts of the same file's earlier splits. Every
+    * non-empty file is at least one split, so when there are no more
+    * splits than non-empty paths each file is exactly one split and every
+    * offset is 0: no job runs. Otherwise one job counts the lines of
+    * every split. (Counting every split every time is less code, but it
+    * reads all input twice: per `mr_corpus` op it took
+    * `queries.construct_jobs` 0 → 1, `io.input_mb` 8.06 → 16.13 and
+    * `scheduler.tasks` 35 → 51 in one traced run on a 4-core VM.) */
+  private def splitOffsets(rdd: HadoopRDD[LongWritable, Text],
+      paths: Seq[String]): Map[(String, Long), Long] = {
+    val conf = rdd.sparkContext.hadoopConfiguration
+    val nonEmpty = paths.count { p =>
+      val path = new Path(p)
+      path.getFileSystem(conf).getFileStatus(path).getLen > 0
+    }
+    if (rdd.getNumPartitions <= nonEmpty) return Map.empty
+    val counted = rdd.mapPartitionsWithInputSplit { (split, it) =>
+      val fs = split.asInstanceOf[FileSplit]
+      Iterator((fs.getPath.toUri.getPath, fs.getStart, it.size.toLong))
+    }.collect()
+    counted.groupBy(_._1).values.flatMap { file =>
+      val splits = file.sortBy(_._2)
+      splits.map(c => (c._1, c._2)).zip(splits.scanLeft(0L)(_ + _._3))
     }.toMap
   }
 
@@ -109,26 +106,33 @@ object MrPipeline {
   }
 
   /** Full pipeline → (reducerId, outputLine) rows. `repartitionById` is a
-    * fixed-count shuffle, so adaptive execution keeps all R partitions and
-    * the task's partition id is the reducer id. Adaptive execution would
-    * drop the reduce stage of a shuffle that wrote no rows at all, so one
-    * (null, null) sentinel row rides to reducer 0 and is dropped there:
-    * fReduce runs on all R partitions even for an empty input. */
+    * fixed-count shuffle, so adaptive execution keeps all R partitions
+    * apart. Every reducer gets one `(rid, null, null)` sentinel row:
+    * nulls sort first, so a partition's first row names its reducer and
+    * is dropped before `fReduce` (a job's own `(null, null)` pair ties
+    * with it, so the pairs `fReduce` sees are the same either way). The
+    * reducer id thus travels with the data, not with the task that runs
+    * it (a caller's `coalesce` or `union` leaves it intact), and no
+    * reducer is ever empty, so `fReduce` runs on all R partitions even
+    * for an empty input, whatever adaptive execution does with a shuffle
+    * that wrote no other rows. */
   def run(spark: SparkSession, input: Dataset[MrLine], job: MrJob): DataFrame = {
     import spark.implicits._
     val r = job.R
     input
       .flatMap(l => job.fMap(l.file, l.lineNo, l.line)
         .map { case (k, v) => (FirstBytePartitioner.of(k, r), k, v) })
-      .union(Seq((0, null: String, null: String)).toDS())
+      .union(spark.range(0, r, 1, 1).select($"id".cast("int"),
+        lit(null).cast("string"), lit(null).cast("string")).as[(Int, String, String)])
       .toDF("rid", "key", "value")
       .repartitionById(r, $"rid")
       .sortWithinPartitions($"key", $"value")
       .as[(Int, String, String)]
       .mapPartitions { it =>
-        val rid = TaskContext.getPartitionId()
-        job.fReduce(it.collect { case (_, k, v) if k != null || v != null => (k, v) })
-          .map((rid, _))
+        // Spark's row iterators advance in hasNext, so ask it before next
+        if (!it.hasNext) throw new IllegalStateException("reducer without its sentinel row")
+        val rid = it.next()._1
+        job.fReduce(it.map { case (_, k, v) => (k, v) }).map((rid, _))
       }
       .toDF("rid", "line")
   }

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Hot frames of a JDK Flight Recorder recording.
 
-    python3 tools/jfr_top.py <recording.jfr> [--top N] [--depth D]
+    python3 tools/jfr_top.py <recording.jfr> [--top N]
 
 Reads the recording's jdk.ExecutionSample events through
 `jfr print --json` (JDK 17's `jfr` has no `view` command) and prints:
@@ -15,11 +15,8 @@ Reads the recording's jdk.ExecutionSample events through
     threads are one group).
 
 Shares are of all execution samples in the recording. Stacks are read to
---depth frames (default 64, the recorder's own default limit), so
-inclusive shares of frames deeper than that are undercounts.
-
-The events are decoded one at a time from the `jfr` output stream, so a
-large recording does not need its whole JSON text in memory.
+64 frames, the recorder's own default limit (`jfr print` itself shows
+only 5), so inclusive shares of frames deeper than that are undercounts.
 """
 import argparse
 import collections
@@ -29,37 +26,12 @@ import subprocess
 import sys
 
 
-def events(path, depth):
-    """Yield the `values` of every jdk.ExecutionSample event in `path`."""
+def events(path):
+    """The `values` of every jdk.ExecutionSample event in `path`."""
     cmd = ["jfr", "print", "--json", "--events", "jdk.ExecutionSample",
-           "--stack-depth", str(depth), path]
-    proc = subprocess.Popen(cmd, stdout=subprocess.PIPE, text=True)
-    decoder = json.JSONDecoder()
-    buf = ""
-    started = False
-    for chunk in iter(lambda: proc.stdout.read(1 << 20), ""):
-        buf += chunk
-        if not started:
-            i = buf.find('"events"')
-            if i < 0:
-                continue
-            j = buf.find("[", i)
-            if j < 0:
-                continue
-            buf = buf[j + 1:]
-            started = True
-        while True:
-            buf = buf.lstrip(" \t\r\n,")
-            if not buf.startswith("{"):
-                break
-            try:
-                event, end = decoder.raw_decode(buf)
-            except json.JSONDecodeError:
-                break  # the event continues in the next chunk
-            buf = buf[end:]
-            yield event["values"]
-    if proc.wait() != 0:
-        sys.exit(f"jfr print failed with exit code {proc.returncode}")
+           "--stack-depth", "64", path]
+    out = subprocess.run(cmd, capture_output=True, text=True, check=True).stdout
+    return [event["values"] for event in json.loads(out)["recording"]["events"]]
 
 
 def frame_name(frame):
@@ -84,14 +56,13 @@ def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("recording")
     ap.add_argument("--top", type=int, default=20, help="rows per table (default 20)")
-    ap.add_argument("--depth", type=int, default=64, help="stack frames read per sample (default 64)")
     args = ap.parse_args()
 
     leaf = collections.Counter()
     inclusive = collections.Counter()
     groups = collections.Counter()
     total = 0
-    for values in events(args.recording, args.depth):
+    for values in events(args.recording):
         total += 1
         groups[thread_group(values)] += 1
         frames = [frame_name(f) for f in (values.get("stackTrace") or {}).get("frames", [])]
