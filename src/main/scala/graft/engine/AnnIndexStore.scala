@@ -469,9 +469,8 @@ object AnnIndexStore {
     * scell == cent_id (the build sets scell = vec_id when
     * vec_id < kk2, and every group member's scell is a super id
     * strictly below its own cent_id), so no kk2 scalar is needed —
-    * ONE derivation shared by the stored serve path, the fresh serve
-    * path, and the streaming serve (AnnIndexServe); review r13
-    * collapsed three copies of these fold strings. */
+    * ONE derivation shared by the stored serve path and the fresh
+    * serve path. */
   private[graft] def quantizerFrames(q: DataFrame)
       : (DataFrame, DataFrame) = {
     val s = q.sparkSession
@@ -507,8 +506,7 @@ object AnnIndexStore {
         ceil(sqrt($"kk".cast("double"))).cast("long").as("kk2"))
     // derive the codebook frame (cent_id, c, scell) inline — the same
     // shape save() persists — then share quantizerFrames' fold with
-    // the stored and streaming serve paths (review r13: this block
-    // previously re-implemented both folds)
+    // the stored serve path
     val supers1 = index.crossJoin(broadcast(kf))
       .filter($"vec_id" < $"kk2")
       .select($"vec_id".as("s_id"), $"v".as("c"))
@@ -743,12 +741,12 @@ object AnnIndexStore {
     * default, every cell holding >= `minFiles` live files — to one
     * fresh file each, and COMMIT via the snapshot+manifest bump. The
     * replaced files stay on disk, so any reader pinned to the previous
-    * snapshot (an in-flight batch job, a streaming serve's static
-    * side) keeps returning bit-equal results — call [[vacuum]] to
-    * reclaim them once no pinned reader remains (pinned by spec:
-    * serve-under-compact). Row content is untouched, so search is
-    * bit-equal before/after, and a pre-commit footer count that
-    * disagrees with the manifest ABORTS with the old snapshot intact —
+    * snapshot (an in-flight job) keeps returning bit-equal results —
+    * call [[vacuum]] to reclaim them once no pinned reader remains
+    * (pinned by spec: serve-under-compact). Row content is untouched,
+    * so search is bit-equal before/after, and a pre-commit footer
+    * count that disagrees with the manifest ABORTS with the old
+    * snapshot intact —
     * never a half-compacted index (ADVICE r14: the old in-place swap
     * loop could lose a cell on a crash between delete and rename).
     * Cost shape: only fragmented partitions are read and rewritten,

@@ -150,7 +150,7 @@ object Layout {
 
   /** Small-file compaction: rewrite a parquet directory into
     * ceil(totalBytes / targetBytes) files. Long-running ingest (striped
-    * writers, streaming micro-batches) accretes thousands of KB-sized
+    * writers, frequent small appends) accretes thousands of KB-sized
     * files per partition; at 100 TB the resulting scan pays a task per
     * file and the NameNode/listing pays per entry — periodic compaction
     * to 128-512 MB files is routine table maintenance. The rewrite is one

@@ -20,10 +20,25 @@ object FirstBytePartitioner {
     val b =
       if (key == null || key.isEmpty) '\n'.toInt // Sprintln newline artifact
       else {
-        val first = key.getBytes("UTF-8")(0) & 0xff
+        val first = firstByte(key)
         if (first >= 'A' && first <= 'Z') first + 32 else first
       }
     b % r
+  }
+
+  /** `key.getBytes(UTF_8)(0) & 0xff` of a non-empty key, read off its
+    * first one or two chars without encoding the rest. An unpaired
+    * surrogate encodes as '?', as `getBytes` replaces it. */
+  private[engine] def firstByte(key: String): Int = {
+    val c = key.charAt(0)
+    if (c < 0x80) c
+    else if (c < 0x800) 0xc0 | (c >> 6)
+    else if (Character.isHighSurrogate(c)) {
+      if (key.length > 1 && Character.isLowSurrogate(key.charAt(1)))
+        0xf0 | (Character.toCodePoint(c, key.charAt(1)) >> 18)
+      else '?'
+    } else if (Character.isLowSurrogate(c)) '?'
+    else 0xe0 | (c >> 12)
   }
 }
 

@@ -48,204 +48,4 @@ object TypedAggregators {
     override def outputEncoder: Encoder[Seq[(String, Long)]] =
       Encoders.kryo[Seq[(String, Long)]]
   }
-
-  /** One ANN candidate under the house ranking key (negated rounded
-    * cosine, ties to the lowest vec_id). */
-  case class SimHit(nsim: Double, vec_id: Long)
-
-  /** EXACT bounded-state top-k by (nsim asc, vec_id asc): unlike the
-    * count-keyed [[TopK]] (whose per-buffer candidate cap makes it an
-    * approximation), min-k is closed under merge — the k smallest of a
-    * union are among the k smallest of each side — so a buffer pruned
-    * to k entries is exact at any scale. This is the streaming-state
-    * form of the serve ranking: a windowed-agg state store holds k
-    * structs per (window, query), never the full candidate list
-    * (review r13 — `slice(array_sort(collect_list(...)))` buffered
-    * ~2·√n candidates per query at the 100 TB design point).
-    * The output encoder comes from the caller's session implicits so
-    * the result is a real array<struct> column (posexplode-able), not
-    * a kryo blob. */
-  case class TopKSim(k: Int)(implicit outEnc: Encoder[Seq[SimHit]])
-      extends Aggregator[SimHit, Seq[SimHit], Seq[SimHit]] {
-    // (nsim asc, vec_id asc) — smaller is better
-    private def beats(a: SimHit, b: SimHit): Boolean =
-      a.nsim < b.nsim || (a.nsim == b.nsim && a.vec_id < b.vec_id)
-    private def prune(s: Seq[SimHit]): Seq[SimHit] =
-      s.sortBy(h => (h.nsim, h.vec_id)).take(k)
-    override def zero: Seq[SimHit] = Seq.empty
-    // reduce is the per-candidate hot path (~nprobe·√n calls per
-    // query): the buffer stays UNSORTED and reduce is O(k) with no
-    // sort or full reallocation — append until full, then replace the
-    // current worst only when the newcomer beats it (second review
-    // pass: an unconditional sort-and-take here re-sorted the buffer
-    // per row). Only merge (once per partial) and finish sort.
-    override def reduce(acc: Seq[SimHit], v: SimHit): Seq[SimHit] =
-      if (acc.length < k) acc :+ v
-      else {
-        var wi = 0
-        var i = 1
-        while (i < acc.length) {
-          if (beats(acc(wi), acc(i))) wi = i // track the WORST entry
-          i += 1
-        }
-        if (beats(v, acc(wi))) acc.updated(wi, v) else acc
-      }
-    override def merge(a: Seq[SimHit], b: Seq[SimHit]): Seq[SimHit] =
-      prune(a ++ b)
-    override def finish(acc: Seq[SimHit]): Seq[SimHit] =
-      acc.sortBy(h => (h.nsim, h.vec_id))
-    override def bufferEncoder: Encoder[Seq[SimHit]] =
-      Encoders.kryo[Seq[SimHit]]
-    override def outputEncoder: Encoder[Seq[SimHit]] = outEnc
-  }
-
-  case class QiBuf(hb: Map[Long, Long], tp: Map[String, Long], n: Long)
-  case class QiProf(hband: Long, mtype: String, vband: Long)
-
-  /** Per-user quasi-identifier profile as ONE aggregation — the
-    * windowed twin of the batch qiProfile's two-level modal folds
-    * (queries/EventsLog.scala), collapsed into a single pass so the
-    * streaming k-anonymity monitor needs exactly two chained stateful
-    * operators (per-user fold, then the class count). Buffer state is
-    * BOUNDED by the generalization alphabets, not the user's volume:
-    * 4 possible 6-hour bands × the event-type alphabet. Modal picks
-    * pin ties exactly like the batch fold (count desc, value asc);
-    * the volume band is the same integer CASE ladder. */
-  object QiProfile
-      extends Aggregator[(Long, String), QiBuf, QiProf] {
-    override def zero: QiBuf = QiBuf(Map.empty, Map.empty, 0L)
-    override def reduce(b: QiBuf, v: (Long, String)): QiBuf =
-      QiBuf(b.hb + (v._1 -> (b.hb.getOrElse(v._1, 0L) + 1L)),
-        b.tp + (v._2 -> (b.tp.getOrElse(v._2, 0L) + 1L)), b.n + 1L)
-    override def merge(a: QiBuf, b: QiBuf): QiBuf =
-      QiBuf(b.hb.foldLeft(a.hb) { case (m, (k, c)) =>
-          m + (k -> (m.getOrElse(k, 0L) + c)) },
-        b.tp.foldLeft(a.tp) { case (m, (k, c)) =>
-          m + (k -> (m.getOrElse(k, 0L) + c)) },
-        a.n + b.n)
-    override def finish(b: QiBuf): QiProf = {
-      val hband = b.hb.toSeq.minBy { case (h, c) => (-c, h) }._1
-      val mtype = b.tp.toSeq.minBy { case (t, c) => (-c, t) }._1
-      val vband =
-        if (b.n < 4) 0L else if (b.n < 16) 1L
-        else if (b.n < 64) 2L else if (b.n < 256) 3L else 4L
-      QiProf(hband, mtype, vband)
-    }
-    override def bufferEncoder: Encoder[QiBuf] = Encoders.kryo[QiBuf]
-    override def outputEncoder: Encoder[QiProf] = Encoders.product[QiProf]
-  }
-
-  case class QuantOut(n_events: Long, p50_est: Double, p99_est: Double,
-      within_bound: Boolean)
-
-  /** Windowed q-digest quantile fold for the streaming monitor: the
-    * buffer is the RAW leaf-count map over the bounded e2 lattice —
-    * deliberately uncompressed, because reduce/merge order is
-    * nondeterministic under streaming retries and an order-dependent
-    * intermediate compression would break both exactly-once replay
-    * equality and batch parity; with the 2-dp bounded value domain the
-    * buffer is domain-bounded (the same justification as the batch
-    * sketch row's count agg), and the CANONICAL compression runs once
-    * at finish — a pure function of the window's multiset. finish
-    * also self-audits: the buffer holds exact leaf counts, so the
-    * q-digest guarantee (inclusive rank reaches the target, exclusive
-    * rank overshoots by <= L·t) is VERIFIED per window, not assumed.
-    * For a genuinely unbounded domain, swap in reduce-time compression
-    * and accept that the digest is only bound-equal, not bit-equal,
-    * across replays. */
-  case class QDigestWindow(k: Int)
-      extends Aggregator[Long, Map[Long, Long], QuantOut] {
-    override def zero: Map[Long, Long] = Map.empty
-    override def reduce(b: Map[Long, Long], e2: Long): Map[Long, Long] = {
-      // enforce the [0, U) domain contract HERE, not only at the one
-      // call site that happens to pre-clamp (ADVICE r15): an
-      // out-of-domain value would mint a node id outside the tree that
-      // compress never folds and quantile silently mis-ranks — the
-      // same require QDigest.fromValues applies at build time
-      require(e2 >= 0L && e2 < QDigest.U.toLong,
-        s"QDigestWindow value $e2 outside the digest domain " +
-          s"[0, ${QDigest.U}) — clamp before folding")
-      val id = QDigest.leafId(e2.toInt)
-      b + (id -> (b.getOrElse(id, 0L) + 1L))
-    }
-    override def merge(a: Map[Long, Long],
-        b: Map[Long, Long]): Map[Long, Long] =
-      b.foldLeft(a) { case (m, (id, c)) =>
-        m + (id -> (m.getOrElse(id, 0L) + c)) }
-    override def finish(b: Map[Long, Long]): QuantOut = {
-      val n = b.values.sum
-      if (n == 0L) return QuantOut(0L, 0.0, 0.0, within_bound = true)
-      val dig = QDigest.compress(b, n, k)
-      val t = math.max(1L, n / k)
-      var ok = true
-      val est = Seq(50L, 99L).map { q =>
-        val target = (n * q + 99L) / 100L
-        val e = QDigest.quantile(dig, target)
-        // exact ranks straight off the leaf buffer
-        var le = 0L; var lt = 0L
-        b.foreach { case (id, c) =>
-          val v = QDigest.loOf(id)
-          if (v <= e) le += c
-          if (v < e) lt += c
-        }
-        ok &&= le >= target && lt <= target + 16L * t
-        e / 100.0 // e2 fixed-point back to the value scale
-      }
-      QuantOut(n, est.head, est(1), ok)
-    }
-    override def bufferEncoder: Encoder[Map[Long, Long]] =
-      Encoders.kryo[Map[Long, Long]]
-    override def outputEncoder: Encoder[QuantOut] =
-      Encoders.product[QuantOut]
-  }
-
-  case class TCloseOut(n_users: Long, l_distinct: Long, emd_e6: Long)
-
-  /** Per-class t-closeness fold for the streaming privacy monitor:
-    * buffer = the class's sensitive-band histogram (one entry per
-    * band seen — bounded by the BAND ALPHABET, never the class
-    * population), finish = the exact EMD of the class distribution
-    * against the batch-trained GLOBAL distribution captured in the
-    * constructor (a broadcast-constant closure, the
-    * model-in-batch/serve-in-stream pattern). The EMD arithmetic is
-    * the batch log_t_closeness discipline verbatim: cumulative over
-    * the ordered global band domain, each per-band term e6-quantized
-    * BEFORE the sum, so the streaming verdicts can never drift from
-    * the batch audit's. `globBands` is the sorted global band domain
-    * with counts summing to `nn`; a class band ABSENT from it (the
-    * trained dimension drifted past the global snapshot) extends the
-    * walk with global count 0, so its mass still enters the class CDF
-    * and the class reads as maximally skewed there — walking only the
-    * global domain would silently DEFLATE every fraction and could
-    * pass a fully-drifted class as close (review r14). */
-  case class TClose(globBands: Seq[(Long, Long)], nn: Long)
-      extends Aggregator[Long, Map[Long, Long], TCloseOut] {
-    override def zero: Map[Long, Long] = Map.empty
-    override def reduce(b: Map[Long, Long], sband: Long): Map[Long, Long] =
-      b + (sband -> (b.getOrElse(sband, 0L) + 1L))
-    override def merge(a: Map[Long, Long],
-        b: Map[Long, Long]): Map[Long, Long] =
-      b.foldLeft(a) { case (m, (k, c)) =>
-        m + (k -> (m.getOrElse(k, 0L) + c)) }
-    override def finish(b: Map[Long, Long]): TCloseOut = {
-      val n = b.values.sum
-      val g = globBands.toMap
-      val dom =
-        if (b.keysIterator.forall(g.contains)) globBands.iterator.map(_._1)
-        else (globBands.iterator.map(_._1) ++ b.keysIterator)
-          .toSeq.distinct.sorted.iterator
-      var cc = 0L; var gc = 0L; var emd = 0L
-      dom.foreach { band =>
-        cc += b.getOrElse(band, 0L)
-        gc += g.getOrElse(band, 0L)
-        emd += math.round(1e6 * math.abs(
-          cc.toDouble / n - gc.toDouble / nn))
-      }
-      TCloseOut(n, b.size.toLong, emd)
-    }
-    override def bufferEncoder: Encoder[Map[Long, Long]] =
-      Encoders.kryo[Map[Long, Long]]
-    override def outputEncoder: Encoder[TCloseOut] =
-      Encoders.product[TCloseOut]
-  }
 }

@@ -23,10 +23,9 @@ object EventsLog {
     get_json_object(c, "$.k").cast("long")
 
   /** Dense per-(event_type, hour) grid with hour-of-week keys — the
-    * shared build behind log_anomaly_seasonal's baseline stats and
-    * EventStream.seasonalBaseline (one definition so the batch query
-    * and the streaming monitor's model can never drift): absent hours
-    * count as zero rows, which the seasonal mean/variance REQUIRE.
+    * shared build behind log_anomaly_seasonal's baseline stats and the
+    * events time-series family: absent hours count as zero rows, which
+    * the seasonal mean/variance REQUIRE.
     * @param ev raw events (batch) with `event_type` and `ts`.
     * @return (event_type, h, n, dow, hod). */
   private[graft] def denseHourGrid(ev0: DataFrame): DataFrame = {
@@ -54,9 +53,7 @@ object EventsLog {
     * (types × hours rows, ~3.6k at bench scale) and therefore cheap
     * to pin. localCheckpoint + FrameMemo is the lshPairsShared
     * discipline; the raw one-pass build stays benchable as the
-    * `log_dense_grid_raw` RawBuilds row, and the streaming model
-    * builders keep taking an explicit events frame (a live monitor
-    * trains on ITS history, not on the fixture dir). */
+    * `log_dense_grid_raw` RawBuilds row. */
   private val gridCache = new graft.engine.FrameMemo
   private[graft] def denseHourGridShared(s: SparkSession, d: String): DataFrame =
     gridCache.get(s, d)(denseHourGrid(t(s, d, "events")).localCheckpoint())
@@ -64,41 +61,6 @@ object EventsLog {
   /** Raw (non-memoized) grid build for RawBuilds/ScaleStress. */
   private[graft] def denseHourGridRaw(s: SparkSession, d: String): DataFrame =
     denseHourGrid(t(s, d, "events"))
-
-  /** Truncated-EWMA weights, e7-scaled: 0.3·0.7^j·10⁷ = 3·7^j·10^(6−j)
-    * for lags 0..6 and 7⁷ for lag 7 — exact integers closing to 10⁷.
-    * ONE definition shared by the declared log_ewma_chart and the
-    * streaming EventStream.ewmaChart monitor (the twins cannot weight
-    * differently). */
-  private[graft] val ewmaWeightsE7: Seq[Long] = Seq(3000000L, 2100000L,
-    1470000L, 1029000L, 720300L, 504210L, 352947L, 823543L)
-
-  /** The per-type exact-integer (nh, Σx, Σx²) σ stats over a dense
-    * grid — the ONE aggregation consumed by both the declared
-    * log_ewma_chart and [[ewmaModel]] (review finding r11: the two
-    * previously duplicated the expression and agreed by coincidence;
-    * an edit to either would have split the twins silently). */
-  private[graft] def ewmaStats(g: DataFrame): DataFrame = {
-    import g.sparkSession.implicits._
-    g.groupBy($"event_type").agg(
-      count(lit(1)).as("nh"), sum($"n").as("stot"),
-      sum($"n" * $"n").as("sxx"))
-  }
-
-  /** σ model + grid bounds for the EWMA chart — per type the exact
-    * integer (nh, Σx, Σx²) over the DENSE hourly grid plus the global
-    * [h0,h1] hour bounds (in µs), one flat row per type so it
-    * broadcasts into a live stream. The train-in-batch half of
-    * EventStream.ewmaChart; the declared log_ewma_chart consumes the
-    * same [[ewmaStats]] so the batch chart and the monitor share one
-    * σ. */
-  private[graft] def ewmaModel(ev0: DataFrame): DataFrame = {
-    import ev0.sparkSession.implicits._
-    val g = denseHourGrid(ev0).select($"event_type", $"h", $"n")
-    val bounds = g.agg(min(unix_micros($"h")).as("h0_us"),
-      max(unix_micros($"h")).as("h1_us"))
-    ewmaStats(g).crossJoin(broadcast(bounds))
-  }
 
   /** Phase table for [[queries "log_spectrum"]]: (period, k, cos_e6,
     * sin_e6) for every phase k of every candidate period — computed
@@ -139,29 +101,6 @@ object EventsLog {
       .agg(array_sort(collect_list(struct($"h", $"n"))).as("a"))
   }
 
-  /** The 10-bin value-bin rule shared by the declared log_psi_drift
-    * and the streaming EventStream.psiModel/psiDrift twins (one
-    * definition — the monitors can never bin differently from the
-    * batch audit). Expects columns `value`, `v0`, `v1`. Clamped on
-    * BOTH ends: the batch audit computes bounds globally so only the
-    * top clamp can fire there, but the streaming monitor serves LIVE
-    * values against a model trained on history — a value below the
-    * training min (exactly the downward drift the monitor exists to
-    * catch) must land in bin 0, not in a negative bin that no
-    * conditional sum counts (review finding, fourth session). */
-  private[graft] def valueBin: org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{col, floor, greatest, least, lit, when}
-    when(col("v1") === col("v0"), 0L).otherwise(
-      greatest(lit(0L), least(lit(9L),
-        floor(((col("value") - col("v0")) * 10.0)
-          / (col("v1") - col("v0"))))))
-  }
-
-  /** One e10-quantized PSI term — `(p2 − p1)·ln(p2/p1)` as an exact
-    * BIGINT, shared by the batch fold and the streaming monitor. */
-  private[graft] def psiTermE10(p2: String, p1: String): String =
-    s"cast(round((($p2 - $p1) * ln($p2 / $p1)) * 1e10) as bigint)"
-
   /** Deterministic 50/50 experiment assignment — first md5 hex digit
     * of the user id (one definition, shared by log_ab_metrics and
     * log_ab_cuped so the two A/B readouts can never disagree on who
@@ -172,20 +111,6 @@ object EventsLog {
         1, 1).isin("0", "1", "2", "3", "4", "5", "6", "7"), "A")
       .otherwise("B")
   }
-
-  /** Shared hour-window / 1000-bin expressions for the quantile
-    * family — ONE definition consumed by the declared
-    * log_hourly_quantiles and by EventStream.quantileWindows (review
-    * finding r12: the two carried near-identical strings differing
-    * only in the final cast, a drift surface; the cdcCutSql
-    * discipline applied here). Expects `ts`/`value` event columns and
-    * `v0`/`v1` model-bound columns in scope; out-of-range live values
-    * clamp into the edge bins. */
-  private[graft] val hourStartSql: String =
-    "unix_micros(ts) div 3600000000 * 3600000000"
-  private[graft] def quantileBinSql(castTo: String): String =
-    "cast(greatest(0L, least(999L, floor(case when v1 = v0 then 0.0" +
-      " else (value - v0) * 1000.0 / (v1 - v0) end))) as " + castTo + ")"
 
   /** Per-user exact decile over the bounded score domain — the shared
     * ranking core of log_decile_lift and log_qini_uplift (ONE
@@ -241,15 +166,6 @@ object EventsLog {
       |  SELECT user_id, treat, conv,
       |    ((rn - 1) * 10) // n_total + 1 AS decile
       |  FROM rk)""".stripMargin
-
-  /** Per-(event_type, dow, hod) exact integer count/Σx/Σx² over the
-    * dense grid — the hour-of-week baseline model. */
-  private[graft] def seasonalStats(ev: DataFrame): DataFrame = {
-    import ev.sparkSession.implicits._
-    denseHourGrid(ev).groupBy($"event_type", $"dow", $"hod")
-      .agg(count(lit(1)).as("c"), sum($"n").as("sx"),
-        sum($"n" * $"n").as("sxx"))
-  }
 
   /** approx_percentile (Greenwald–Khanna, O(1/accuracy) state per
     * group) raw estimates — engine-level only (GK summaries are
@@ -563,26 +479,23 @@ object EventsLog {
         .orderBy($"decile")
     }),
 
-    // [shared expressions for this query live in hourStartSql /
-    // quantileBinSql below the map — one definition with the
-    // streaming monitor]
     // Hourly p50/p95/p99 value quantiles over a 1000-bin histogram of
     // the GLOBAL value range — the ops-dashboard staple in the
     // engine's bounded-domain discipline: the only per-event work is
     // one bin assignment against broadcast bounds, the shuffle state
     // is (hour × occupied-bin) counts (shard histograms merge by
-    // cell-sum — this IS the streaming monitor's state), and the cut
-    // is the exact integer rank rule `hcum ≥ (n·q + 99) div 100`.
-    // The streaming twin (EventStream.quantileWindows) replays the
-    // identical binning/cut/midpoint arithmetic — three-way parity
-    // (declared ≡ typed batch ≡ stream) is pinned in StreamingSpec.
+    // cell-sum), and the cut is the exact integer rank rule
+    // `hcum ≥ (n·q + 99) div 100`.
     "log_hourly_quantiles" -> ((s, d) => {
       import s.implicits._
       val ev = t(s, d, "events").select($"ts", $"value")
       val bounds = ev.agg(min($"value").as("v0"), max($"value").as("v1"))
       val hist = ev.crossJoin(broadcast(bounds))
-        .select(expr(hourStartSql).as("w_start"),
-          expr(quantileBinSql("bigint")).as("bin"),
+        .select(expr("unix_micros(ts) div 3600000000 * 3600000000")
+            .as("w_start"),
+          expr("cast(greatest(0L, least(999L, floor(case when v1 = v0" +
+            " then 0.0 else (value - v0) * 1000.0 / (v1 - v0) end)))" +
+            " as bigint)").as("bin"),
           $"v0", $"v1")
         .groupBy($"w_start", $"bin", $"v0", $"v1")
         .agg(count(lit(1)).as("hc"))
@@ -1897,6 +1810,11 @@ object EventsLog {
         " / (n_early + 10))"
       val p2 = "(cast(coalesce(m[b].c2, 0L) + 1 as double)" +
         " / (n_late + 10))"
+      // the 10-bin rule, clamped on BOTH ends: the bounds are global,
+      // so only the top clamp fires on the declared input
+      val valueBin = when($"v1" === $"v0", 0L).otherwise(
+        greatest(lit(0L), least(lit(9L),
+          floor((($"value" - $"v0") * 10.0) / ($"v1" - $"v0")))))
       ev.crossJoin(broadcast(bounds))
         .select($"event_type",
           when($"us" * 2 < $"us0" + $"us1", 0L).otherwise(1L)
@@ -1911,7 +1829,8 @@ object EventsLog {
             struct($"bin", struct($"c1", $"c2")))).as("m"))
         .select($"event_type", $"n_early", $"n_late",
           expr(s"""aggregate(sequence(0L, 9L), 0L, (acc, b) ->
-            acc + ${psiTermE10(p2, p1)})""").as("psi_e10"))
+            acc + cast(round((($p2 - $p1) * ln($p2 / $p1)) * 1e10)
+              as bigint))""").as("psi_e10"))
         .select($"event_type", $"n_early", $"n_late",
           round($"psi_e10".cast("double") / 1e10, 4).as("psi"),
           ($"psi_e10" > 1000000000L).as("drifted"))
@@ -3417,10 +3336,13 @@ object EventsLog {
       val wrn = Window.partitionBy($"event_type").orderBy($"h")
       val g = denseHourGridShared(s, d)
         .select($"event_type", $"h", $"n")
-      // the shared σ stats + e7 weight ladder — ONE definition each
-      // with the streaming monitor (EventStream.ewmaChart)
-      val st = ewmaStats(g)
-      val wE7 = ewmaWeightsE7
+      // per-type exact-integer (nh, Σx, Σx²) σ stats
+      val st = g.groupBy($"event_type").agg(
+        count(lit(1)).as("nh"), sum($"n").as("stot"),
+        sum($"n" * $"n").as("sxx"))
+      // 0.3·0.7^j·10⁷ = 3·7^j·10^(6−j) for lags 0..6 and 7⁷ for lag 7
+      val wE7 = Seq(3000000L, 2100000L, 1470000L, 1029000L, 720300L,
+        504210L, 352947L, 823543L)
       val lagCols = (0 to 7).map(j =>
         (if (j == 0) $"n" else lag($"n", j).over(wrn)).as(s"x$j"))
       val ewmaE7 = wE7.zipWithIndex

@@ -19,28 +19,6 @@ object PipelineOps {
   private[graft] def toksCol: Column =
     expr("filter(split(lower(text), '\\\\s+'), x -> x != '')")
 
-  /** Bloom geometry shared by the declared doc_bloom_decontaminate and
-    * the streaming DocStream.bloomGuard — ONE definition of the bit
-    * count and the 4 md5-window probe positions, so the online guard
-    * can never probe differently from the batch audit. */
-  private[graft] val BloomM = 258048
-
-  /** SQL for probe r's bit position of gram string expr `g`. */
-  private[graft] def bloomPosSql(g: String, r: Int): String =
-    s"(cast(conv(substring(md5(cast($g as binary)), ${5 * r + 1}, 5)," +
-      s" 16, 10) as bigint) % $BloomM)"
-
-  /** SQL boolean: all 4 probe bits of gram `g` are set in `bm`, a
-    * MAP<int, bigint> of 63-bit words (word_j -> bits). An absent word
-    * reads as 0 (no bits set). */
-  private[graft] def bloomHitSql(g: String, bm: String): String =
-    (0 until 4).map { r =>
-      val p = bloomPosSql(g, r)
-      s"((coalesce(element_at($bm, cast($p div 63 as int))," +
-        s" cast(0 as bigint)) & shiftleft(cast(1 as bigint), $p % 63))" +
-        " != 0)"
-    }.mkString("(", " AND ", ")")
-
   private[graft] val toksSql =
     """list_filter(regexp_split_to_array(lower(text), '\s+'),
       |                     x -> x <> '')""".stripMargin
@@ -87,9 +65,7 @@ object PipelineOps {
 
   /** SQL boolean: 1-based char position `i` of `text` ends an 8-char
     * window whose md5-integer (8 hex digits) ≡ 0 (mod 64) — THE CDC
-    * cut rule, stated once for the batch chunk ops AND the streaming
-    * chunk-geometry monitor (DocStream.cdcMonitor) so the online and
-    * offline chunkers can never cut differently. */
+    * cut rule of the SQL chunk contract ([[cdcChunksSqlPath]]). */
   private[graft] def cdcCutSql(i: String): String =
     s"cast(conv(substring(md5(cast(substring(text, cast($i - 7 as int)," +
       s" 8) as binary)), 1, 8), 16, 10) as bigint) % 64 = 0"

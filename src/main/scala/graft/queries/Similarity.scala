@@ -183,6 +183,47 @@ object Similarity {
     f.getAbsolutePath
   }
 
+  /** Takedown audit of sim_index_forget_audit: forget `victims`
+    * ((vec_id, vector) pairs) from the index at `dir` and report per
+    * victim whether the index held it before and after, with the
+    * manifest counts. Presence before is MEASURED, not assumed: each
+    * victim's vector probes its own cell (the build assignment fold,
+    * nprobe = 1), and the pre-forget snapshot is read in those cells
+    * only and collected (≤ |victims| rows) before forget commits — a
+    * lazy frame would re-read the rewritten files and vacuously agree.
+    * A vector the index never held thus reports before_present = 0.
+    * No victims: the schema-preserving empty result, `dir` unread. */
+  private[graft] def forgetAudit(s: SparkSession, dir: String,
+      victims: Seq[(Long, Seq[Double])]): DataFrame = {
+    import s.implicits._
+    import graft.engine.AnnIndexStore
+    if (victims.isEmpty)
+      return Seq.empty[(Long, Long, Long, Long, Long, Boolean)]
+        .toDF("vec_id", "before_present", "after_present",
+          "n_before", "n_after", "codebook_stale")
+    val ids = victims.map(_._1)
+    val m0 = AnnIndexStore.manifest(s, dir)
+    val (supers, groups) =
+      AnnIndexStore.quantizerFrames(AnnIndexStore.quantizer(s, dir))
+    val cells = AnnIndexStore.probeCells(s, victims.toDF("q_id", "q"),
+      supers, groups, 1).select($"cell").as[Long].collect().distinct
+    val held = AnnIndexStore.load(s, dir)
+      .filter($"cell".isin(cells: _*) && $"vec_id".isin(ids: _*))
+      .select($"vec_id").as[Long].collect().toSet
+    val pre = ids.map(v => (v, if (held(v)) 1L else 0L))
+      .toDF("vec_id", "before_present")
+    val m1 = AnnIndexStore.forget(s, dir, ids)
+    val post = AnnIndexStore.load(s, dir)
+      .filter($"vec_id".isin(ids: _*))
+      .select($"vec_id", lit(1L).as("after_present"))
+    pre.join(post, Seq("vec_id"), "left")
+      .na.fill(0L, Seq("after_present"))
+      .select($"vec_id", $"before_present", $"after_present",
+        lit(m0.n_vectors).as("n_before"), lit(m1.n_vectors).as("n_after"),
+        lit(m1.codebook_stale).as("codebook_stale"))
+      .orderBy($"vec_id")
+  }
+
   /** Embeddings-table shape metadata, computed ONCE per (session, dir)
     * and reused by every lifecycle row's degenerate-input gates (r17):
     * total row count plus the vec_id % 3 residue counts. The r16 rows
@@ -190,20 +231,35 @@ object Similarity {
     * immutable facts about the dataset (Tables.t pins dir immutability,
     * the same contract its file-listing cache rides); at sf0.1 those
     * probe jobs are pure scheduler overhead on every rep. One bounded
-    * 4-long agg replaces them all. */
-  private val embShapeCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (Long, Long, Long, Long)]()
+    * 4-long agg replaces them all. The memo follows FrameMemo's
+    * discipline: at most [[EmbShapeMax]] entries, eldest evicted, and
+    * the agg runs outside the lock (a racing first call may run it
+    * twice; the first put wins). */
+  private[graft] val EmbShapeMax = 8
+  private[graft] val embShapeCache =
+    new java.util.LinkedHashMap[(SparkSession, String), (Long, Long, Long, Long)](
+      16, 0.75f, false) {
+      override def removeEldestEntry(e: java.util.Map.Entry[
+          (SparkSession, String), (Long, Long, Long, Long)]): Boolean =
+        size() > EmbShapeMax
+    }
   private[graft] def embShape(s: SparkSession,
-      d: String): (Long, Long, Long, Long) =
-    embShapeCache.computeIfAbsent((s, d), { _ =>
-      import s.implicits._
+      d: String): (Long, Long, Long, Long) = {
+    import s.implicits._
+    val hit = embShapeCache.synchronized(embShapeCache.get((s, d)))
+    if (hit != null) hit
+    else {
       val r = t(s, d, "embeddings")
         .agg(count(lit(1)),
           count(when($"vec_id" % 3 === 0, 1)),
           count(when($"vec_id" % 3 === 1, 1)),
           count(when($"vec_id" % 3 === 2, 1))).collect()(0)
-      (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
-    })
+      val v = (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
+      val prior =
+        embShapeCache.synchronized(embShapeCache.putIfAbsent((s, d), v))
+      if (prior != null) prior else v
+    }
+  }
 
   /** True when the index at `dir` is a COMPLETE fixture at the given
     * snapshot id. The manifest is written last by every committing
@@ -1862,20 +1918,13 @@ object Similarity {
     // of the REWRITTEN cell files plus the manifest counts. The oracle
     // recomputes the expected audit arithmetically, so a green row
     // proves the forgotten rows physically left the artifact — the
-    // leak-audit twin of doc_forget. The pre-forget presence frame is
-    // checkpointed BEFORE the rewrite (a lazy frame would re-read the
-    // rewritten files and vacuously agree). Scale shape: forget
-    // rewrites only the victims' cell partitions; the audit scan is
-    // partition-pruned to the same cells.
+    // leak-audit twin of doc_forget ([[forgetAudit]] holds the audit).
     "sim_index_forget_audit" -> ((s, d) => {
       import s.implicits._
-      def emptyOut = Seq.empty[(Long, Long, Long, Long, Long, Boolean)]
-        .toDF("vec_id", "before_present", "after_present",
-          "n_before", "n_after", "codebook_stale")
       // an empty corpus has nothing to index or forget — schema-
       // preserving empty result (InventorySpec empty-input contract);
       // memoized dataset metadata, not a per-rep probe job (r17)
-      if (embShape(s, d)._1 == 0L) emptyOut
+      if (embShape(s, d)._1 == 0L) forgetAudit(s, "", Seq.empty)
       else {
       // per-rep CLONE of the write-once full fixture (r15): the row
       // times the takedown delta — victim pick, survivor rewrite,
@@ -1888,32 +1937,16 @@ object Similarity {
       // codebook and flip codebook_stale against the oracle (review
       // r13). Bounded 3-row collect; sorted for a stable forget list.
       // The pick scans the SOURCE table, not the ~√n-small-file index
-      // (r17): the full fixture indexes every embeddings row by
-      // construction (save(s, d, ·) assigns each vec_id exactly once),
-      // so the id sets are identical and the single-parquet scan plans
-      // as one TakeOrdered over few splits instead of hundreds.
+      // (r17): the single-parquet scan plans as one TakeOrdered over
+      // few splits instead of hundreds. It carries each victim's
+      // vector, which locates the victim's cell for the audit.
       val victims = t(s, d, "embeddings")
         .filter($"vec_id" >= m0.kk)
         .orderBy($"vec_id".desc).limit(3)
-        .select($"vec_id").as[Long].collect().toSeq.sorted
-      if (victims.isEmpty) emptyOut // every id seeds the codebook
-      else {
-      // pre-forget presence: the victims were just selected FROM the
-      // pre-forget id set, so the 3-row presence frame is that list
-      // itself — the r16 version re-scanned every cell file into a
-      // localCheckpoint to materialize the identical 3 rows (r17)
-      val pre = victims.toDF("vec_id")
-      val m1 = graft.engine.AnnIndexStore.forget(s, dir, victims)
-      val post = graft.engine.AnnIndexStore.load(s, dir)
-        .filter($"vec_id".isin(victims: _*))
-        .select($"vec_id", lit(1L).as("after_present"))
-      pre.join(post, Seq("vec_id"), "left")
-        .na.fill(0L, Seq("after_present"))
-        .select($"vec_id", lit(1L).as("before_present"), $"after_present",
-          lit(m0.n_vectors).as("n_before"), lit(m1.n_vectors).as("n_after"),
-          lit(m1.codebook_stale).as("codebook_stale"))
-        .orderBy($"vec_id")
-      }
+        .select($"vec_id", $"embedding".cast("array<double>").as("v"))
+        .as[(Long, Seq[Double])].collect().toSeq.sortBy(_._1)
+      // no victims (every id seeds the codebook): the empty result
+      forgetAudit(s, dir, victims)
       }
     }),
 
@@ -2266,15 +2299,22 @@ object Similarity {
           |  'd2', aggregate(zip_with(v, ct.c, (x, y) -> (x - y) * (x - y)),
           |                  0D, (acc, e) -> acc + e),
           |  'cent_id', ct.cent_id)))""".stripMargin)
+      // the fixed-dim contract, enforced per row against the first
+      // codebook centroid: a ragged or empty vector fails the query
+      val fixedDim = expr("if(size(v) = 0" +
+        " OR size(v) != size(get(cents, 0).c), raise_error(concat(" +
+        "'sim_centroid_shift: embeddings must be" +
+        " fixed-dim and non-empty; vec_id ', cast(vec_id as string)," +
+        " ' has ', cast(size(v) as string), ' elements, the codebook '," +
+        " cast(size(get(cents, 0).c) as string))), v)")
       val assigned = emb.crossJoin(broadcast(codebook8(s, d)))
-        .select($"vec_id", $"v", am.getField("cent_id").as("cl"))
+        .select($"vec_id", fixedDim.as("v"), am.getField("cent_id").as("cl"))
       // ONE argmin pass (r17): the separate n_assigned agg pruned `v`,
       // so its subtree stopped canonicalizing equal to the mean-update
       // branch and the broadcast-codebook assignment fold ran TWICE
       // (executed plan: 9 parquet scans). n_assigned rides the same
-      // exploded per-(cl, i) agg instead: embeddings are fixed-dim by
-      // the dataset contract (the sim_pca co-moment derivation leans
-      // on the same fact), so the count per (cl, i) IS the cluster's
+      // exploded per-(cl, i) agg instead: under the fixed-dim contract
+      // checked above, the count per (cl, i) IS the cluster's
       // assigned-row count for every i.
       val c1 = assigned.select($"cl", posexplode($"v"))
         .toDF("cl", "i", "a")
@@ -2838,13 +2878,18 @@ object Similarity {
       // non-ANSI long arithmetic (null on success → coalesce falls
       // through to the quantized value; one extra null-check per
       // element, still whole-stage codegen)
+      // An empty vector fails here too: posexplode would drop it from
+      // the vector count nn below (the fixed-dim contract).
       val xs0 = t(s, d, "embeddings")
-        .select(expr("transform(cast(embedding as array<double>)," +
+        .select(expr("if(size(embedding) = 0, raise_error(" +
+          "'sim_pca_top_component: embeddings must be fixed-dim and" +
+          " non-empty; found an empty vector'), transform(cast(embedding" +
+          " as array<double>)," +
           " c -> coalesce(cast(assert_true(abs(c) <= 1.1D," +
           " 'sim_pca_top_component: |coordinate| > 1.1 breaks the" +
           " long partial-sum exactness bound; pre-scale the" +
           " embedding') as bigint)," +
-          " cast(round(c * 1e4) as bigint)))").as("xs"))
+          " cast(round(c * 1e4) as bigint))))").as("xs"))
       // the dim² in-row expansion below multiplies the per-partition
       // CPU by ~4096×, so a single-file scan (the small-SF shape) must
       // fan out to every core first; at 100 TB the scan already has
@@ -2854,9 +2899,10 @@ object Similarity {
         else xs0
       // cj rides along so the vector count n never needs its own
       // corpus pass (r17, guide §1.2 "don't compute things twice"):
-      // every vector contributes one row to every j (embeddings are
-      // fixed-dim by the dataset contract), so max(cj) == count(*) of
-      // the embeddings scan the old separate `nn` agg re-ran
+      // every non-empty vector contributes one row to every j below its
+      // size, so max(cj) == count(*) of the embeddings scan exactly
+      // when all sizes are equal, i.e. when min(cj) == max(cj); `sz`
+      // fails the query otherwise
       val sums = xs.select(posexplode($"xs"))
         .select($"pos".cast("int").as("j"), $"col".as("x"))
         .groupBy($"j").agg(sum($"x").as("sj"), count(lit(1)).as("cj"))
@@ -2870,7 +2916,10 @@ object Similarity {
       // the vector count (was two separate aggs + broadcasts, one of
       // them a full corpus pass — r17)
       val sz = sums.agg(count(lit(1)).cast("int").as("sz"),
-        max($"cj").as("nn"))
+        min($"cj").as("cj0"), max($"cj").as("cj1"))
+        .select($"sz", expr("if(cj0 != cj1, raise_error(" +
+          "'sim_pca_top_component: embeddings must be fixed-dim and" +
+          " non-empty; vector sizes differ'), cj1)").as("nn"))
       // the per-element product stays a fast codegen'd LONG multiply
       // and the partial sums stay LONG too — exactness holds because a
       // partial is bounded by (products per partition)·~1.2e8, which

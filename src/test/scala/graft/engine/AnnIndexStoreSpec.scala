@@ -385,8 +385,8 @@ class AnnIndexStoreSpec extends SparkSpec {
     AnnIndexStore.append(spark, d4, emb.filter($"vec_id" % 3 === 1))
     val mPre = AnnIndexStore.append(spark, d4, emb.filter($"vec_id" % 3 === 2))
 
-    // PIN a reader (a batch job / the static side of a streaming
-    // serve) on the pre-compact snapshot, and remember its answer
+    // PIN a reader (an in-flight job) on the pre-compact snapshot,
+    // and remember its answer
     val pinned = AnnIndexStore.load(spark, d4)
     def norm(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().map(_.mkString("|")).sorted.toSeq

@@ -30,6 +30,19 @@ object EngineProps extends Properties("engine") {
         FirstBytePartitioner.of(k.toLowerCase(java.util.Locale.ROOT), r)
     }
 
+  // one or two chars per piece: ASCII, upper case, 2-, 3- and 4-byte
+  // UTF-8 (the last a surrogate pair) and lone high/low surrogates
+  private val utf8Piece: Gen[String] = Gen.oneOf("a", "Z", "~", "\u007f",
+    "\u0080", "é", "\u07ff", "\u0800", "中", "\uffff", "😀", "\udbff\udfff",
+    "\ud800", "\udbff", "\udc00", "\udfff")
+
+  property("partitioner first byte == getBytes(UTF_8)(0), without encoding") =
+    forAll(Gen.oneOf(utf8Piece.map(_.take(1)),
+        Gen.nonEmptyListOf(utf8Piece).map(_.mkString))) { k =>
+      FirstBytePartitioner.firstByte(k) ==
+        (k.getBytes(java.nio.charset.StandardCharsets.UTF_8)(0) & 0xff)
+    }
+
   property("same first char ⇒ same partition") =
     forAll(Gen.alphaChar, Gen.alphaNumStr, Gen.alphaNumStr, Gen.choose(1, 50)) {
       (c, s1, s2, r) =>

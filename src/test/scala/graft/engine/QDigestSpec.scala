@@ -105,15 +105,4 @@ class QDigestSpec extends AnyFunSuite {
     assert(QDigest.hiOf(id) == QDigest.hiOf(2 * id + 1))
     assert(QDigest.hiOf(2 * id) + 1 == QDigest.loOf(2 * id + 1))
   }
-
-  test("QDigestWindow enforces the [0, U) domain at the fold (ADVICE r15)") {
-    val agg = TypedAggregators.QDigestWindow(16)
-    // in-domain values fold fine
-    val b = agg.reduce(agg.reduce(agg.zero, 0L), QDigest.U.toLong - 1L)
-    assert(b.values.sum == 2L)
-    // out-of-domain values fail loudly instead of minting ids outside
-    // the tree that compress never folds (silent wrong quantiles)
-    for (bad <- Seq(-1L, QDigest.U.toLong, Long.MaxValue))
-      intercept[IllegalArgumentException] { agg.reduce(agg.zero, bad) }
-  }
 }

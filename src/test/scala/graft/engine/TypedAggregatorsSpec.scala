@@ -25,29 +25,4 @@ class TypedAggregatorsSpec extends SparkSpec {
       .collect().map(_._2)
     assert(top == Seq("a" -> 3L, "b" -> 2L, "c" -> 2L))
   }
-
-  test("TopKSim: k-pruned buffer is EXACT and the udaf yields a real array column") {
-    import spark.implicits._
-    // deterministic pseudo-random hits over 3 keys, enough rows that
-    // partial buffers merge across partitions
-    var st = 42L
-    def next(): Long = { st = st * 6364136223846793005L + 1442695040888963407L; st >>> 33 }
-    val hits = (0 until 600).map { i =>
-      (i % 3L, -((next() % 10000).toDouble / 1e4), (next() % 1000).toLong)
-    }
-    val df = hits.toDF("g", "nsim", "vec_id").repartition(7)
-    val agg = org.apache.spark.sql.functions.udaf(TopKSim(5),
-      org.apache.spark.sql.Encoders.product[SimHit])
-    val got = df.groupBy($"g").agg(agg($"nsim", $"vec_id").as("top"))
-      .select($"g", org.apache.spark.sql.functions.posexplode($"top"))
-      .select($"g", $"pos", $"col.nsim", $"col.vec_id")
-      .collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2), r.getLong(3)))
-      .groupBy(_._1).view
-      .mapValues(_.sortBy(_._2).map(t => (t._3, t._4)).toList)
-      .toMap
-    val want = hits.groupBy(_._1).view.mapValues(
-      _.map(t => (t._2, t._3)).sorted.take(5).toList).toMap
-    assert(got == want, "bounded top-k must equal full-sort take(5)")
-  }
 }

@@ -913,4 +913,56 @@ class AnnInvariantsSpec extends SparkSpec {
       "id_est diverges from the MLE replay")
     assert(idEst > 0 && idEst < 200, s"implausible intrinsic dim $idEst")
   }
+
+  /** A fresh dataset dir holding only `embeddings` (vec_id, embedding). */
+  private def embDir(vecs: Seq[Seq[Float]]): String = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_emb").toString
+    vecs.zipWithIndex.map { case (v, i) => (i.toLong, v) }
+      .toDF("vec_id", "embedding").coalesce(1)
+      .write.parquet(s"$dir/embeddings.parquet")
+    dir
+  }
+
+  private def unitVecs(n: Int): Seq[Seq[Float]] =
+    (0 until n).map(i => Seq(1f, (i % 5) / 5f, (i % 3) / 3f, (i % 7) / 7f))
+
+  test("sim_centroid_shift and sim_pca_top_component fail loudly on a ragged or empty vector") {
+    for (bad <- Seq(Seq(0.5f, 0.5f, 0.5f), Seq.empty[Float])) {
+      val dir = embDir(unitVecs(12).updated(10, bad))
+      for (q <- Seq("sim_centroid_shift", "sim_pca_top_component")) {
+        val e = intercept[Exception](SparkEntry.queries(q)(spark, dir).collect())
+        val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+          .takeWhile(_ != null).map(x => String.valueOf(x.getMessage))
+        assert(msgs.exists(_.contains("must be fixed-dim")),
+          s"$q on a ${bad.size}-element vector: ${e.getMessage}")
+      }
+    }
+  }
+
+  test("sim_index_forget_audit measures pre-forget presence: an id the index never held reads 0") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_fa").toString
+    graft.engine.AnnIndexStore.save(spark, sf(), dir)
+    val victims = t(spark, sf(), "embeddings")
+      .orderBy($"vec_id".desc).limit(3)
+      .select($"vec_id", $"embedding".cast("array<double>"))
+      .as[(Long, Seq[Double])].collect().toSeq.sortBy(_._1)
+    // the index loses the first victim before the audit runs
+    graft.engine.AnnIndexStore.forget(spark, dir, Seq(victims.head._1))
+    val got = Similarity.forgetAudit(spark, dir, victims)
+      .select($"vec_id", $"before_present", $"after_present")
+      .as[(Long, Long, Long)].collect().toSeq
+    assert(got == victims.map(_._1).zip(Seq(0L, 1L, 1L))
+      .map { case (v, b) => (v, b, 0L) })
+  }
+
+  test("embShape memo holds at most EmbShapeMax entries") {
+    val dirs = Seq.fill(Similarity.EmbShapeMax + 3)(embDir(unitVecs(4)))
+    dirs.foreach { d =>
+      assert(Similarity.embShape(spark, d) == ((4L, 2L, 1L, 1L)))
+      assert(Similarity.embShapeCache.synchronized(
+        Similarity.embShapeCache.size) <= Similarity.EmbShapeMax)
+    }
+  }
 }
