@@ -150,9 +150,10 @@ object BpeTokenizer {
   }
 
   /** The ONE per-document accounting fold (n_words, n_cps, n_tokens)
-    * shared by every encode consumer — the lifecycle here and the
-    * fixture row — so the counting discipline (tokenization split,
-    * code-point rule, greedy encode) is stated once. */
+    * shared by every encode consumer — the lifecycle here, the
+    * streaming DocStream.bpeTokenCounts, and the fixture row — so the
+    * counting discipline (tokenization split, code-point rule, greedy
+    * encode) is stated once. */
   def countsFor(toks: Seq[String],
       ranks: Map[(String, String), Int]): (Long, Long, Long) = {
     var words = 0L; var cps = 0L; var tokens = 0L

@@ -65,7 +65,9 @@ object PipelineOps {
 
   /** SQL boolean: 1-based char position `i` of `text` ends an 8-char
     * window whose md5-integer (8 hex digits) ≡ 0 (mod 64) — THE CDC
-    * cut rule of the SQL chunk contract ([[cdcChunksSqlPath]]). */
+    * cut rule, stated once for the SQL chunk contract
+    * ([[cdcChunksSqlPath]]) AND the streaming chunk-geometry monitor
+    * (DocStream.cdcMonitor) so the two can never cut differently. */
   private[graft] def cdcCutSql(i: String): String =
     s"cast(conv(substring(md5(cast(substring(text, cast($i - 7 as int)," +
       s" 8) as binary)), 1, 8), 16, 10) as bigint) % 64 = 0"

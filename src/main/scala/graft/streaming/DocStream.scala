@@ -21,10 +21,9 @@ object DocStream {
   case class Admit(fp: String, doc_id: Long)
 
   /** Windowed token accounting over a document stream encoded with the
-    * PERSISTED BPE tokenizer (r14 — the [[AnnIndexServe]] discipline
-    * applied to [[graft.engine.BpeStore]]): a production ingest path
-    * tokenizes arriving documents with the artifact another cluster
-    * fit yesterday, never an in-session re-fit. The stored rank table
+    * PERSISTED BPE tokenizer ([[graft.engine.BpeStore]]): a production
+    * ingest path tokenizes arriving documents with the artifact another
+    * cluster fit yesterday, never an in-session re-fit. The stored rank table
     * loads ONCE driver-side (bounded: ≤ n_merges rows, validated
     * against the manifest) and rides the task closure; the encode is
     * a stateless per-doc map (zero stream-side shuffle), and the only
@@ -60,123 +59,6 @@ object DocStream {
       .select($"w.start".as("w_start"), $"source", $"n_words", $"n_cps",
         $"n_tokens",
         round($"n_cps".cast("double") / $"n_tokens", 4).as("compression"))
-  }
-
-  /** Exactly-once corpus admission.
-    *
-    *  - fingerprint = md5(text) (the dedup_exact/dedup_incremental key);
-    *  - the existing-corpus rejection is a stream-static LEFT ANTI join
-    *    against `corpusFps(fp)` — the static side is the durable corpus
-    *    fingerprint artifact, re-read per micro-batch, so a corpus
-    *    refresh is picked up without restarting the query;
-    *  - cross-batch dedup is keyed state (flatMapGroupsWithState): the
-    *    FIRST micro-batch containing a fingerprint emits one admission
-    *    (the min doc_id inside that batch, matching the batch twin's
-    *    deterministic min-id rule); later arrivals are dropped.
-    *
-    * State is one row per admitted fingerprint and the admitted
-    * POPULATION is unbounded over an infinite crawl, so streaming mode
-    * requires an `ingest_ts` column (crawl records carry fetch times)
-    * and carries an EVENT-TIME TTL, exactly like
-    * EventStream.runningUserCounts: a fingerprint idle past `idleUs` of
-    * event time is evicted once the watermark passes its horizon, so
-    * the state store is bounded by the active-horizon fingerprint set;
-    * a duplicate arriving after eviction would be re-admitted (the
-    * usual TTL trade — the periodic BATCH dedup pass collapses anything
-    * beyond the horizon). Event-time timeout is deliberate:
-    * ProcessingTimeTimeout + the default continuous trigger makes the
-    * engine run no-data batches forever (observed: epoch 612 and
-    * climbing on a drained source), while the event-time clock only
-    * advances with data.
-    *
-    * Batch mode needs no timestamp column and degrades to exactly the
-    * dedup_incremental shape: anti join + min-doc_id per fingerprint. */
-  case class BandOwner(band_i: Int, band_key: String, owner_id: Long)
-
-  /** Per-row MinHash-LSH band keys — the SAME 6-permutation / 3-band
-    * construction as the batch near-dup path (Dedup.minhashSigs /
-    * lshPairs: h1||h2, h3||h4, h5||h6), computed as a pure projection so
-    * it is legal in a streaming plan: 3-gram shingle md5s fold to six
-    * 5-hex-char minima within the row, no explode-and-groupBy. Docs
-    * with < 3 tokens carry no shingles and emit no bands (matching the
-    * batch sig table's size filter). */
-  private def bandsOf(docs: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
-    docs
-      .withColumn("toks",
-        expr("filter(split(lower(text), '\\\\s+'), x -> x != '')"))
-      .filter(size($"toks") >= 3)
-      .withColumn("hs", expr(
-        "transform(sequence(1, size(toks) - 2)," +
-          " i -> md5(cast(array_join(slice(toks, i, 3), ' ') as binary)))"))
-      .withColumn("b", explode(expr(
-        "transform(sequence(0, 2), b -> struct(cast(b as int) AS band_i," +
-          " array_min(transform(hs, h -> substring(h, b * 10 + 1, 5))) ||" +
-          " array_min(transform(hs, h -> substring(h, b * 10 + 6, 5)))" +
-          " AS band_key))")))
-      .select($"b.band_i".as("band_i"), $"b.band_key".as("band_key"),
-        $"doc_id".cast("long").as("doc_id"),
-        (if (docs.columns.contains("ingest_ts")) $"ingest_ts"
-         else lit(null).cast("timestamp")).as("ingest_ts"))
-  }
-
-  /** Streaming MinHash-LSH band index — the near-dup twin of
-    * [[admittedDocs]]: maintain, over an unbounded document stream, the
-    * first-owner registry of every LSH band key. A later doc sharing a
-    * band with an indexed owner is by construction an LSH NEAR-DUP
-    * CANDIDATE of that owner (the exact candidate semantics of the
-    * batch `dedup_lsh_pairs` band join), so the emitted index is what an
-    * online ingest pipeline probes — via a stream-static join, see
-    * [[nearDupCandidates]] — before admitting a crawl record.
-    *
-    * Shapes at scale: state is ONE (band-key → last-seen) entry per
-    * distinct band key (≪ docs — band keys collide by design), keyed
-    * exactly like the batch band join's shuffle; the same event-time
-    * idle TTL as admittedDocs bounds it over an infinite crawl.
-    * First-write-wins with the min doc_id INSIDE the first micro-batch,
-    * so a batch replay of the same data yields the identical index
-    * (parity asserted in StreamingSpec against the declared
-    * dedup_minhash_sigs table).
-    *
-    * Batch mode degrades to the plain groupBy(band).min(doc_id) — the
-    * index a backfill job would write. */
-  def bandIndex(docs: DataFrame,
-      idleUs: Long = 7L * 86400000000L,
-      wmDelay: String = "1 hour"): Dataset[BandOwner] = {
-    import docs.sparkSession.implicits._
-    if (!docs.isStreaming)
-      bandsOf(docs)
-        .groupBy($"band_i", $"band_key")
-        .agg(min($"doc_id").as("owner_id"))
-        .as[BandOwner]
-    else
-      bandsOf(docs.withWatermark("ingest_ts", wmDelay))
-        .select(concat($"band_i".cast("string"), lit(":"), $"band_key")
-            .as("k"),
-          $"doc_id", unix_micros($"ingest_ts").as("us"), $"ingest_ts")
-        .as[(String, Long, Long, java.sql.Timestamp)]
-        .groupByKey(_._1)
-        .flatMapGroupsWithState(OutputMode.Append(),
-            GroupStateTimeout.EventTimeTimeout) {
-          (k: String, batch: Iterator[(String, Long, Long, java.sql.Timestamp)],
-           state: GroupState[Long]) =>
-            if (state.hasTimedOut) { state.remove(); Iterator.empty }
-            else {
-              val rows = batch.toSeq
-              val already = state.exists
-              val seen = math.max(state.getOption.getOrElse(Long.MinValue),
-                rows.iterator.map(_._3).max)
-              state.update(seen)
-              state.setTimeoutTimestamp(math.max((seen + idleUs) / 1000L,
-                state.getCurrentWatermarkMs() + 1L))
-              if (already) Iterator.empty
-              else {
-                val i = k.indexOf(':')
-                Iterator.single(BandOwner(k.substring(0, i).toInt,
-                  k.substring(i + 1), rows.iterator.map(_._2).min))
-              }
-            }
-        }
   }
 
   /** Windowed curation-rate monitor: the live accept/reject dashboard a
@@ -228,21 +110,35 @@ object DocStream {
       .select($"window.start".as("w_start"), $"verdict", $"n_docs")
   }
 
-  /** Probe an LSH band index with a batch/stream of documents: every
-    * (doc, owner) collision where the band's registered owner is a
-    * DIFFERENT doc — exactly the candidate relation the batch
-    * `dedup_lsh_pairs` band join produces, restated as a stream-static
-    * equi-join against the durable index (broadcast- or shuffle-hash
-    * per AQE; no pairwise work anywhere). */
-  def nearDupCandidates(docs: DataFrame, index: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
-    bandsOf(docs)
-      .join(index, Seq("band_i", "band_key"))
-      .filter($"owner_id" =!= $"doc_id")
-      .select($"doc_id", $"owner_id")
-      .distinct()
-  }
-
+  /** Exactly-once corpus admission.
+    *
+    *  - fingerprint = md5(text) (the dedup_exact/dedup_incremental key);
+    *  - the existing-corpus rejection is a stream-static LEFT ANTI join
+    *    against `corpusFps(fp)` — the static side is the durable corpus
+    *    fingerprint artifact, re-read per micro-batch, so a corpus
+    *    refresh is picked up without restarting the query;
+    *  - cross-batch dedup is keyed state (flatMapGroupsWithState): the
+    *    FIRST micro-batch containing a fingerprint emits one admission
+    *    (the min doc_id inside that batch, matching the batch twin's
+    *    deterministic min-id rule); later arrivals are dropped.
+    *
+    * State is one row per admitted fingerprint and the admitted
+    * POPULATION is unbounded over an infinite crawl, so streaming mode
+    * requires an `ingest_ts` column (crawl records carry fetch times)
+    * and carries an EVENT-TIME TTL, exactly like
+    * EventStream.runningUserCounts: a fingerprint idle past `idleUs` of
+    * event time is evicted once the watermark passes its horizon, so
+    * the state store is bounded by the active-horizon fingerprint set;
+    * a duplicate arriving after eviction would be re-admitted (the
+    * usual TTL trade — the periodic BATCH dedup pass collapses anything
+    * beyond the horizon). Event-time timeout is deliberate:
+    * ProcessingTimeTimeout + the default continuous trigger makes the
+    * engine run no-data batches forever (observed: epoch 612 and
+    * climbing on a drained source), while the event-time clock only
+    * advances with data.
+    *
+    * Batch mode needs no timestamp column and degrades to exactly the
+    * dedup_incremental shape: anti join + min-doc_id per fingerprint. */
   def admittedDocs(docs: DataFrame, corpusFps: DataFrame,
       idleUs: Long = 7L * 86400000000L,
       wmDelay: String = "1 hour"): Dataset[Admit] = {
@@ -279,43 +175,6 @@ object DocStream {
               else Iterator.single(Admit(fp, rows.iterator.map(_._2).min))
             }
         }
-  }
-
-  case class ReservoirRow(source: String, ver: Long, doc_id: Long, h32: Long)
-
-  /** Deterministic k-per-source hash reservoir — the ONLINE form of the
-    * batch sampling family's md5-rank pre-cut (doc_sample_stratified /
-    * doc_sample_temperature): keep the k docs with the smallest
-    * (md5-rank, doc_id) per source. Because membership is a pure
-    * function of the doc ids seen so far — not of arrival order — any
-    * interleaving, replay, or restart converges to the SAME reservoir,
-    * so streaming equals batch exactly (StreamingSpec), unlike the
-    * classic randomized reservoir. State is k pairs per source BY
-    * CONSTRUCTION, so no watermark/TTL is needed — this is the rare
-    * stateful op whose state cannot grow. Each update re-emits the
-    * current reservoir tagged with a per-source version; the final
-    * version is the live sample. */
-  def hashReservoir(docs: DataFrame, k: Int = 10): Dataset[ReservoirRow] = {
-    import docs.sparkSession.implicits._
-    docs.select($"source", $"doc_id".cast("long").as("doc_id"),
-        expr("cast(conv(substring(md5(cast(cast(doc_id as string)" +
-          " as binary)), 1, 8), 16, 10) as bigint)").as("h32"))
-      .as[(String, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Update(),
-          GroupStateTimeout.NoTimeout) {
-        (src: String, batch: Iterator[(String, Long, Long)],
-         state: GroupState[(Long, List[(Long, Long)])]) =>
-          val (ver, res) = state.getOption.getOrElse(
-            (0L, List.empty[(Long, Long)]))
-          // (h32, doc_id) ascending; distinct absorbs re-deliveries
-          val merged = (res ++ batch.map(e => (e._3, e._2)))
-            .distinct.sorted.take(k)
-          state.update((ver + 1, merged))
-          merged.iterator.map { case (h, id) =>
-            ReservoirRow(src, ver + 1, id, h)
-          }
-      }
   }
 
   case class MgCounter(shard: Int, ver: Long, word: String, est: Long)
@@ -369,43 +228,6 @@ object DocStream {
       }
   }
 
-  /** Bloom model for [[bloomGuard]]: the distinct 8-grams of the given
-    * docs (the EVAL/benchmark set) folded into the SAME 258,048-bit /
-    * 4-probe filter as the declared doc_bloom_decontaminate
-    * ([[graft.queries.PipelineOps.BloomM]] — one geometry definition,
-    * the monitors can never probe differently from the batch audit).
-    * Output is the (word_j, bits) 63-bit-word table, ≤ 4096 rows —
-    * ~32 KB however large the eval set grows, so it broadcasts into
-    * the live stream. Built in batch (train-in-batch half). */
-  def evalGramBloom(evalDocs: DataFrame): DataFrame = {
-    import evalDocs.sparkSession.implicits._
-    import graft.queries.PipelineOps.{bloomPosSql, toksCol}
-    val probes = (0 until 4).map(r => expr(bloomPosSql("gs", r)))
-    evalDocs
-      .select(toksCol.as("toks"))
-      .filter(size($"toks") >= 8)
-      .select(explode(expr(
-        "transform(sequence(1, size(toks) - 7)," +
-          " i -> array_join(slice(toks, i, 8), ' '))")).as("gs"))
-      .distinct()
-      .select(explode(array(probes: _*)).as("p"))
-      .groupBy(expr("cast(p div 63 as int)").as("word_j"))
-      .agg(expr("bit_or(shiftleft(cast(1 as bigint), p % 63))").as("bits"))
-  }
-
-  /** Online decontamination guard — the serve-in-stream half of
-    * doc_bloom_decontaminate: every arriving doc is scored for eval
-    * 8-gram overlap against the broadcast Bloom and flagged before it
-    * can enter a training shard. COMPLETELY STATELESS: the filter
-    * collapses to one map row (map_from_entries over ≤ 4096 words,
-    * ~32 KB) that cross-joins in as a stream-static scalar broadcast,
-    * grams are built and probed IN-ROW (no explode → no per-doc
-    * aggregation state), so the stream side carries zero state stores
-    * and one projection — the strongest possible shape at 100 TB/day
-    * ingest. Bloom guarantees no false negatives: a doc whose grams
-    * all sit in the eval set can never pass unflagged (only spurious
-    * flags are possible, at the filter's FP rate). The verdict rule
-    * (≥ 10% gram hits) matches the batch audit's `contaminated`. */
   /** Per-doc CDC chunk geometry computed IN-ROW (no explode, no
     * state): n_chunks = cuts strictly before the end + the closing
     * sentinel chunk — EXACTLY the batch chunker's bounds∪{len} count
@@ -473,25 +295,4 @@ object DocStream {
           .otherwise("ok").as("verdict"))
   }
 
-  def bloomGuard(docs: DataFrame, model: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
-    import graft.queries.PipelineOps.{bloomHitSql, toksCol}
-    val bmRow = model.agg(expr(
-      "map_from_entries(array_sort(collect_list(" +
-        "named_struct('key', word_j, 'value', bits))))").as("bm"))
-    docs
-      .select($"doc_id".cast("long").as("doc_id"), toksCol.as("toks"))
-      .crossJoin(broadcast(bmRow))
-      .select($"doc_id",
-        expr("case when size(toks) >= 8 then size(toks) - 7" +
-          " else 0 end").cast("long").as("n_grams"),
-        expr("case when size(toks) >= 8 then size(filter(" +
-          "transform(sequence(1, size(toks) - 7)," +
-          " i -> array_join(slice(toks, i, 8), ' '))," +
-          s" gs -> ${bloomHitSql("gs", "bm")})) else 0 end")
-          .cast("long").as("n_hits"))
-      .select($"doc_id", $"n_grams", $"n_hits",
-        ($"n_hits" * 10 >= $"n_grams" && $"n_grams" > 0L)
-          .as("contaminated"))
-  }
 }

@@ -15,61 +15,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object EventStream {
 
-  /** Hour-of-week baseline model for [[seasonalAnomaly]]: per
-    * (event_type, dow, hod) cell, exact integer count/Σx/Σx² over the
-    * DENSE hourly grid — absent hours count as zeros, exactly the
-    * declared log_anomaly_seasonal's stats stage. Built from history in
-    * batch; the result is bounded by types × 168 rows, so it broadcasts
-    * into the live stream (the cellDrift batch-model→stream-serving
-    * pattern applied to the events family). */
-  def seasonalBaseline(events: DataFrame): DataFrame =
-    // ONE definition of the dense grid + stats, shared with the
-    // declared log_anomaly_seasonal — the twins cannot drift
-    graft.queries.EventsLog.seasonalStats(events)
-
-  /** Online seasonal anomaly flags: hourly windowed counts per type,
-    * flagged against the broadcast hour-of-week baseline with the SAME
-    * wide-integer 1.5σ rule as the declared log_anomaly_seasonal — the
-    * live half of train-in-batch / serve-in-stream. The stream-static
-    * join runs BEFORE the windowed agg (Structured Streaming forbids
-    * joins after a streaming aggregation); the baseline columns are
-    * constant within a (window, type) group, so min() carries them
-    * through the agg unchanged. State is the windowed agg's only.
-    *
-    * The baseline join is LEFT OUTER (ADVICE r8): an event type the
-    * training history never saw — arguably the most anomalous traffic
-    * — still produces a monitor row, with `is_anomaly = null` as the
-    * explicit "unmodeled" verdict (a 1-hour window maps to exactly one
-    * (dow, hod) cell, so a group is entirely modeled or entirely not;
-    * null never silently reads as "normal" the way a dropped row or a
-    * defaulted 0 would). */
-  def seasonalAnomaly(events: DataFrame, baseline: DataFrame,
-      wmDelay: String = "1 hour"): DataFrame = {
-    import events.sparkSession.implicits._
-    val keyed = events
-      .select($"ts", $"event_type",
-        (weekday($"ts") + 1).cast("long").as("dow"),
-        hour($"ts").cast("long").as("hod"))
-      .join(broadcast(baseline), Seq("event_type", "dow", "hod"),
-        "left_outer")
-    val src = if (events.isStreaming) keyed.withWatermark("ts", wmDelay)
-      else keyed
-    src.groupBy(window($"ts", "1 hour"), $"event_type")
-      .agg(count(lit(1)).as("n"), min($"c").as("c"),
-        min($"sx").as("sx"), min($"sxx").as("sxx"))
-      .select($"window.start".as("w_start"), $"event_type", $"n",
-        when($"c".isNull, lit(null).cast("long")).otherwise(
-          when(expr(
-            "4 * (cast(n as decimal(38,0)) * cast(c as decimal(38,0))" +
-              " - cast(sx as decimal(38,0)))" +
-              " * (cast(n as decimal(38,0)) * cast(c as decimal(38,0))" +
-              " - cast(sx as decimal(38,0)))" +
-              " > 9 * (cast(c as decimal(38,0)) * cast(sxx as" +
-              " decimal(38,0)) - cast(sx as decimal(38,0))" +
-              " * cast(sx as decimal(38,0)))"), 1L).otherwise(0L))
-          .as("is_anomaly"))
-  }
-
   /** Reference bin model for [[psiDrift]]: per event_type, the
     * history's 10-bin value counts r0..r9 with total n_ref, plus the
     * GLOBAL value bounds every bin assignment derives from. Bounded by
@@ -97,7 +42,8 @@ object EventStream {
     * declared log_psi_drift: per (hour window, event_type), the
     * Laplace-smoothed PSI of the window's value distribution against
     * the broadcast reference model. The stream-static join runs
-    * BEFORE the windowed agg (the seasonalAnomaly discipline); the
+    * BEFORE the windowed agg (Structured Streaming forbids joins after
+    * a streaming aggregation); the
     * agg carries ten conditional bin sums, so per-key state is a
     * fixed 10-counter row — never a value list; the ln() fold is a
     * post-agg projection built from the SAME e10-quantized term as
@@ -194,200 +140,6 @@ object EventStream {
         $"approx_users")
   }
 
-  /** Windowed DP-noised hourly count (r15 verdict ask #7) — the
-    * STREAMING emission of the declared `log_dp_release` family's
-    * hourly release: per closed event-time window, the event count
-    * plus the SAME seeded discrete-Laplace mechanism, keyed on the
-    * SAME 'h:<hour index>:dp2' seed as the batch `log_dp_hourly` row.
-    * Because mechanism and key are shared definitions
-    * (EventsLog.dpSeedM/DpKmagExpr/DpNoiseExpr — one string each),
-    * a closed window's emitted row is BIT-EQUAL to the batch
-    * release's row for that hour, so streaming emission is a replay
-    * of the same release, not a second one: publishing an identical
-    * value twice is post-processing and spends NO additional budget
-    * (the ledger stays epsilon = ln 2, delta = 6.4e-7, event-level,
-    * exactly as the batch row states). Two honest scope notes, stated
-    * not hidden: the stream emits only OBSERVED hours — the
-    * data-independent collection-window grid (noised zeros for silent
-    * hours) is the batch release's job at window close, so the
-    * streaming feed alone is a pre-release monitor, not the release
-    * artifact; and exactly-once emission matters for privacy here —
-    * a sink that re-derived noise per attempt would leak — which the
-    * seeded mechanism guarantees by construction (replays are
-    * bit-identical; kill sweep in StreamingRestartSpec). State is one
-    * count per open window. */
-  def dpHourlyMonitor(events: DataFrame): DataFrame = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", "1 hour")
-      .groupBy(window($"ts", "1 hour").as("w"))
-      .agg(count(lit(1)).as("n"))
-      .withColumn("h", expr("unix_micros(w.start) div 3600000000"))
-      .withColumn("m", expr(graft.queries.EventsLog.dpSeedM(
-        "concat('h:', cast(h as string), ':dp2')")))
-      .withColumn("kmag", expr(graft.queries.EventsLog.DpKmagExpr))
-      .withColumn("noise", expr(graft.queries.EventsLog.DpNoiseExpr))
-      .select(($"h" * 3600000000L).as("hour_us"),
-        greatest(lit(0L), $"n" + $"noise").as("n_released"),
-        lit(0.6931).as("epsilon"), lit(6.4e-7).as("delta"))
-  }
-
-  /** Windowed k-anonymity monitor (r13 verdict ask #7) — the streaming
-    * half of the batch privacy gate (`log_k_anonymity`): per event-time
-    * window, each active user generalizes to a quasi-identifier
-    * profile (modal 6-hour band, modal event type, volume band of the
-    * window's count — the batch hierarchy applied to the window's
-    * slice of activity), and every (window, QI class) emits its size
-    * with the k verdict; `anonymous = false` rows are the alerts a
-    * release pipeline pages on BEFORE the batch audit would catch the
-    * dip. Two chained stateful operators, both watermark-bounded
-    * (Spark's multiple-stateful-operator support): the per-(window,
-    * user) fold runs [[graft.engine.TypedAggregators.QiProfile]] —
-    * ONE aggregation with state bounded by the generalization
-    * alphabets (4 bands × event types), not user volume — and the
-    * class count re-windows the closed profiles, so its state is the
-    * QI lattice × open windows (the cellDrift state-shape rule).
-    * Batch mode runs the identical plan minus the watermark (parity
-    * asserted in StreamingSpec). */
-  def kAnonymityMonitor(events: DataFrame, k: Long = 5L,
-      wmDelay: String = "1 hour"): DataFrame = {
-    import events.sparkSession.implicits._
-    val prof = udaf(graft.engine.TypedAggregators.QiProfile)
-    val base = events.select($"ts", $"user_id", $"event_type",
-      expr("hour(ts) div 6").cast("long").as("hb"))
-    val src =
-      if (events.isStreaming) base.withWatermark("ts", wmDelay) else base
-    src
-      .groupBy(window($"ts", "1 hour").as("w"), $"user_id")
-      .agg(prof($"hb", $"event_type").as("p"))
-      .groupBy(window($"w", "1 hour").as("w2"), $"p.hband".as("hband"),
-        $"p.mtype".as("mtype"), $"p.vband".as("vband"))
-      .agg(count(lit(1)).as("n_users"))
-      .select($"w2.start".as("w_start"), $"hband", $"mtype", $"vband",
-        $"n_users", ($"n_users" >= k).as("anonymous"))
-  }
-
-  /** Windowed q-digest quantile monitor (r15) — the streaming twin of
-    * the declared `sketch_qdigest_quantiles`: per event-hour window,
-    * the p50/p99 of `value` from ONE stateful aggregation running
-    * [[graft.engine.TypedAggregators.QDigestWindow]]. The buffer is
-    * the leaf-count map over the bounded 2-dp e2 lattice (domain-
-    * bounded state, order-free merge — see the aggregator scaladoc
-    * for why compression waits until finish), and every emitted row
-    * SELF-AUDITS the q-digest rank guarantee against the buffer's
-    * exact counts (`within_bound`). Values outside the lattice clamp
-    * to its edges and are counted (`n_clamped`) — the monitor's own
-    * out-of-domain alarm. Batch mode runs the identical plan minus
-    * the watermark (parity + kill sweep in the streaming specs). */
-  def qdigestMonitor(events: DataFrame,
-      wmDelay: String = "1 hour"): DataFrame = {
-    import events.sparkSession.implicits._
-    val qd = udaf(graft.engine.TypedAggregators.QDigestWindow(1024))
-    val u = graft.engine.QDigest.U.toLong
-    val base = events.select($"ts",
-      expr("cast(round(value * 100) as bigint)").as("e2raw"))
-      .select($"ts",
-        greatest(lit(0L), least(lit(u - 1L), $"e2raw")).as("e2"),
-        ($"e2raw" < 0L || $"e2raw" >= u).cast("long").as("clamped"))
-    val src =
-      if (events.isStreaming) base.withWatermark("ts", wmDelay) else base
-    src
-      .groupBy(window($"ts", "1 hour").as("w"))
-      .agg(qd($"e2").as("q"), sum($"clamped").as("n_clamped"))
-      .select($"w.start".as("w_start"), $"q.n_events".as("n_events"),
-        $"q.p50_est".as("p50_est"), $"q.p99_est".as("p99_est"),
-        $"q.within_bound".as("within_bound"), $"n_clamped")
-  }
-
-  /** Windowed l-diversity companion of [[kAnonymityMonitor]] — the
-    * live homogeneity-attack gate: a window's QI class can meet k and
-    * still leak when its members share the sensitive value, so each
-    * (window, class) also reports its distinct sensitive-band count.
-    * The sensitive attribute rides a STATIC broadcast dimension
-    * (`sens`: user_id -> sband, trained in batch — the
-    * model-in-batch/serve-in-stream pattern of cellDrift/ewmaChart):
-    * the stream-static join is map-side, and the class fold's
-    * `collect_set(sband)` state is bounded by the BAND ALPHABET, not
-    * the class population — exact l_distinct with streaming-legal
-    * state (the reason this is not a countDistinct). Same two chained
-    * stateful operators as the k monitor; batch parity + identical
-    * plan minus the watermark. */
-  def lDiversityMonitor(events: DataFrame, sens: DataFrame, k: Long = 5L,
-      l: Long = 3L, wmDelay: String = "1 hour"): DataFrame = {
-    import events.sparkSession.implicits._
-    val prof = udaf(graft.engine.TypedAggregators.QiProfile)
-    // watermark BEFORE the dimension join: a user missing from `sens`
-    // (the dimension lags new arrivals) drops from the monitor, but
-    // their events must still advance the watermark — a post-join
-    // watermark would let an unsensed burst stall every open window
-    val evw =
-      if (events.isStreaming) events.withWatermark("ts", wmDelay)
-      else events
-    evw
-      .join(broadcast(sens), Seq("user_id"))
-      .select($"ts", $"user_id", $"event_type", $"sband",
-        expr("hour(ts) div 6").cast("long").as("hb"))
-      .groupBy(window($"ts", "1 hour").as("w"), $"user_id")
-      .agg(prof($"hb", $"event_type").as("p"),
-        first($"sband").as("sband")) // sband is functional per user
-      .groupBy(window($"w", "1 hour").as("w2"), $"p.hband".as("hband"),
-        $"p.mtype".as("mtype"), $"p.vband".as("vband"))
-      .agg(count(lit(1)).as("n_users"),
-        size(collect_set($"sband")).cast("long").as("l_distinct"))
-      .select($"w2.start".as("w_start"), $"hband", $"mtype", $"vband",
-        $"n_users", $"l_distinct", ($"n_users" >= k).as("anonymous"),
-        ($"l_distinct" >= l).as("diverse"))
-  }
-
-  /** The FULL live privacy gate — k-anonymity, l-diversity, AND
-    * t-closeness per (window, QI class), completing the streaming twin
-    * of the batch audit trio: a class can meet k and l and still leak
-    * by skewing far from the corpus distribution, so each class also
-    * reports the exact EMD of its sensitive-band distribution against
-    * the batch-trained GLOBAL one. Same chained two-operator shape as
-    * [[kAnonymityMonitor]]; the class fold is
-    * [[graft.engine.TypedAggregators.TClose]] — its buffer is the
-    * class band histogram (bounded by the band alphabet) and its
-    * finish replays the batch log_t_closeness EMD arithmetic verbatim
-    * (cumulative over the ordered global band domain, per-band terms
-    * e6-quantized before the sum), with the global distribution
-    * captured as a broadcast-constant closure (model-in-batch/
-    * serve-in-stream). `globBands` = (band, global user count) over
-    * the training corpus, e.g. from the same frame as `sens`.
-    * Watermark before the dimension join (the [[lDiversityMonitor]]
-    * rationale). Batch mode: identical plan minus the watermark. */
-  def privacyTrioMonitor(events: DataFrame, sens: DataFrame,
-      globBands: Seq[(Long, Long)], k: Long = 5L, l: Long = 3L,
-      wmDelay: String = "1 hour"): DataFrame = {
-    import events.sparkSession.implicits._
-    val prof = udaf(graft.engine.TypedAggregators.QiProfile)
-    val sorted = globBands.sortBy(_._1)
-    val tc = udaf(graft.engine.TypedAggregators.TClose(
-      sorted, sorted.iterator.map(_._2).sum))
-    val bb = sorted.size.toLong
-    val evw =
-      if (events.isStreaming) events.withWatermark("ts", wmDelay)
-      else events
-    evw
-      .join(broadcast(sens), Seq("user_id"))
-      .select($"ts", $"user_id", $"event_type", $"sband",
-        expr("hour(ts) div 6").cast("long").as("hb"))
-      .groupBy(window($"ts", "1 hour").as("w"), $"user_id")
-      .agg(prof($"hb", $"event_type").as("p"),
-        first($"sband").as("sband")) // sband is functional per user
-      .groupBy(window($"w", "1 hour").as("w2"), $"p.hband".as("hband"),
-        $"p.mtype".as("mtype"), $"p.vband".as("vband"))
-      .agg(tc($"sband").as("t"))
-      .select($"w2.start".as("w_start"), $"hband", $"mtype", $"vband",
-        $"t.n_users".as("n_users"), $"t.l_distinct".as("l_distinct"),
-        when(lit(bb > 1L), round($"t.emd_e6".cast("double")
-          / lit(1e6) / lit(bb - 1L), 4)).otherwise(lit(0.0)).as("emd"),
-        ($"t.n_users" >= k).as("anonymous"),
-        ($"t.l_distinct" >= l).as("diverse"),
-        when(lit(bb > 1L), $"t.emd_e6" * 5L <= lit((bb - 1L) * 1000000L))
-          .otherwise(lit(true)).as("close"))
-  }
-
   /** Stream-static enrichment join: each event picks up its user's
     * first-seen timestamp from a STATIC dimension frame. The static side
     * is broadcast-hinted — on a cluster every executor joins map-side
@@ -401,113 +153,6 @@ object EventStream {
   }
 
   case class UserCount(user_id: Long, n: Long)
-
-  case class EwmaPoint(event_type: String, hour_us: Long, n: Long,
-    ewma: Double, is_alert: Long)
-
-  /** Online EWMA control chart — the streaming twin of the declared
-    * `log_ewma_chart`: per event type, the exact-e7 truncated EWMA
-    * recurrence over consecutive hours (gap hours count as ZERO, the
-    * dense-grid semantics) with the same 3σ integer alert verdict
-    * against the broadcast σ model ([[graft.queries.EventsLog
-    * .ewmaModel]] — trained in batch, served here; the weight ladder
-    * is the shared `ewmaWeightsE7`, so the twins cannot drift).
-    *
-    * Finalization is WATERMARK-driven (review findings, round 11 —
-    * the first cut closed an hour when any later hour arrived, which
-    * dropped in-watermark stragglers and re-emitted zero history when
-    * an idle type revived): state per type is the next hour to close,
-    * the ring of the last 8 finalized counts, and a pending
-    * hour→count map bounded by the reorder window. An hour H emits
-    * only once the watermark passes H + 1h (so `wmDelay` really is
-    * the straggler budget); gap hours finalize as zeros; rows older
-    * than an already-finalized hour are genuinely beyond the
-    * watermark and drop. The event-time timeout exists to keep
-    * CLOSING hours for a type that went silent (types absent from a
-    * micro-batch are not invoked otherwise); state is never removed —
-    * it is bounded by the type alphabet, not by a population. In
-    * BATCH mode the group is seen whole and pads to the model's h1
-    * bound, so batch-mode output is row-for-row the declared
-    * query's (asserted in StreamingSpec). */
-  def ewmaChart(events: DataFrame, model: DataFrame,
-      idleUs: Long = 86400000000L * 7, wmDelay: String = "1 hour")
-      : Dataset[EwmaPoint] = {
-    import events.sparkSession.implicits._
-    val wE7 = graft.queries.EventsLog.ewmaWeightsE7
-    val isBatch = !events.isStreaming
-    val in = if (isBatch) events else events.withWatermark("ts", wmDelay)
-    val stepUs = 3600000000L
-    def r4(x: Double) = BigDecimal(x)
-      .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-    in.select($"event_type",
-        unix_micros(date_trunc("hour", $"ts")).as("hour_us"), $"ts")
-      .join(broadcast(model), Seq("event_type"))
-      .select($"event_type", $"hour_us", $"ts",
-        $"nh", $"stot", $"sxx", $"h0_us", $"h1_us")
-      .as[(String, Long, java.sql.Timestamp, Long, Long, Long, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Update(),
-          if (isBatch) GroupStateTimeout.NoTimeout
-          else GroupStateTimeout.EventTimeTimeout) {
-        (et: String,
-         batch: Iterator[(String, Long, java.sql.Timestamp, Long, Long,
-           Long, Long, Long)],
-         state: GroupState[(Long, Seq[Long], Map[Long, Long],
-           Long, Long, Long)]) =>
-          def ewmaE7(win: Seq[Long]): Long = // most-recent-LAST
-            (0 to 7).map(j => win(7 - j) * wE7(j)).sum
-          val rows = batch.toSeq
-          if (rows.isEmpty && !state.exists) Iterator.empty
-          else {
-            val (nh, stot, sxx, h0) =
-              if (rows.nonEmpty) {
-                val r = rows.head; (r._4, r._5, r._6, r._7)
-              } else {
-                val s0 = state.get; (s0._4, s0._5, s0._6, 0L)
-              }
-            // 9·(nh·Σx² − (Σx)²)·10¹⁴ — the σ² side of the verdict
-            val rhs = (BigInt(nh) * sxx - BigInt(stot) * stot) * 9 *
-              BigInt("100000000000000")
-            var (nextHour, ring, pending) = state.getOption
-              .map(s0 => (s0._1, s0._2, s0._3))
-              .getOrElse((h0, Seq.empty[Long], Map.empty[Long, Long]))
-            // merge the batch; rows below nextHour are beyond the
-            // watermark by construction (nextHour only advances once
-            // the watermark passes) and drop
-            rows.groupBy(_._2).foreach { case (h, rs) =>
-              if (h >= nextHour)
-                pending += h -> (pending.getOrElse(h, 0L) + rs.length)
-            }
-            val out = scala.collection.mutable.ArrayBuffer
-              .empty[EwmaPoint]
-            def finalizeNext(): Unit = {
-              val c = pending.getOrElse(nextHour, 0L)
-              if (ring.length == 8) {
-                val cur = ewmaE7(ring.drop(1) :+ c)
-                val d = BigInt(c) * 10000000L - ewmaE7(ring)
-                out += EwmaPoint(et, nextHour, c,
-                  r4(cur.toDouble / 1e7),
-                  if (d * d * nh * nh > rhs) 1L else 0L)
-              }
-              ring = (ring :+ c).takeRight(8)
-              pending -= nextHour
-              nextHour += stepUs
-            }
-            if (isBatch) {
-              val h1 = rows.head._8
-              while (nextHour <= h1) finalizeNext()
-            } else {
-              // close every hour the watermark has fully passed
-              val wmUs = state.getCurrentWatermarkMs() * 1000L
-              while (nextHour + stepUs <= wmUs) finalizeNext()
-              state.update((nextHour, ring, pending, nh, stot, sxx))
-              state.setTimeoutTimestamp(
-                state.getCurrentWatermarkMs() + idleUs / 1000L)
-            }
-            out.iterator
-          }
-      }
-  }
 
   case class AnomStats(user_id: Long, n_events: Long, mu: Double, sd: Double)
 
@@ -633,85 +278,6 @@ object EventStream {
         $"n_events")
   }
 
-  case class Session(user_id: Long, s_start: Long, s_end: Long, n_events: Long)
-
-  /** Custom-state sessionization via flatMapGroupsWithState — the
-    * hand-rolled form of `sessionCounts` for when session logic outgrows
-    * the built-in (e.g. value-dependent gaps). Per-user state is one open
-    * session (start, lastTs, n); arriving events are folded in event-time
-    * order. In batch mode every group sees all its events at once (the
-    * per-user sort is bounded by a user's event count — fine for
-    * per-entity streams; a user with unbounded events would need the
-    * native operator). Boundary semantics match session_window: an event
-    * exactly `gapUs` after the previous one still merges (Spark merges
-    * when next start <= current end), so the split test is strict >.
-    *
-    * Streaming: the input is watermarked (`wmDelay`) and the state uses
-    * `GroupStateTimeout.EventTimeTimeout` — after each update the timeout
-    * is armed at the open session's end, so when the watermark passes it
-    * the session is EMITTED and its state removed. A user whose events
-    * stop arriving therefore still gets their final session, and state is
-    * bounded by the watermark (no per-key entry outlives watermark +
-    * gap). Remaining caveat: an event arriving in a LATER batch with a
-    * timestamp earlier than already-folded state is mis-sessioned (the
-    * native `session_window` operator handles such late merges); batch
-    * mode sees each group whole and is exact. */
-  def sessionizeCustom(events: DataFrame, gapUs: Long,
-      wmDelay: String = "1 hour"): Dataset[Session] = {
-    import events.sparkSession.implicits._
-    val isBatch = !events.isStreaming // plain boolean: the closure must not capture the DataFrame
-    val in = if (isBatch) events else events.withWatermark("ts", wmDelay)
-    // keep `ts` through the projection: the EventTimeTimeout check needs
-    // the watermarked event-time column present in the operator's input
-    in.select($"user_id".cast("long"), unix_micros($"ts").as("us"), $"ts")
-      .as[(Long, Long, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append(),
-          if (isBatch) GroupStateTimeout.NoTimeout
-          else GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, batch: Iterator[(Long, Long, java.sql.Timestamp)],
-         state: GroupState[(Long, Long, Long)]) =>
-          if (state.hasTimedOut) {
-            // watermark passed the open session's end: close and emit it
-            val (start, last, n) = state.get
-            state.remove()
-            Iterator.single(Session(user, start, last + gapUs, n))
-          } else {
-            val ts = batch.map(_._2).toArray.sorted
-            var (start, last, n) = state.getOption.getOrElse((-1L, -1L, 0L))
-            val out = Seq.newBuilder[Session]
-            ts.foreach { t =>
-              if (start < 0) { start = t; last = t; n = 1 }
-              else if (t - last > gapUs) {
-                out += Session(user, start, last + gapUs, n)
-                start = t; last = t; n = 1
-              } else {
-                // a cross-batch late event (t < last, still within the
-                // watermark) must never move the open session's end — and
-                // its timeout horizon — BACKWARD
-                last = math.max(last, t); n += 1
-              }
-            }
-            if (start >= 0) {
-              state.update((start, last, n))
-              if (isBatch) {
-                // batch mode sees everything: flush the final open session
-                out += Session(user, start, last + gapUs, n)
-              } else {
-                // arm the event-time timeout at session end (ms); must be
-                // beyond the current watermark or Spark rejects it — a
-                // session already ended before the watermark fires on the
-                // next no-data batch
-                val endMs = (last + gapUs) / 1000
-                state.setTimeoutTimestamp(
-                  math.max(endMs, state.getCurrentWatermarkMs() + 1))
-              }
-            }
-            out.result().iterator
-          }
-      }
-  }
-
   case class TypePair(user_id: Long, s_start: Long,
       type_a: String, type_b: String)
 
@@ -722,11 +288,14 @@ object EventStream {
     * dozen bytes per user at any stream length. A session emits its
     * unordered type pairs the moment it closes — gap exceeded in-stream,
     * or event-time timeout once the watermark passes the session end
-    * (same arming discipline as sessionizeCustom) — so downstream pair
-    * counting is an ordinary incremental streaming aggregation. Batch
-    * mode sees each user's history whole and reproduces the declared
-    * query's pair multiset exactly (asserted in StreamingSpec); the
-    * late-data caveat is also sessionizeCustom's. */
+    * (the timeout is armed at the session end, never at or before the
+    * current watermark) — so downstream pair counting is an ordinary
+    * incremental streaming aggregation. Batch mode sees each user's
+    * history whole and reproduces the declared query's pair multiset
+    * exactly (asserted in StreamingSpec). Streaming caveat: an event
+    * arriving in a LATER batch with a timestamp earlier than
+    * already-folded state is mis-sessioned (the native `session_window`
+    * operator handles such late merges). */
   def sessionTypePairs(events: DataFrame, gapUs: Long,
       wmDelay: String = "1 hour"): Dataset[TypePair] = {
     import events.sparkSession.implicits._
@@ -762,8 +331,8 @@ object EventStream {
                 out ++= pairs(user, start, tys)
                 start = ts; last = ts; tys = Seq(ty)
               } else {
-                // same cross-batch late-data guard as sessionizeCustom:
-                // never shrink the open session's end / timeout horizon
+                // cross-batch late data must never shrink the open
+                // session's end / timeout horizon
                 last = math.max(last, ts)
                 if (!tys.contains(ty)) tys = tys :+ ty
               }
@@ -803,8 +372,8 @@ object EventStream {
     *
     * Batch mode sees each user's full history in one sorted NoTimeout
     * pass, which reproduces log_funnel's min/join semantics exactly
-    * (asserted in StreamingSpec). Streaming caveat, same as
-    * sessionizeCustom: an event arriving in a later batch with a
+    * (asserted in StreamingSpec). Streaming caveat, as for
+    * sessionTypePairs: an event arriving in a later batch with a
     * timestamp before an already-latched stage cannot retro-correct
     * earlier decisions. */
   def funnelHits(events: DataFrame,
@@ -847,79 +416,6 @@ object EventStream {
             if (!isBatch)
               state.setTimeoutTimestamp(math.max((seen + idleUs) / 1000L,
                 state.getCurrentWatermarkMs() + 1L))
-            out.result().iterator
-          }
-      }
-  }
-
-  case class Attribution(user_id: Long, purchase_us: Long,
-      attributed: Boolean, value: Double)
-
-  /** Streaming last-touch attribution — the unbounded twin of the
-    * declared `log_attribution` batch query: per-user state is ONE long
-    * (the latest click time); each purchase is emitted immediately,
-    * credited iff a click happened within the preceding 24h. Events
-    * fold in (event-time, event_id) order per micro-batch, which is
-    * exactly the batch query's window frame order, so a single-batch
-    * pass reproduces it row-for-row (asserted in StreamingSpec); the
-    * usual cross-batch late-data caveat applies.
-    *
-    * State eviction is SEMANTICS-PRESERVING, unlike a session timeout:
-    * a click only influences purchases in the next 24h, and the 1h
-    * watermark already drops purchases older than the watermark — so
-    * once the watermark passes lastClick + 24h, no admissible purchase
-    * can ever be credited to that click and the user's state row can be
-    * dropped invisibly (event-time timeout; idle users cost nothing
-    * forever, asserted via state-store row counts in StreamingSpec).
-    * Batch mode keeps the single-pass NoTimeout shape. */
-  def attributedPurchases(events: DataFrame): Dataset[Attribution] = {
-    import events.sparkSession.implicits._
-    val isBatch = !events.isStreaming
-    val src = if (isBatch) events else events.withWatermark("ts", "1 hour")
-    // `ts` rides along: the event-time-timeout checker requires the
-    // watermarked column to reach the state operator (same as
-    // sessionizeCustom)
-    src.filter($"event_type".isin("click", "purchase"))
-      .select($"user_id".cast("long"), $"event_type",
-        unix_micros($"ts").as("us"), $"value", $"event_id", $"ts")
-      .as[(Long, String, Long, Double, Long, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append(),
-          if (isBatch) GroupStateTimeout.NoTimeout
-          else GroupStateTimeout.EventTimeTimeout) {
-        (user: Long,
-         batch: Iterator[(Long, String, Long, Double, Long, java.sql.Timestamp)],
-         state: GroupState[Long]) =>
-          if (state.hasTimedOut) {
-            // watermark ≥ lastClick + 24h: the click is dead weight
-            state.remove()
-            Iterator.empty
-          } else {
-            var lastClick = state.getOption.getOrElse(-1L)
-            val out = Seq.newBuilder[Attribution]
-            batch.toArray.sortBy(e => (e._3, e._5)).foreach {
-              case (_, et, us, v, _, _) =>
-                // cross-batch late clicks (us < lastClick, within the
-                // watermark) must not move the attribution anchor backward
-                if (et == "click") { if (us > lastClick) lastClick = us }
-                else out += Attribution(user, us,
-                  // `us >= lastClick`: a cross-batch late PURCHASE older
-                  // than the anchor has no preceding click — a negative
-                  // gap must not satisfy the 24h window
-                  lastClick >= 0 && us >= lastClick &&
-                    us - lastClick <= 86400000000L, v)
-            }
-            if (lastClick >= 0) {
-              state.update(lastClick)
-              if (!isBatch) {
-                // timeouts must sit beyond the current watermark: a late
-                // click already inside the eviction horizon times out at
-                // the next possible instant instead of throwing
-                val horizonMs = lastClick / 1000L + 86400000L + 1L
-                state.setTimeoutTimestamp(
-                  math.max(horizonMs, state.getCurrentWatermarkMs() + 1L))
-              }
-            }
             out.result().iterator
           }
       }
@@ -1000,111 +496,6 @@ object EventStream {
 
   /** Launch helper: run a streaming query over a parquet directory into
     * an in-memory table and block until all available data is processed. */
-  /** One quantile readout row: per closed hour window, the q-th
-    * percentile's bin + midpoint estimate over the model's 1000-bin
-    * value lattice. */
-  case class QuantileRow(w_start: Long, q_pct: Long, n: Long,
-      qbin: Long, est: Double)
-
-  /** Bin-bounds model for [[quantileWindows]]: the historical value
-    * range, trained in batch, broadcast into the live stream — the
-    * psiModel train/serve split applied to quantiles (a stream cannot
-    * bin on global min/max it has not seen yet). */
-  def quantileModel(events: DataFrame): DataFrame = {
-    import events.sparkSession.implicits._
-    events.agg(min($"value").as("v0"), max($"value").as("v1"))
-  }
-
-  /** Windowed p50/p95/p99 monitor — the ops staple (latency/value
-    * percentiles per hour) in the engine's bounded-histogram
-    * discipline: state per open window is ONE 1000-long bin array
-    * (the shard-mergeable histogram IS the sketch; cell-sum is the
-    * merge law), the cut is the exact integer rank rule shared with
-    * the declared log_hourly_quantiles (`hcum ≥ (n·q + 99) div 100`),
-    * and a window emits its 3 rows once the event-time watermark
-    * passes its close (append mode; idle windows flush by timeout
-    * like sessionizeCustom). The SAME code path serves batch — the
-    * declared query, this batch path, and the stream are three-way
-    * parity-tested. Live values outside the trained range clamp into
-    * the edge bins (the model's domain is the contract). */
-  def quantileWindows(events: DataFrame, model: DataFrame,
-      wmDelay: String = "1 hour"): Dataset[QuantileRow] = {
-    import events.sparkSession.implicits._
-    // fail fast on a degenerate model (trained on zero rows → null
-    // bounds): the tuple decode below would otherwise kill the first
-    // micro-batch with an opaque null-in-primitive error (review
-    // finding r12); the model frame is batch-built, so this probe is
-    // one tiny job at query construction, never per-batch
-    val mrow = model.select($"v0", $"v1").head(1)
-    require(mrow.nonEmpty && !mrow(0).isNullAt(0) && !mrow(0).isNullAt(1),
-      "quantileModel is degenerate (trained on zero rows): null bounds")
-    val isBatch = !events.isStreaming
-    val in0 = if (isBatch) events else events.withWatermark("ts", wmDelay)
-    val binned = in0.crossJoin(broadcast(model))
-      .select(
-        expr(graft.queries.EventsLog.hourStartSql).as("ws"),
-        expr(graft.queries.EventsLog.quantileBinSql("int")).as("bin"),
-        $"v0", $"v1", $"ts")
-      .as[(Long, Int, Double, Double, java.sql.Timestamp)]
-    binned.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append(),
-          if (isBatch) GroupStateTimeout.NoTimeout
-          else GroupStateTimeout.EventTimeTimeout) {
-        (ws: Long, rows: Iterator[(Long, Int, Double, Double, java.sql.Timestamp)],
-         state: GroupState[(Double, Double, Array[Long])]) =>
-          if (state.hasTimedOut) {
-            val (v0, v1, h) = state.get
-            state.remove()
-            finalizeQuantiles(ws, v0, v1, h)
-          } else {
-            val first = rows.next()
-            val (v0, v1, h0) = state.getOption
-              .getOrElse((first._3, first._4, new Array[Long](1000)))
-            h0(first._2) += 1
-            rows.foreach(r => h0(r._2) += 1)
-            if (isBatch) {
-              state.remove()
-              finalizeQuantiles(ws, v0, v1, h0)
-            } else {
-              state.update((v0, v1, h0))
-              // flush when the watermark passes the window close
-              state.setTimeoutTimestamp(
-                math.max((ws + 3600000000L) / 1000L,
-                  state.getCurrentWatermarkMs() + 1L))
-              Iterator.empty
-            }
-          }
-      }
-  }
-
-  /** The exact integer quantile cut over a closed window's histogram —
-    * `need = (n·q + 99) div 100`, qbin = first bin whose cumulative
-    * count reaches it; est is the bin midpoint on the model lattice,
-    * HALF_UP-rounded to 6 dp exactly like the declared
-    * log_hourly_quantiles (review finding r12: emitting the unrounded
-    * double made QuantileRow.est differ from the declared table and
-    * pushed a compensating round into the parity test). */
-  private def finalizeQuantiles(ws: Long, v0: Double, v1: Double,
-      h: Array[Long]): Iterator[QuantileRow] = {
-    val n = h.sum
-    if (n == 0L) Iterator.empty
-    else Seq(50L, 95L, 99L).iterator.map { q =>
-      val need = (n * q + 99L) / 100L
-      var cum = 0L
-      var b = 0
-      var qbin = -1
-      while (b < h.length && qbin < 0) {
-        cum += h(b)
-        if (cum >= need) qbin = b
-        b += 1
-      }
-      val est = v0 + (qbin + 0.5) * (v1 - v0) / 1000.0
-      QuantileRow(ws, q, n, qbin.toLong,
-        BigDecimal(est).setScale(6, BigDecimal.RoundingMode.HALF_UP)
-          .toDouble)
-    }
-  }
-
   def runToMemory(spark: SparkSession, srcDir: String,
       transform: DataFrame => DataFrame, queryName: String,
       mode: OutputMode = OutputMode.Append()): Unit = {

@@ -36,39 +36,6 @@ class StreamingSpec extends SparkSpec {
     assert(streamed.toSeq == batch.toSeq)
   }
 
-  test("dp hourly monitor: streaming == batch == declared release on observed hours") {
-    import spark.implicits._
-    EventStream.runToMemory(spark, stagedEvents,
-      EventStream.dpHourlyMonitor, "dp_hourly_stream",
-      OutputMode.Complete())
-    val streamed = spark.table("dp_hourly_stream")
-      .orderBy($"hour_us").collect()
-    val batch = EventStream.dpHourlyMonitor(
-        spark.read.parquet(stagedEvents))
-      .orderBy($"hour_us").collect()
-    assert(streamed.nonEmpty)
-    assert(streamed.toSeq == batch.toSeq)
-    // shared mechanism + shared seed key => every observed hour's row
-    // is BIT-EQUAL to the declared batch release's row (the grid's
-    // noised zero-hours are the batch release's own, absent here)
-    val observed = streamed.map(_.getLong(0)).toSet
-    val declared = graft.SparkEntry.queries("log_dp_hourly")(spark, sf())
-      .select($"hour_us", $"n_released", $"epsilon", $"delta")
-      .collect().filter(r => observed(r.getLong(0)))
-      .sortBy(_.getLong(0))
-    assert(streamed.map(_.toString).toSeq ==
-      declared.map(_.toString).toSeq,
-      "streaming emission must replay the declared release bit-for-bit")
-    // the mechanism is live on the stream too (not a zero-noise path)
-    val rawCounts = spark.read.parquet(stagedEvents)
-      .groupBy(expr("unix_micros(date_trunc('hour', ts))").as("hour_us"))
-      .agg(count(lit(1)).as("n")).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(streamed.exists(r =>
-      r.getLong(1) != math.max(0L, rawCounts(r.getLong(0)))),
-      "no window was perturbed — mechanism inert on the stream")
-  }
-
   test("sliding windows: streaming result == batch == declared log_sliding") {
     import spark.implicits._
     EventStream.runToMemory(spark, stagedEvents,
@@ -206,62 +173,6 @@ class StreamingSpec extends SparkSpec {
     assert(streamed.toSeq == batch.toSeq)
   }
 
-  test("custom flatMapGroupsWithState sessionization == session_window") {
-    import spark.implicits._
-    val ev = spark.read.parquet(stagedEvents)
-    val custom = EventStream.sessionizeCustom(ev, 1800000000L).toDF()
-      .orderBy($"user_id", $"s_start").collect()
-    val native = EventStream.sessionCounts(ev)
-      .orderBy($"user_id", $"s_start").collect()
-    assert(custom.nonEmpty)
-    assert(custom.toSeq == native.toSeq)
-
-    // pin the boundary the staged data may not contain: events EXACTLY
-    // 30 min apart merge (Spark merges when next start <= current end);
-    // one microsecond past the gap splits
-    val exact = Seq(
-      (1L, java.sql.Timestamp.valueOf("2024-01-01 00:00:00")),
-      (1L, java.sql.Timestamp.valueOf("2024-01-01 00:30:00")),
-      (1L, java.sql.Timestamp.valueOf("2024-01-01 01:00:00.000001")))
-      .toDF("user_id", "ts")
-    val nat = EventStream.sessionCounts(exact)
-      .orderBy($"s_start").collect().map(r => (r.getLong(3)))
-    assert(nat.toSeq == Seq(2L, 1L), s"native boundary: ${nat.toSeq}")
-    val cus = EventStream.sessionizeCustom(exact, 1800000000L)
-      .toDF().orderBy($"s_start").collect().map(_.getLong(3))
-    assert(cus.toSeq == Seq(2L, 1L), s"custom boundary: ${cus.toSeq}")
-  }
-
-  test("custom sessionization (streaming): watermark timeout flushes final session") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft_sess_to").toString
-    val t0 = java.sql.Timestamp.valueOf("2024-06-01 10:00:00")
-    val t1 = java.sql.Timestamp.valueOf("2024-06-01 10:10:00")
-    val far = java.sql.Timestamp.valueOf("2024-06-01 20:00:00")
-    Seq((1L, t0), (1L, t1)).toDF("user_id", "ts").write.parquet(s"$dir/b1")
-    val schema = spark.read.parquet(s"$dir/b1").schema
-    val q = EventStream.sessionizeCustom(
-        spark.readStream.schema(schema).parquet(s"$dir/*"), 1800000000L).toDF()
-      .writeStream.outputMode(OutputMode.Append())
-      .format("memory").queryName("sess_timeout").start()
-    try {
-      q.processAllAvailable()
-      // user 1's session is still open: append mode has emitted nothing
-      assert(spark.table("sess_timeout").isEmpty)
-      // an event ~10h later advances the watermark (1h delay) far past
-      // user 1's session end — the event-time timeout must close and
-      // emit that session even though user 1 never sends another event
-      Seq((2L, far)).toDF("user_id", "ts").write.parquet(s"$dir/b2")
-      q.processAllAvailable()
-      val got = spark.table("sess_timeout")
-        .select($"user_id", $"s_start", $"s_end", $"n_events").collect()
-      assert(got.map(r => (r.getLong(0), r.getLong(3))).toSeq == Seq((1L, 2L)),
-        s"expected user 1's closed session, got ${got.toSeq}")
-      assert(got.head.getLong(2) == t1.getTime * 1000L + 1800000000L,
-        "session end must be last event + gap")
-    } finally q.stop()
-  }
-
   test("session type pairs: batch rollup == log_cooccurrence; streaming flush") {
     import spark.implicits._
     // batch parity: rolling the emitted pairs up by type pair must equal
@@ -330,60 +241,6 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
-  test("attributed purchases: rollup reproduces log_attribution; streaming == batch") {
-    import spark.implicits._
-    val batch = EventStream.attributedPurchases(spark.read.parquet(stagedEvents))
-    def rollup(df: org.apache.spark.sql.DataFrame) = df
-      .groupBy(date_format(timestamp_micros($"purchase_us"), "yyyy-MM-dd")
-        .as("day"))
-      .agg(count(lit(1)).as("n_purchases"),
-        sum($"attributed".cast("long")).as("n_attributed"),
-        sum(when($"attributed", $"value").otherwise(0.0)
-          .cast("decimal(18,2)")).cast("double").as("attr_value"))
-      .orderBy($"day")
-    val declared = graft.SparkEntry.queries("log_attribution")(spark, sf())
-      .collect().toSeq
-    assert(rollup(batch.toDF()).collect().toSeq == declared)
-
-    EventStream.runToMemory(spark, stagedEvents,
-      df => EventStream.attributedPurchases(df).toDF(), "attr_stream")
-    val streamed = spark.table("attr_stream")
-      .orderBy($"user_id", $"purchase_us").collect()
-    assert(streamed.nonEmpty)
-    assert(streamed.toSeq ==
-      batch.toDF().orderBy($"user_id", $"purchase_us").collect().toSeq)
-  }
-
-  test("attribution: a late purchase OLDER than the click anchor is not credited") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft_attr_late").toString
-    def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    // batch 1 latches the click anchor at 10:00
-    Seq((1L, ts("2024-06-01 10:00:00"), "click", 0.0, 100L))
-      .toDF("user_id", "ts", "event_type", "value", "event_id")
-      .write.parquet(s"$dir/b1")
-    val schema = spark.read.parquet(s"$dir/b1").schema
-    val q = EventStream.attributedPurchases(
-        spark.readStream.schema(schema).parquet(s"$dir/*")).toDF()
-      .writeStream.outputMode(OutputMode.Append())
-      .format("memory").queryName("attr_late").start()
-    try {
-      q.processAllAvailable()
-      // batch 2: a late purchase at 09:30 — within the 1h watermark, but
-      // BEFORE the anchor: no click preceded it, so it must not be
-      // credited (a negative gap would satisfy the 24h check alone)
-      Seq((1L, ts("2024-06-01 09:30:00"), "purchase", 5.0, 101L))
-        .toDF("user_id", "ts", "event_type", "value", "event_id")
-        .write.parquet(s"$dir/b2")
-      q.processAllAvailable()
-      val got = spark.table("attr_late")
-        .select($"user_id", $"attributed").collect()
-        .map(r => (r.getLong(0), r.getBoolean(1)))
-      assert(got.toSeq == Seq((1L, false)),
-        s"late pre-anchor purchase must be unattributed, got ${got.toSeq}")
-    } finally q.stop()
-  }
-
   test("stream-stream interval self-join == batch join (parity)") {
     import spark.implicits._
     EventStream.runToMemory(spark, stagedEvents,
@@ -397,45 +254,6 @@ class StreamingSpec extends SparkSpec {
       .orderBy($"a_user", $"a_id", $"b_id").collect()
     assert(streamed.nonEmpty)
     assert(streamed.toSeq == batch.toSeq)
-  }
-
-  test("attribution state evicts invisibly once a click's 24h horizon passes") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft_attr_evict").toString
-    def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    // two users hold click state; user 1 also converts within 24h
-    Seq(
-      (1L, ts("2024-06-01 10:00:00"), "click", 0.0, 100L),
-      (1L, ts("2024-06-01 11:00:00"), "purchase", 9.5, 101L),
-      (2L, ts("2024-06-01 10:30:00"), "click", 0.0, 200L))
-      .toDF("user_id", "ts", "event_type", "value", "event_id")
-      .write.parquet(s"$dir/b1")
-    val schema = spark.read.parquet(s"$dir/b1").schema
-    val q = EventStream.attributedPurchases(
-        spark.readStream.schema(schema).parquet(s"$dir/*")).toDF()
-      .writeStream.outputMode(OutputMode.Append())
-      .format("memory").queryName("attr_evict").start()
-    try {
-      q.processAllAvailable()
-      val live = spark.table("attr_evict").collect()
-      assert(live.map(r => (r.getLong(0), r.getBoolean(2))).toSeq ==
-        Seq((1L, true)), s"expected user 1 attributed, got ${live.toSeq}")
-      def stateRows: Long =
-        q.recentProgress.flatMap(_.stateOperators.map(_.numRowsTotal))
-          .lastOption.getOrElse(-1L)
-      assert(stateRows == 2L, s"both clicks held as state, got $stateRows")
-      // three days later: the watermark passes both clicks' 24h horizons
-      // — their state rows must be dropped, and that eviction is
-      // invisible (any future purchase by users 1/2 would be
-      // non-attributed with OR without the state row)
-      Seq((3L, ts("2024-06-04 12:00:00"), "click", 0.0, 300L))
-        .toDF("user_id", "ts", "event_type", "value", "event_id")
-        .write.parquet(s"$dir/b2")
-      q.processAllAvailable()
-      assert(stateRows == 1L,
-        s"users 1-2 evicted, only user 3's click held; got $stateRows")
-      assert(spark.table("attr_evict").count() == 1, "eviction emitted rows")
-    } finally q.stop()
   }
 
   test("running counts: idle user state evicts once the TTL horizon passes") {
@@ -677,52 +495,6 @@ class StreamingSpec extends SparkSpec {
     assert(!hours.contains("2024-06-01 07:00"))
   }
 
-  test("hash reservoir: multi-batch stream converges to the batch sample") {
-    import spark.implicits._
-    val root = Files.createTempDirectory("graft_reservoir").toString
-    val src = s"$root/src"
-    val docs = t(spark, sf(), "documents").select($"source", $"doc_id")
-    // two arrival waves in REVERSE doc order — membership must not care
-    docs.filter($"doc_id" % 2 === 1).write.mode("append").parquet(src)
-    val schema = spark.read.parquet(src).schema
-    val q = DocStream.hashReservoir(
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-          .parquet(src), k = 5).toDF()
-      .writeStream.outputMode(OutputMode.Update())
-      .format("memory").queryName("reservoir_stream").start()
-    try {
-      q.processAllAvailable()
-      docs.filter($"doc_id" % 2 === 0).write.mode("append").parquet(src)
-      q.processAllAvailable()
-    } finally q.stop()
-    // live sample = rows of each source's final version
-    val emitted = spark.table("reservoir_stream")
-    val finalVer = emitted.groupBy($"source".as("s"))
-      .agg(max($"ver").as("v"))
-    val got = emitted.join(finalVer,
-        $"source" === $"s" && $"ver" === $"v")
-      .select($"source", $"doc_id", $"h32")
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-      .toSet
-    // batch truth: the 5 smallest (h32, doc_id) per source
-    val batch = DocStream.hashReservoir(docs, k = 5).collect()
-    val batchFinal = batch.groupBy(_.source).flatMap { case (s, rows) =>
-      val v = rows.map(_.ver).max
-      rows.filter(_.ver == v).map(r => (r.source, r.doc_id, r.h32)).toSeq
-    }.toSet
-    assert(got.nonEmpty && got == batchFinal,
-      s"streaming reservoir != batch (got ${got.size}, want ${batchFinal.size})")
-    // and the batch side equals a plain window-rank replay
-    val replay = docs.select($"source", $"doc_id", expr(
-        "cast(conv(substring(md5(cast(cast(doc_id as string) as binary))," +
-          " 1, 8), 16, 10) as bigint)").as("h32"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-      .groupBy(_._1).flatMap { case (_, rows) =>
-        rows.sortBy(r => (r._3, r._2)).take(5).toSeq
-      }.toSet
-    assert(got == replay, "reservoir != rank-window truth")
-  }
-
   /** Per-shard word truth for the MG monitor tests: (shard -> (word
     * -> exact count)), sharded by the SAME md5 rule as mgHeavy. */
   private def mgTruth(): Map[Int, Map[String, Long]] = {
@@ -952,235 +724,6 @@ class StreamingSpec extends SparkSpec {
     assert(streamed.map(_.getString(1)).distinct.length >= 2)
   }
 
-  test("seasonal anomaly (batch): flags equal the declared query's live hours") {
-    import spark.implicits._
-    val ev = t(spark, sf(), "events")
-    val base = EventStream.seasonalBaseline(ev)
-    val got = EventStream.seasonalAnomaly(ev, base)
-      .collect().map(r => (r.getTimestamp(0).getTime * 1000L,
-        r.getString(1)) -> (r.getLong(2), r.getLong(3))).toMap
-    // the declared query covers the DENSE grid; a stream only emits
-    // windows that saw events, so compare on n > 0 rows
-    val want = graft.SparkEntry.queries("log_anomaly_seasonal")(spark, sf())
-      .filter($"n" > 0L)
-      .collect().map(r => (r.getLong(1), r.getString(0)) ->
-        (r.getLong(2), r.getLong(4))).toMap
-    assert(got.nonEmpty && got == want,
-      s"live-hour flags differ: got ${got.size}, want ${want.size}")
-  }
-
-  test("seasonal anomaly (streaming): windowed flags == batch") {
-    import spark.implicits._
-    val root = Files.createTempDirectory("graft_seasonal").toString
-    val src = s"$root/src"
-    val ev = t(spark, sf(), "events")
-    // stream the fixture in two arbitrary halves (restart-shaped input)
-    ev.filter($"event_id" % 2 === 0).write.mode("append").parquet(src)
-    ev.filter($"event_id" % 2 === 1).write.mode("append").parquet(src)
-    val base = EventStream.seasonalBaseline(ev)
-    val schema = spark.read.parquet(src).schema
-    val q = EventStream.seasonalAnomaly(
-        spark.readStream.schema(schema).parquet(src), base)
-      .writeStream.outputMode(OutputMode.Complete())
-      .format("memory").queryName("seasonal_stream").start()
-    try q.processAllAvailable() finally q.stop()
-    val streamed = spark.table("seasonal_stream")
-      .orderBy($"w_start", $"event_type").collect().toSeq
-    val batch = EventStream.seasonalAnomaly(spark.read.parquet(src), base)
-      .orderBy($"w_start", $"event_type").collect().toSeq
-    assert(streamed.nonEmpty && streamed == batch,
-      s"streaming ${streamed.size} rows != batch ${batch.size}")
-    // the 1.5σ rule must actually fire somewhere on this fixture
-    assert(streamed.exists(_.getLong(3) == 1L),
-      "expected at least one live anomaly flag")
-  }
-
-  test("ewma chart (batch): rows equal the declared log_ewma_chart") {
-    import spark.implicits._
-    val ev = t(spark, sf(), "events")
-    val model = graft.queries.EventsLog.ewmaModel(ev)
-    val got = EventStream.ewmaChart(ev, model).collect()
-      .map(p => (p.event_type, p.hour_us) -> (p.n, p.ewma, p.is_alert))
-      .toMap
-    val want = graft.SparkEntry.queries("log_ewma_chart")(spark, sf())
-      .collect().map(r => (r.getString(0), r.getLong(1)) ->
-        (r.getLong(2), r.getDouble(3), r.getLong(4))).toMap
-    assert(got.nonEmpty && got == want,
-      s"batch-mode monitor ${got.size} rows != declared ${want.size}")
-  }
-
-  test("ewma chart (streaming): finalized hours replay the batch chart") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft_ewma").toString
-    val ev = t(spark, sf(), "events")
-    val b = ev.agg(min(unix_micros($"ts")), max(unix_micros($"ts"))).head()
-    val mid = (b.getLong(0) + b.getLong(1)) / 2
-    ev.filter(unix_micros($"ts") <= mid).write.parquet(s"$dir/b1")
-    val model = graft.queries.EventsLog.ewmaModel(ev)
-    val schema = spark.read.parquet(s"$dir/b1").schema
-    val q = EventStream.ewmaChart(
-        spark.readStream.schema(schema).parquet(s"$dir/*"), model).toDF()
-      .writeStream.outputMode(OutputMode.Update())
-      .format("memory").queryName("ewma_stream").start()
-    try {
-      q.processAllAvailable()
-      // the second half arrives later — state must carry the open hour
-      // and the 8-count ring across micro-batches
-      ev.filter(unix_micros($"ts") > mid).write.parquet(s"$dir/b2")
-      q.processAllAvailable()
-    } finally q.stop()
-    val streamed = spark.table("ewma_stream").collect()
-      .map(r => (r.getString(0), r.getLong(1)) ->
-        (r.getLong(2), r.getDouble(3), r.getLong(4))).toMap
-    val batch = EventStream.ewmaChart(ev, model).collect()
-      .map(p => (p.event_type, p.hour_us) -> (p.n, p.ewma, p.is_alert))
-      .toMap
-    assert(streamed.nonEmpty)
-    // every finalized streamed hour is bit-identical to the batch chart
-    for ((k, v) <- streamed)
-      assert(batch(k) == v, s"$k: streamed point diverges from batch")
-    // coverage: finalization is watermark-driven, and the watermark a
-    // micro-batch SEES lags one batch — so after the two batches every
-    // hour comfortably below the first half's horizon must have closed
-    // for every type (later hours stay pending until the watermark
-    // passes them)
-    val step = 3600000000L
-    val wantBelow = mid - 4 * step
-    for ((k, _) <- batch if k._2 + step <= wantBelow)
-      assert(streamed.contains(k), s"$k: in-watermark hour not closed")
-  }
-
-  test("hourly quantiles: declared == typed batch; streaming == batch") {
-    import spark.implicits._
-    val ev = t(spark, sf(), "events")
-    val model = EventStream.quantileModel(ev)
-    // three-way leg 1: the declared query == the typed batch path
-    // (identical binning, integer cut, and midpoint arithmetic)
-    val declared = graft.SparkEntry.queries("log_hourly_quantiles")(
-        spark, sf())
-      .collect().map(r => (r.getLong(0), r.getLong(1)) ->
-        (r.getLong(2), r.getLong(3), r.getDouble(4))).toMap
-    val batch = EventStream.quantileWindows(ev, model).collect()
-      .map(p => (p.w_start, p.q_pct) -> (p.n, p.qbin, p.est)).toMap
-    assert(batch.nonEmpty && declared == batch,
-      "declared query and typed batch path diverge")
-    // three-way leg 2: streaming finalized windows == batch, state
-    // carried across micro-batches (two halves)
-    val dir = Files.createTempDirectory("graft_quant").toString
-    val b = ev.agg(min(unix_micros($"ts")), max(unix_micros($"ts"))).head()
-    val mid = (b.getLong(0) + b.getLong(1)) / 2
-    ev.filter(unix_micros($"ts") <= mid).write.parquet(s"$dir/b1")
-    val schema = spark.read.parquet(s"$dir/b1").schema
-    val q = EventStream.quantileWindows(
-        spark.readStream.schema(schema).parquet(s"$dir/*"), model).toDF()
-      .writeStream.outputMode(OutputMode.Append())
-      .format("memory").queryName("quant_stream").start()
-    try {
-      q.processAllAvailable()
-      ev.filter(unix_micros($"ts") > mid).write.parquet(s"$dir/b2")
-      q.processAllAvailable()
-    } finally q.stop()
-    val streamed = spark.table("quant_stream").collect()
-      .map(r => (r.getLong(0), r.getLong(1)) ->
-        (r.getLong(2), r.getLong(3), r.getDouble(4))).toMap
-    assert(streamed.nonEmpty)
-    for ((k, v) <- streamed)
-      assert(batch(k) == v, s"$k: streamed quantile diverges from batch")
-    // coverage floor (watermark a micro-batch sees lags one batch);
-    // k._1 is the window start (k._2 is the percentile)
-    val step = 3600000000L
-    for ((k, _) <- batch if k._1 + step <= mid - 4 * step)
-      assert(streamed.contains(k), s"$k: in-watermark hour not closed")
-  }
-
-  test("ewma chart (streaming): event-time timeout flushes an idle " +
-      "type's open hour, bit-identical to the batch point") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft_ewma_to").toString
-    def ts(h: Int) =
-      java.sql.Timestamp.valueOf(f"2024-06-01 $h%02d:30:00")
-    val far = java.sql.Timestamp.valueOf("2024-07-01 00:00:00")
-    val xs = (0 to 9).map(h => ("x", ts(h)))
-    val all = (xs :+ (("y", far))).toDF("event_type", "ts")
-    xs.toDF("event_type", "ts").write.parquet(s"$dir/b1")
-    val model = graft.queries.EventsLog.ewmaModel(all)
-    val schema = spark.read.parquet(s"$dir/b1").schema
-    val q = EventStream.ewmaChart(
-        spark.readStream.schema(schema).parquet(s"$dir/*"), model,
-        idleUs = 3600000000L).toDF()
-      .writeStream.outputMode(OutputMode.Update())
-      .format("memory").queryName("ewma_timeout").start()
-    try {
-      q.processAllAvailable()
-      // the watermark a batch sees lags one batch: nothing can have
-      // closed during the first micro-batch
-      assert(spark.table("ewma_timeout")
-        .filter($"event_type" === "x").isEmpty,
-        "no x hour can close before the watermark moves")
-      // a far-future event advances the watermark a month past x's
-      // horizon — the no-data timeout batch must close hours 8 and 9
-      // (and the zero hours after) even though x never sends again
-      Seq(("y", far)).toDF("event_type", "ts")
-        .write.parquet(s"$dir/b2")
-      q.processAllAvailable()
-    } finally q.stop()
-    val h9 = java.sql.Timestamp.valueOf("2024-06-01 09:00:00")
-      .getTime * 1000L
-    val got = spark.table("ewma_timeout")
-      .filter($"event_type" === "x" && $"hour_us" === h9)
-      .collect().map(r => (r.getLong(2), r.getDouble(3), r.getLong(4)))
-    assert(got.length == 1, "timeout did not flush the open hour")
-    // the flushed point equals the batch twin's row for the same hour
-    val want = EventStream.ewmaChart(all, model).collect()
-      .filter(p => p.event_type == "x" && p.hour_us == h9)
-      .map(p => (p.n, p.ewma, p.is_alert))
-    assert(want.length == 1 && got.head == want.head,
-      s"timeout point ${got.head} != batch point ${want.headOption}")
-  }
-
-  test("ewma chart (streaming): an in-watermark straggler still " +
-      "counts — finalization is watermark-driven, not arrival-driven") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft_ewma_straggle").toString
-    def ts(h: Int, m: Int) =
-      java.sql.Timestamp.valueOf(f"2024-06-01 $h%02d:$m%02d:00")
-    val far = java.sql.Timestamp.valueOf("2024-07-01 00:00:00")
-    val base = (0 to 12).map(h => ("x", ts(h, 30)))
-    val straggler = ("x", ts(11, 45)) // hour 11, arrives AFTER hour 12
-    val all = (base :+ straggler :+ (("y", far)))
-      .toDF("event_type", "ts")
-    base.toDF("event_type", "ts").write.parquet(s"$dir/b1")
-    val model = graft.queries.EventsLog.ewmaModel(all)
-    val schema = spark.read.parquet(s"$dir/b1").schema
-    val q = EventStream.ewmaChart(
-        spark.readStream.schema(schema).parquet(s"$dir/*"), model,
-        idleUs = 3600000000L).toDF()
-      .writeStream.outputMode(OutputMode.Update())
-      .format("memory").queryName("ewma_straggle").start()
-    try {
-      q.processAllAvailable()
-      // watermark after b1 is 11:30; hour 11 is NOT yet closed, so
-      // the straggler at 11:45 must still be merged, not dropped
-      Seq(straggler).toDF("event_type", "ts").write.parquet(s"$dir/b2")
-      q.processAllAvailable()
-      Seq(("y", far)).toDF("event_type", "ts").write.parquet(s"$dir/b3")
-      q.processAllAvailable()
-    } finally q.stop()
-    val h11 = java.sql.Timestamp.valueOf("2024-06-01 11:00:00")
-      .getTime * 1000L
-    val got = spark.table("ewma_straggle")
-      .filter($"event_type" === "x" && $"hour_us" === h11)
-      .collect().map(r => (r.getLong(2), r.getDouble(3), r.getLong(4)))
-    assert(got.length == 1 && got.head._1 == 2L,
-      s"hour-11 count must include the straggler, got $got")
-    // and the closed point is bit-identical to the batch twin's
-    val want = EventStream.ewmaChart(all, model).collect()
-      .filter(p => p.event_type == "x" && p.hour_us == h11)
-      .map(p => (p.n, p.ewma, p.is_alert))
-    assert(want.length == 1 && got.head == want.head,
-      s"straggler point ${got.head} != batch ${want.headOption}")
-  }
-
   test("embed drift (batch): cell histogram equals the declared assignment rollup") {
     import spark.implicits._
     val t0 = java.sql.Timestamp.valueOf("2024-06-01 10:15:00")
@@ -1220,93 +763,6 @@ class StreamingSpec extends SparkSpec {
       s"streaming $streamed != batch $batch")
     // both windows present
     assert(streamed.map(_.getTimestamp(0)).distinct.length == 2)
-  }
-
-  test("band index (batch): owners equal the declared sig table's band minima") {
-    import spark.implicits._
-    val got = DocStream.bandIndex(t(spark, sf(), "documents"))
-      .collect().map(b => (b.band_i, b.band_key) -> b.owner_id).toMap
-    // independent expectation from the DECLARED minhash sig table:
-    // band b = h(2b+1) || h(2b+2), owner = min doc_id per band value
-    val sigs = graft.SparkEntry.queries("dedup_minhash_sigs")(spark, sf())
-      .collect()
-    val want = sigs.flatMap { r =>
-      (0 until 3).map(b => (b, r.getString(1 + 2 * b) +
-        r.getString(2 + 2 * b)) -> r.getLong(0))
-    }.groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).min }
-    assert(got.nonEmpty && got == want,
-      s"band index differs: got ${got.size} entries, want ${want.size}")
-  }
-
-  test("near-dup candidates: collisions are a subset of dedup_lsh_pairs") {
-    import spark.implicits._
-    val docs = t(spark, sf(), "documents")
-    val index = DocStream.bandIndex(docs).toDF()
-    val flagged = DocStream.nearDupCandidates(docs, index)
-      .collect()
-      .map(r => (math.min(r.getLong(0), r.getLong(1)),
-        math.max(r.getLong(0), r.getLong(1)))).toSet
-    val pairs = graft.SparkEntry.queries("dedup_lsh_pairs")(spark, sf())
-      .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
-    assert(flagged.nonEmpty, "fixture has near-dups; collisions expected")
-    assert(flagged.subsetOf(pairs),
-      s"index collisions not in the candidate relation: ${flagged -- pairs}")
-    // exact spec: flagged == every (doc, owner-of-a-shared-band) with
-    // owner != doc, derived independently from the declared sig table
-    val sigs = graft.SparkEntry.queries("dedup_minhash_sigs")(spark, sf())
-      .collect()
-    val bandsByDoc = sigs.map { r =>
-      r.getLong(0) -> (0 until 3).map(b =>
-        (b, r.getString(1 + 2 * b) + r.getString(2 + 2 * b)))
-    }
-    val owner = bandsByDoc.flatMap { case (id, bs) => bs.map(_ -> id) }
-      .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).min }
-    val want = (for {
-      (id, bs) <- bandsByDoc; b <- bs
-      own = owner(b) if own != id
-    } yield (math.min(id, own), math.max(id, own))).toSet
-    assert(flagged == want,
-      s"collisions differ from spec: missing ${want -- flagged}, " +
-        s"extra ${flagged -- want}")
-  }
-
-  test("band index (streaming): first-write wins across batches, restart-safe") {
-    import spark.implicits._
-    val root = Files.createTempDirectory("graft_bandidx").toString
-    val (src, sink, chk) = (s"$root/src", s"$root/sink", s"$root/chk")
-    val t0 = java.sql.Timestamp.valueOf("2024-06-01 10:00:00")
-    val t1 = java.sql.Timestamp.valueOf("2024-06-01 10:05:00")
-    // two docs sharing all 3 bands (identical text) in batch 1 — the min
-    // id owns; batch 2 re-delivers the same content under a higher id
-    // (no new bands) plus a disjoint doc (3 new bands)
-    Seq((7L, "alpha beta gamma delta", t0), (5L, "alpha beta gamma delta", t0))
-      .toDF("doc_id", "text", "ingest_ts").write.mode("append").parquet(src)
-    val schema = spark.read.parquet(src).schema
-    def runOnce(): Unit = {
-      val q = DocStream.bandIndex(
-          spark.readStream.schema(schema).parquet(src))
-        .writeStream.format("parquet")
-        .option("path", sink).option("checkpointLocation", chk)
-        .outputMode(OutputMode.Append()).start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    runOnce()
-    Seq((9L, "alpha beta gamma delta", t1),
-        (8L, "epsilon zeta eta theta", t1))
-      .toDF("doc_id", "text", "ingest_ts").write.mode("append").parquet(src)
-    runOnce()
-    val out = spark.read.parquet(sink)
-      .select($"owner_id").as[Long].collect()
-    // 3 bands owned by 5 (batch-1 min), 3 by 8; 7 and 9 own nothing
-    assert(out.count(_ == 5L) == 3 && out.count(_ == 8L) == 3 &&
-      out.length == 6, s"owners: ${out.toSeq.sorted}")
-    // and the recovered index equals the batch index over the same data
-    val batchIdx = DocStream.bandIndex(spark.read.parquet(src))
-      .collect().map(b => (b.band_i, b.band_key, b.owner_id)).toSet
-    val streamIdx = spark.read.parquet(sink)
-      .as[DocStream.BandOwner].collect()
-      .map(b => (b.band_i, b.band_key, b.owner_id)).toSet
-    assert(streamIdx == batchIdx, "streaming index != batch replay")
   }
 
   test("psi drift (batch): per-window PSI replays from the raw values") {
@@ -1500,51 +956,6 @@ class StreamingSpec extends SparkSpec {
       "duplicate arrival changed the serve row (n_cand inflation)")
   }
 
-  test("bloom guard (batch): eval docs always flag, geometry matches") {
-    import spark.implicits._
-    val docs = t(spark, sf(), "documents")
-    val h = substring(md5($"doc_id".cast("string").cast("binary")), 1, 1)
-    val evalDocs = docs.filter(h.isin("d", "e", "f"))
-    val model = DocStream.evalGramBloom(evalDocs)
-    // the word table is the bounded artifact the stream broadcasts
-    assert(model.count() <= graft.queries.PipelineOps.BloomM / 63 + 1)
-    val got = DocStream.bloomGuard(docs, model).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getBoolean(3)))
-    val evalIds = evalDocs.select($"doc_id").collect()
-      .map(_.getLong(0)).toSet
-    // no false negatives: an eval doc's grams are ALL in the filter
-    got.filter(r => evalIds(r._1) && r._2 > 0).foreach {
-      case (id, ng, nh, flag) =>
-        assert(nh == ng && flag, s"doc $id: eval grams missed ($nh/$ng)")
-    }
-    // and the filter discriminates: not every non-eval doc is a flag
-    val nonEval = got.filter(r => !evalIds(r._1) && r._2 > 0)
-    assert(nonEval.exists(!_._4), "guard flags everything (no FP control)")
-  }
-
-  test("bloom guard (streaming): stateless parity with batch") {
-    import spark.implicits._
-    val root = Files.createTempDirectory("graft_bloomg").toString
-    val src = s"$root/src"
-    val docs = t(spark, sf(), "documents")
-    docs.write.mode("append").parquet(src)
-    val h = substring(md5($"doc_id".cast("string").cast("binary")), 1, 1)
-    val model = DocStream.evalGramBloom(docs.filter(h.isin("d", "e", "f")))
-    val schema = spark.read.parquet(src).schema
-    val q = DocStream.bloomGuard(
-        spark.readStream.schema(schema).parquet(src), model)
-      .writeStream.outputMode(OutputMode.Append())
-      .format("memory").queryName("bloomg_stream").start()
-    try q.processAllAvailable() finally q.stop()
-    val streamed = spark.table("bloomg_stream")
-      .orderBy($"doc_id").collect().toSeq
-    val batch = DocStream.bloomGuard(spark.read.parquet(src), model)
-      .orderBy($"doc_id").collect().toSeq
-    assert(streamed.nonEmpty && streamed == batch,
-      s"streaming ${streamed.size} rows != batch ${batch.size}")
-  }
-
   test("recall canary: low-hit shares replay from the serve rows") {
     import spark.implicits._
     val t0 = java.sql.Timestamp.valueOf("2024-06-01 10:15:00")
@@ -1668,311 +1079,6 @@ class StreamingSpec extends SparkSpec {
       s"streaming ${streamed.size} rows != batch ${batch.size}")
   }
 
-  test("stored-index serve (streaming): windowed top-k == batch == searchTopKStored") {
-    import spark.implicits._
-    // persisted index built once, served by a later "session" (here: a
-    // streaming query that only sees the index DIRECTORY)
-    val idxDir = Files.createTempDirectory("graft_serveidx").toString
-    graft.engine.AnnIndexStore.save(spark, sf(), idxDir)
-    val root = Files.createTempDirectory("graft_serve").toString
-    val src = s"$root/src"
-    val t0 = java.sql.Timestamp.valueOf("2024-06-01 10:10:00")
-    val t1 = java.sql.Timestamp.valueOf("2024-06-01 11:40:00")
-    val all = t(spark, sf(), "embeddings")
-      .select($"vec_id".as("q_id"),
-        $"embedding".cast("array<double>").as("q"))
-    all.filter($"q_id" % 97 === 0).withColumn("ingest_ts", lit(t0))
-      .unionAll(all.filter($"q_id" % 97 === 1)
-        .withColumn("ingest_ts", lit(t1)))
-      .write.mode("append").parquet(src)
-    val schema = spark.read.parquet(src).schema
-    val q = AnnIndexServe.serveTopK(spark, idxDir,
-        spark.readStream.schema(schema).parquet(src), k = 5)
-      .writeStream.outputMode(OutputMode.Complete())
-      .format("memory").queryName("ann_serve_stream").start()
-    try q.processAllAvailable() finally q.stop()
-    val streamed = spark.table("ann_serve_stream")
-      .orderBy($"w_start", $"q_id", $"rank").collect().toSeq
-    val batch = AnnIndexServe.serveTopK(spark, idxDir,
-        spark.read.parquet(src), k = 5)
-      .orderBy($"w_start", $"q_id", $"rank").collect().toSeq
-    assert(streamed.nonEmpty && streamed == batch,
-      s"streaming ${streamed.size} rows != batch ${batch.size}")
-    assert(streamed.map(_.getTimestamp(0)).distinct.length == 2,
-      "both serve windows must be present")
-    // and per query the served rows ARE the batch stored-search rows
-    val w0 = streamed.filter(_.getTimestamp(0)
-        .equals(java.sql.Timestamp.valueOf("2024-06-01 10:00:00")))
-      .map(r => (r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))
-    val stored = graft.engine.AnnIndexStore
-      .searchTopKStored(spark, idxDir, all.filter($"q_id" % 97 === 0), 5)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-      .toSeq
-    assert(w0.sorted == stored.sorted,
-      "streamed window-0 rows != batch searchTopKStored rows")
-  }
-
-  test("stored-index serve straddling a compact stays consistent (no torn read)") {
-    import spark.implicits._
-    // a FRAGMENTED index (base + two append waves), served by a
-    // long-running stream while compact() commits a new snapshot
-    // mid-stream: the stream's static side pinned the pre-compact
-    // snapshot at start, compact leaves those files on disk (vacuum
-    // is deferred by contract), and compaction is row-preserving — so
-    // every batch, before or after the commit, must return exactly
-    // the batch-mode serve rows: either-version-consistent, never a
-    // FileNotFound or a half-compacted mixture (verdict r14 ask #3)
-    val idxDir = Files.createTempDirectory("graft_cptserveidx").toString
-    val emb = t(spark, sf(), "embeddings")
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
-    val baseDir = Files.createTempDirectory("graft_cptserveb").toString
-    emb.filter($"vec_id" % 3 === 0)
-      .select($"vec_id", $"v".as("embedding"))
-      .write.mode("overwrite").parquet(s"$baseDir/embeddings.parquet")
-    graft.engine.AnnIndexStore.save(spark, baseDir, idxDir)
-    graft.engine.AnnIndexStore.append(spark, idxDir,
-      emb.filter($"vec_id" % 3 === 1))
-    graft.engine.AnnIndexStore.append(spark, idxDir,
-      emb.filter($"vec_id" % 3 === 2))
-    assert(graft.engine.AnnIndexStore
-      .cellFileCounts(spark, idxDir).values.max >= 3)
-
-    val root = Files.createTempDirectory("graft_cptserve").toString
-    val src = s"$root/src"
-    val t0 = java.sql.Timestamp.valueOf("2024-06-01 10:10:00")
-    val t1 = java.sql.Timestamp.valueOf("2024-06-01 11:40:00")
-    val all = t(spark, sf(), "embeddings")
-      .select($"vec_id".as("q_id"),
-        $"embedding".cast("array<double>").as("q"))
-    all.filter($"q_id" % 97 === 0).withColumn("ingest_ts", lit(t0))
-      .write.mode("append").parquet(src)
-    val schema = spark.read.parquet(src).schema
-    val q = AnnIndexServe.serveTopK(spark, idxDir,
-        spark.readStream.schema(schema).parquet(src), k = 3)
-      .writeStream.outputMode(OutputMode.Complete())
-      .format("memory").queryName("ann_cpt_stream").start()
-    try {
-      q.processAllAvailable() // wave 1 served on the pre-compact pin
-      // compact commits underneath the running stream
-      assert(graft.engine.AnnIndexStore.compact(spark, idxDir).nonEmpty)
-      // wave 2 arrives and is served across the commit
-      all.filter($"q_id" % 97 === 1).withColumn("ingest_ts", lit(t1))
-        .write.mode("append").parquet(src)
-      q.processAllAvailable()
-    } finally q.stop()
-    val streamed = spark.table("ann_cpt_stream")
-      .orderBy($"w_start", $"q_id", $"rank").collect().toSeq
-    // batch replay over the POST-compact snapshot: compaction is
-    // row-preserving, so either pinned version must produce these rows
-    val batch = AnnIndexServe.serveTopK(spark, idxDir,
-        spark.read.parquet(src), k = 3)
-      .orderBy($"w_start", $"q_id", $"rank").collect().toSeq
-    assert(streamed.nonEmpty && streamed == batch,
-      s"straddling serve: streaming ${streamed.size} rows != batch ${batch.size}")
-    assert(streamed.map(_.getTimestamp(0)).distinct.length == 2,
-      "both serve windows must be present")
-  }
-
-  test("index frag monitor (streaming): == batch; predicts append's landing") {
-    import spark.implicits._
-    // index over the even vectors; the odd ones arrive as two append
-    // waves on the stream
-    val idxDir = Files.createTempDirectory("graft_fragmon_idx").toString
-    val emb = t(spark, sf(), "embeddings")
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
-    val baseDir = Files.createTempDirectory("graft_fragmon_b").toString
-    emb.filter($"vec_id" % 2 === 0)
-      .select($"vec_id", $"v".as("embedding"))
-      .write.mode("overwrite").parquet(s"$baseDir/embeddings.parquet")
-    graft.engine.AnnIndexStore.save(spark, baseDir, idxDir)
-
-    val root = Files.createTempDirectory("graft_fragmon").toString
-    val src = s"$root/src"
-    val t0 = java.sql.Timestamp.valueOf("2024-06-01 10:10:00")
-    val t1 = java.sql.Timestamp.valueOf("2024-06-01 11:40:00")
-    val odd = emb.filter($"vec_id" % 2 === 1)
-    odd.filter($"vec_id" % 4 === 1).withColumn("ingest_ts", lit(t0))
-      .unionAll(odd.filter($"vec_id" % 4 === 3)
-        .withColumn("ingest_ts", lit(t1)))
-      .write.mode("append").parquet(src)
-    val schema = spark.read.parquet(src).schema
-    val q = AnnIndexServe.fragMonitor(spark, idxDir,
-        spark.readStream.schema(schema).parquet(src))
-      .writeStream.outputMode(OutputMode.Complete())
-      .format("memory").queryName("frag_mon_stream").start()
-    try q.processAllAvailable() finally q.stop()
-    val streamed = spark.table("frag_mon_stream")
-      .orderBy($"w_start", $"cell").collect().toSeq
-    val batch = AnnIndexServe.fragMonitor(spark, idxDir,
-        spark.read.parquet(src))
-      .orderBy($"w_start", $"cell").collect().toSeq
-    assert(streamed.nonEmpty && streamed == batch,
-      s"frag monitor: streaming ${streamed.size} != batch ${batch.size}")
-    assert(streamed.map(_.getTimestamp(0)).distinct.size == 2,
-      "both append-wave windows must be present")
-    // a fresh index holds 1 file/cell: a first wave projects 2 —
-    // under the default bound of 3 — so no premature recommendation
-    streamed.foreach { r =>
-      assert(r.getLong(r.fieldIndex("files_after")) == 2L, r.toString)
-      assert(!r.getBoolean(r.fieldIndex("compact_recommended")), r.toString)
-    }
-
-    // the monitor's cell assignment IS append's: commit wave 1 and the
-    // touched-cell set must equal the cells whose file count grew
-    val before = graft.engine.AnnIndexStore.cellFileCounts(spark, idxDir)
-    graft.engine.AnnIndexStore.append(spark, idxDir,
-      odd.filter($"vec_id" % 4 === 1))
-    val after = graft.engine.AnnIndexStore.cellFileCounts(spark, idxDir)
-    val grew = after.collect {
-      case (c, n) if n > before.getOrElse(c, 0) => c }.toSet
-    val touched = spark.read.parquet(src)
-      .filter($"ingest_ts" === lit(t0))
-    val predicted = AnnIndexServe.fragMonitor(spark, idxDir, touched)
-      .collect()
-    // after one committed wave the touched cells hold 2 files, so the
-    // NEXT wave of the same vectors projects 3 -> recommend compact
-    predicted.foreach { r =>
-      assert(r.getLong(r.fieldIndex("files_after")) == 3L, r.toString)
-      assert(r.getBoolean(r.fieldIndex("compact_recommended")), r.toString)
-    }
-    assert(predicted.map(_.getLong(1)).toSet == grew,
-      s"monitor predicted cells ${predicted.map(_.getLong(1)).toSet}; " +
-        s"append landed in $grew")
-  }
-
-  test("qdigest monitor: streaming == batch == independent q-digest replay") {
-    import spark.implicits._
-    EventStream.runToMemory(spark, stagedEvents,
-      df => EventStream.qdigestMonitor(df), "quant_stream",
-      OutputMode.Complete())
-    val streamed = spark.table("quant_stream")
-      .orderBy($"w_start").collect().toSeq
-    val batch = EventStream
-      .qdigestMonitor(spark.read.parquet(stagedEvents))
-      .orderBy($"w_start").collect().toSeq
-    assert(streamed.nonEmpty && streamed == batch,
-      s"quantile monitor: streaming ${streamed.size} != batch ${batch.size}")
-
-    // independent replay: plain-Scala q-digest per hour window over
-    // the same staged rows — the monitor must reproduce it exactly,
-    // self-audit green, nothing clamped on the fixture domain
-    val raw = spark.read.parquet(stagedEvents)
-      .select(date_trunc("hour", $"ts").as("w"), $"value")
-      .collect().map(r => (r.getTimestamp(0), r.getDouble(1)))
-    val expected = raw.groupBy(_._1).map { case (w, rows) =>
-      val e2 = rows.map { case (_, v) =>
-        math.max(0L, math.min(graft.engine.QDigest.U - 1L,
-          math.round(v * 100))).toInt
-      }.toSeq
-      val (dig, n) = graft.engine.QDigest.fromValues(e2.iterator, 1024)
-      def est(q: Long): Double =
-        graft.engine.QDigest.quantile(dig, (n * q + 99L) / 100L) / 100.0
-      w -> ((n, est(50L), est(99L)))
-    }
-    streamed.foreach { r =>
-      val (n, p50, p99) = expected(r.getTimestamp(0))
-      assert(r.getLong(r.fieldIndex("n_events")) == n, r.toString)
-      assert(r.getDouble(r.fieldIndex("p50_est")) == p50, r.toString)
-      assert(r.getDouble(r.fieldIndex("p99_est")) == p99, r.toString)
-      assert(r.getBoolean(r.fieldIndex("within_bound")), r.toString)
-      assert(r.getLong(r.fieldIndex("n_clamped")) == 0L, r.toString)
-    }
-  }
-
-  test("k-anonymity monitor (batch): classes equal an independent rollup") {
-    import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val ev = spark.read.parquet(stagedEvents)
-    val got = EventStream.kAnonymityMonitor(ev)
-      .collect()
-      .map(r => (r.getTimestamp(0), r.getLong(1), r.getString(2),
-        r.getLong(3)) -> (r.getLong(4), r.getBoolean(5))).toMap
-
-    // independent expectation: two-level modal folds via window
-    // functions, the batch-qiProfile discipline restricted per window
-    val base = ev.select(window($"ts", "1 hour")("start").as("ws"),
-      $"user_id", $"event_type", expr("hour(ts) div 6").cast("long").as("hb"))
-    val byType = base.groupBy($"ws", $"user_id", $"event_type")
-      .agg(count(lit(1)).as("c"))
-    val mtype = byType.withColumn("rn", row_number().over(
-        Window.partitionBy($"ws", $"user_id")
-          .orderBy($"c".desc, $"event_type")))
-      .filter($"rn" === 1).select($"ws", $"user_id",
-        $"event_type".as("mtype"))
-    val n = base.groupBy($"ws", $"user_id").agg(count(lit(1)).as("n"))
-      .select($"ws", $"user_id", expr(
-        "cast(case when n < 4 then 0 when n < 16 then 1 when n < 64" +
-          " then 2 when n < 256 then 3 else 4 end as long)").as("vband"))
-    val hband = base.groupBy($"ws", $"user_id", $"hb")
-      .agg(count(lit(1)).as("c"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"ws", $"user_id").orderBy($"c".desc, $"hb")))
-      .filter($"rn" === 1).select($"ws", $"user_id", $"hb".as("hband"))
-    val want = mtype.join(hband, Seq("ws", "user_id"))
-      .join(n, Seq("ws", "user_id"))
-      .groupBy($"ws", $"hband", $"mtype", $"vband")
-      .agg(count(lit(1)).as("n_users"))
-      .collect()
-      .map(r => (r.getTimestamp(0), r.getLong(1), r.getString(2),
-        r.getLong(3)) -> (r.getLong(4), r.getLong(4) >= 5L)).toMap
-    assert(got.nonEmpty && got == want,
-      s"monitor classes diverge: ${got.size} vs ${want.size}")
-    // the monitor is a monitor: the fixture must produce real alerts
-    assert(got.values.exists(!_._2), "expected at least one sub-k alert")
-  }
-
-  test("l-diversity monitor: batch classes match k monitor; streaming == batch") {
-    import spark.implicits._
-    val ev = spark.read.parquet(stagedEvents)
-    val sens = graft.queries.EventsLog.userSpendBand(spark, sf())
-      .localCheckpoint()
-    val got = EventStream.lDiversityMonitor(ev, sens).collect()
-    assert(got.nonEmpty)
-    // class keys and sizes agree with the k monitor (sens covers every
-    // user of the same events fixture, so the inner join drops nobody)
-    val km = EventStream.kAnonymityMonitor(ev).collect()
-      .map(r => (r.getTimestamp(0), r.getLong(1), r.getString(2),
-        r.getLong(3)) -> r.getLong(4)).toMap
-    got.foreach { r =>
-      val key = (r.getTimestamp(0), r.getLong(1), r.getString(2),
-        r.getLong(3))
-      assert(km.get(key).contains(r.getLong(r.fieldIndex("n_users"))),
-        s"class $key disagrees with the k monitor")
-      val ld = r.getLong(r.fieldIndex("l_distinct"))
-      assert(ld >= 1L && ld <= r.getLong(r.fieldIndex("n_users")),
-        s"l_distinct out of range: $r")
-    }
-    assert(got.length == km.size, "monitors must see the same classes")
-
-    // streaming parity on closed windows (sentinel pushes the watermark)
-    val dir = Files.createTempDirectory("graft_ldiv").toString
-    val src = s"$dir/src"
-    t(spark, sf(), "events").select($"ts", $"user_id", $"event_type")
-      .write.mode("append").parquet(src)
-    Seq((java.sql.Timestamp.valueOf("2030-01-01 00:00:00"), 999999L,
-        "view"))
-      .toDF("ts", "user_id", "event_type")
-      .write.mode("append").parquet(src)
-    val schema = spark.read.parquet(src).schema
-    val q = EventStream.lDiversityMonitor(
-        spark.readStream.schema(schema).parquet(src), sens)
-      .writeStream.outputMode(OutputMode.Append())
-      .format("memory").queryName("ldiv_stream").start()
-    try q.processAllAvailable() finally q.stop()
-    val cutoff = java.sql.Timestamp.valueOf("2029-01-01 00:00:00")
-    val streamed = spark.table("ldiv_stream")
-      .orderBy($"w_start", $"hband", $"mtype", $"vband")
-      .collect().toSeq
-    val batch = EventStream
-      .lDiversityMonitor(spark.read.parquet(src), sens)
-      .filter($"w_start" < cutoff)
-      .orderBy($"w_start", $"hband", $"mtype", $"vband")
-      .collect().toSeq
-    assert(streamed.nonEmpty && streamed == batch,
-      s"streaming ${streamed.size} rows != batch ${batch.size}")
-  }
-
   test("stored-tokenizer doc stream: windowed counts == batch artifact encode") {
     import spark.implicits._
     val store = Files.createTempDirectory("graft_bpe_serve").toString
@@ -2013,133 +1119,5 @@ class StreamingSpec extends SparkSpec {
       s"streaming ${streamed.size} != batch ${batch.size}")
     assert(streamed.map(_.getTimestamp(0)).distinct.length == 2,
       "both ingest windows must be present")
-  }
-
-  test("privacy trio monitor: EMD matches an independent replay; streaming == batch") {
-    import spark.implicits._
-    val ev = spark.read.parquet(stagedEvents)
-    val sens = graft.queries.EventsLog.userSpendBand(spark, sf())
-      .localCheckpoint()
-    val globBands = sens.groupBy($"sband").count()
-      .as[(Long, Long)].collect().toSeq.sortBy(_._1)
-    val nn = globBands.map(_._2).sum
-    val bb = globBands.size
-
-    val got = EventStream.privacyTrioMonitor(ev, sens, globBands).collect()
-    assert(got.nonEmpty)
-
-    // class keys/sizes/l_distinct agree with the l monitor (one
-    // aggregator vs two — same classes by construction)
-    val lm = EventStream.lDiversityMonitor(ev, sens).collect()
-      .map(r => (r.getTimestamp(0), r.getLong(1), r.getString(2),
-        r.getLong(3)) -> (r.getLong(4), r.getLong(5))).toMap
-    assert(got.length == lm.size)
-    got.foreach { r =>
-      val key = (r.getTimestamp(0), r.getLong(1), r.getString(2),
-        r.getLong(3))
-      assert(lm.get(key).contains((r.getLong(r.fieldIndex("n_users")),
-        r.getLong(r.fieldIndex("l_distinct")))),
-        s"trio disagrees with l monitor at $key")
-    }
-
-    // EMD: independent plain-Scala replay of the batch arithmetic
-    // over the per-(window, user) profile rows
-    val perUser = ev
-      .join(broadcast(sens), Seq("user_id"))
-      .select(window($"ts", "1 hour")("start").as("ws"), $"user_id",
-        $"event_type", $"sband",
-        expr("hour(ts) div 6").cast("long").as("hb"))
-      .collect()
-      .groupBy(r => (r.getTimestamp(0), r.getLong(1)))
-      .toSeq
-      .map { case ((ws, _), rows) =>
-        val hb = rows.groupBy(_.getLong(4)).view.mapValues(_.size).toSeq
-          .minBy { case (h, c) => (-c, h) }._1
-        val mt = rows.groupBy(_.getString(2)).view.mapValues(_.size).toSeq
-          .minBy { case (t, c) => (-c, t) }._1
-        val n = rows.size
-        val vb = if (n < 4) 0L else if (n < 16) 1L else if (n < 64) 2L
-          else if (n < 256) 3L else 4L
-        ((ws, hb, mt, vb), rows.head.getLong(3))
-      }.toSeq
-    val wantEmd = perUser.groupBy(_._1).map { case (key, members) =>
-      val hist = members.groupBy(_._2).view.mapValues(_.size.toLong).toMap
-      val n = members.size.toLong
-      var cc = 0L; var gc = 0L; var emd = 0L
-      globBands.foreach { case (band, g) =>
-        cc += hist.getOrElse(band, 0L); gc += g
-        emd += math.round(1e6 * math.abs(
-          cc.toDouble / n - gc.toDouble / nn))
-      }
-      key -> (if (bb > 1)
-        BigDecimal(emd.toDouble / 1e6 / (bb - 1))
-          .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-      else 0.0)
-    }
-    got.foreach { r =>
-      val key = (r.getTimestamp(0), r.getLong(1), r.getString(2),
-        r.getLong(3))
-      val e = r.getDouble(r.fieldIndex("emd"))
-      assert(wantEmd.get(key).exists(w => math.abs(w - e) < 5e-5),
-        s"EMD mismatch at $key: got $e want ${wantEmd.get(key)}")
-    }
-
-    // streaming parity on closed windows
-    val dir = Files.createTempDirectory("graft_trio").toString
-    val src = s"$dir/src"
-    t(spark, sf(), "events").select($"ts", $"user_id", $"event_type")
-      .write.mode("append").parquet(src)
-    Seq((java.sql.Timestamp.valueOf("2030-01-01 00:00:00"), 999999L,
-        "view"))
-      .toDF("ts", "user_id", "event_type")
-      .write.mode("append").parquet(src)
-    val schema = spark.read.parquet(src).schema
-    val q = EventStream.privacyTrioMonitor(
-        spark.readStream.schema(schema).parquet(src), sens, globBands)
-      .writeStream.outputMode(OutputMode.Append())
-      .format("memory").queryName("trio_stream").start()
-    try q.processAllAvailable() finally q.stop()
-    val cutoff = java.sql.Timestamp.valueOf("2029-01-01 00:00:00")
-    val streamed = spark.table("trio_stream")
-      .orderBy($"w_start", $"hband", $"mtype", $"vband")
-      .collect().toSeq
-    val batch = EventStream
-      .privacyTrioMonitor(spark.read.parquet(src), sens, globBands)
-      .filter($"w_start" < cutoff)
-      .orderBy($"w_start", $"hband", $"mtype", $"vband")
-      .collect().toSeq
-    assert(streamed.nonEmpty && streamed == batch,
-      s"streaming ${streamed.size} rows != batch ${batch.size}")
-  }
-
-  test("k-anonymity monitor (streaming): append output == batch on closed windows") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft_kanon").toString
-    val src = s"$dir/src"
-    t(spark, sf(), "events")
-      .select($"ts", $"user_id", $"event_type")
-      .write.mode("append").parquet(src)
-    // far-future sentinel: pushes the watermark past every fixture
-    // window so append mode emits them all (its own window stays open)
-    Seq((java.sql.Timestamp.valueOf("2030-01-01 00:00:00"), 999999L,
-        "view"))
-      .toDF("ts", "user_id", "event_type")
-      .write.mode("append").parquet(src)
-    val schema = spark.read.parquet(src).schema
-    val q = EventStream.kAnonymityMonitor(
-        spark.readStream.schema(schema).parquet(src))
-      .writeStream.outputMode(OutputMode.Append())
-      .format("memory").queryName("kanon_stream").start()
-    try q.processAllAvailable() finally q.stop()
-    val cutoff = java.sql.Timestamp.valueOf("2029-01-01 00:00:00")
-    val streamed = spark.table("kanon_stream")
-      .orderBy($"w_start", $"hband", $"mtype", $"vband")
-      .collect().toSeq
-    val batch = EventStream.kAnonymityMonitor(spark.read.parquet(src))
-      .filter($"w_start" < cutoff)
-      .orderBy($"w_start", $"hband", $"mtype", $"vband")
-      .collect().toSeq
-    assert(streamed.nonEmpty && streamed == batch,
-      s"streaming ${streamed.size} rows != batch ${batch.size}")
   }
 }
