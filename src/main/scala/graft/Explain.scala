@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection surface: prints `explain("formatted")` for the named
   * queries (or all). Used to audit pushdown / broadcast / codegen spans.
   *
@@ -15,13 +13,7 @@ object Explain {
     val inventory = SparkEntry.queries ++ RawBuilds.map
     val names = if (args.length > 1) args.tail.toSeq
       else inventory.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
+    val spark = GraftEngine.toolSession()
     spark.sparkContext.setLogLevel("WARN")
     names.foreach { n =>
       println(s"\n========== $n ==========")

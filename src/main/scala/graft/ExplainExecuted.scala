@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Post-execution plan audit: runs each named query to completion and
   * prints the FINAL (AQE-resolved) physical plan plus its parquet-scan
   * count — what actually executed, where `Explain` shows only the
@@ -19,13 +17,7 @@ object ExplainExecuted {
       return
     }
     val sfDir = args.head
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
+    val spark = GraftEngine.toolSession()
     spark.sparkContext.setLogLevel("ERROR")
     for (n <- args.tail) {
       val df = SparkEntry.queries(n)(spark, sfDir)

@@ -38,12 +38,6 @@ class GraftEngine(val spark: SparkSession, warehouse: String) {
   def mapReduce(job: MrJob, files: Seq[String] = Seq.empty): DataFrame =
     MrPipeline.run(spark, MrPipeline.lines(spark, catalog.mapInputs(files)), job)
 
-  /** Run an MrJob over an already-loaded table column. */
-  def mapReduceTable(job: MrJob, df: DataFrame, file: String,
-      idCol: String, textCol: String): DataFrame =
-    MrPipeline.run(spark,
-      MrPipeline.tableLines(df, file, idCol, textCol)(spark), job)
-
   /** A declared query by name (see SparkEntry.queries / README). */
   def query(name: String, sfDir: String): DataFrame =
     SparkEntry.queries(name)(spark, sfDir)
@@ -55,13 +49,21 @@ object GraftEngine {
   def apply(spark: SparkSession, warehouse: String): GraftEngine =
     new GraftEngine(spark, warehouse)
 
+  /** The tool mains' session (Bench, Verify, Smoke, JobCount, Explain,
+    * ExplainExecuted): `local[N]` with N shuffle partitions, N read from
+    * SPARK_GRAFT_CPUS (default 4), so every tool measures under Bench's
+    * settings. */
+  def toolSession(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    session(s"local[$cpus]", cpus)
+  }
+
   /** Session factory with the graft extensions + recommended local conf. */
   def session(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession =
     SparkSession.builder()
       .master(master)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import java.util.concurrent.atomic.AtomicLong
 
 /** Scheduler-overhead audit (r17): runs each named query to completion
@@ -20,14 +19,7 @@ object JobCount {
       return
     }
     val sfDir = args.head
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
+    val spark = GraftEngine.toolSession()
     spark.sparkContext.setLogLevel("ERROR")
     val jobs = new AtomicLong; val stages = new AtomicLong; val tasks = new AtomicLong
     spark.sparkContext.addSparkListener(new SparkListener {

@@ -46,13 +46,6 @@ object Layout {
       .saveAsTable(table) // managed: lives under spark.sql.warehouse.dir
   }
 
-  /** Join two same-bucketed tables on their bucket key — plans
-    * exchange-free when the bucketing matches. */
-  def bucketedJoin(spark: SparkSession, left: String, right: String,
-      leftKey: String, rightKey: String): DataFrame =
-    spark.table(left).join(spark.table(right),
-      spark.table(left)(leftKey) === spark.table(right)(rightKey))
-
   /** 8-bit → 16-bit zero-gap bit spread (0bABCDEFGH → 0b0A0B0C0D0E0F0G0H)
     * — the classic two-magic-masks Morton step, built from codegen'd
     * bitwise columns only. */

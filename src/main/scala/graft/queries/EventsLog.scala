@@ -101,29 +101,6 @@ object EventsLog {
       .agg(array_sort(collect_list(struct($"h", $"n"))).as("a"))
   }
 
-  /** The 10-bin value-bin rule shared by the declared log_psi_drift
-    * and the streaming EventStream.psiModel/psiDrift monitor (one
-    * definition — the monitor can never bin differently from the
-    * batch audit). Expects columns `value`, `v0`, `v1`. Clamped on
-    * BOTH ends: the batch audit computes bounds globally so only the
-    * top clamp can fire there, but the streaming monitor serves LIVE
-    * values against a model trained on history — a value below the
-    * training min (exactly the downward drift the monitor exists to
-    * catch) must land in bin 0, not in a negative bin that no
-    * conditional sum counts. */
-  private[graft] def valueBin: org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{col, floor, greatest, least, lit, when}
-    when(col("v1") === col("v0"), 0L).otherwise(
-      greatest(lit(0L), least(lit(9L),
-        floor(((col("value") - col("v0")) * 10.0)
-          / (col("v1") - col("v0"))))))
-  }
-
-  /** One e10-quantized PSI term — `(p2 − p1)·ln(p2/p1)` as an exact
-    * BIGINT, shared by the batch fold and the streaming monitor. */
-  private[graft] def psiTermE10(p2: String, p1: String): String =
-    s"cast(round((($p2 - $p1) * ln($p2 / $p1)) * 1e10) as bigint)"
-
   /** Deterministic 50/50 experiment assignment — first md5 hex digit
     * of the user id (one definition, shared by log_ab_metrics and
     * log_ab_cuped so the two A/B readouts can never disagree on who
@@ -1833,6 +1810,12 @@ object EventsLog {
         " / (n_early + 10))"
       val p2 = "(cast(coalesce(m[b].c2, 0L) + 1 as double)" +
         " / (n_late + 10))"
+      // 10 value bins over the global [v0, v1], clamped on both ends
+      // like the oracle's GREATEST(0, LEAST(9, …)); the bounds come from
+      // the same scan, so only the top clamp can fire
+      val valueBin = when($"v1" === $"v0", 0L).otherwise(
+        greatest(lit(0L), least(lit(9L),
+          floor((($"value" - $"v0") * 10.0) / ($"v1" - $"v0")))))
       ev.crossJoin(broadcast(bounds))
         .select($"event_type",
           when($"us" * 2 < $"us0" + $"us1", 0L).otherwise(1L)
@@ -1847,7 +1830,8 @@ object EventsLog {
             struct($"bin", struct($"c1", $"c2")))).as("m"))
         .select($"event_type", $"n_early", $"n_late",
           expr(s"""aggregate(sequence(0L, 9L), 0L, (acc, b) ->
-            acc + ${psiTermE10(p2, p1)})""").as("psi_e10"))
+            acc + cast(round((($p2 - $p1) * ln($p2 / $p1)) * 1e10)
+              as bigint))""").as("psi_e10"))
         .select($"event_type", $"n_early", $"n_late",
           round($"psi_e10".cast("double") / 1e10, 4).as("psi"),
           ($"psi_e10" > 1000000000L).as("drifted"))

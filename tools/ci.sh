@@ -16,11 +16,17 @@ echo "== compile + test =="
 # reports of suites that no longer exist would linger in the table
 rm -rf target/test-reports
 test_status=0
+# the aggregate cpu line of /proc/stat around the test phase: its steal
+# column is time the hypervisor gave to other guests, so a slow table on
+# a noisy host shows up as steal rather than as a regression
+cpu_before=$(head -1 /proc/stat)
 sbt -batch test || test_status=$?
+cpu_after=$(head -1 /proc/stat)
 echo "== per-suite test time =="
 # one row per suite report, slowest first; failures counts errors too
-python3 - <<'EOF'
+CPU_BEFORE="$cpu_before" CPU_AFTER="$cpu_after" python3 - <<'EOF'
 import glob
+import os
 import xml.etree.ElementTree as ET
 
 rows = []
@@ -36,6 +42,14 @@ width = max([len("suite")] + [len(r[0]) for r in rows])
 print(f"{'suite':<{width}} {'tests':>6} {'failures':>8} {'seconds':>9}")
 for name, tests, failures, seconds in rows:
     print(f"{name:<{width}} {tests:>6} {failures:>8} {seconds:>9.1f}")
+
+# fields after "cpu": user nice system idle iowait irq softirq steal
+# (guest time is already counted in user and nice)
+before, after = ([int(v) for v in os.environ[k].split()[1:9]]
+                 for k in ("CPU_BEFORE", "CPU_AFTER"))
+delta = [a - b for a, b in zip(after, before)]
+print(f"host steal: {100.0 * delta[7] / max(1, sum(delta)):.1f} % of CPU "
+      "time over the test phase")
 EOF
 [ "$test_status" -eq 0 ] || exit "$test_status"
 echo "== smoke (t1) =="
