@@ -1,8 +1,15 @@
 package graft.engine
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference,
+  BoundReference, Expression, Predicate}
+import org.apache.spark.sql.execution.datasources.{FileIndex,
+  HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Persistable ANN index artifacts — the missing production step
   * between "build an index in-session" (the FrameMemo surface the
@@ -46,11 +53,13 @@ import org.apache.spark.sql.functions._
   *    manifest write is the COMMIT POINT: a torn write fails the JSON
   *    parse loudly at the next load — never a silently wrong index.
   *
-  * `load` resolves the current snapshot's file list (metadata-only —
-  * no data read); pass `verify = true` for the integrity pass, which
-  * sums parquet FOOTER row counts of exactly the snapshot's files
-  * against the manifest (a truncated cells dir fails there, not at
-  * query time).
+  * `load` resolves the current snapshot's file list and is
+  * metadata-only: it reads no data and runs no Spark job, because the
+  * snapshot's list IS the scan's file index (no re-listing, and the
+  * fixed schema is never inferred). Pass `verify = true` for the
+  * integrity pass, which sums parquet FOOTER row counts of exactly the
+  * snapshot's files against the manifest (a truncated cells dir fails
+  * there, not at query time).
   *
   * `searchTopK` is the serving path over a fresh in-session frame;
   * [[searchTopKStored]] serves against the persisted artifact using
@@ -410,41 +419,98 @@ object AnnIndexStore {
       }.sum
   }
 
-  /** The (vec_id, v, cell2, cell) schema of a cells read — for the
-    * schema-preserving empty frame when a snapshot holds no files
-    * (possible only after forgetting every row). */
-  private def emptyCells(spark: SparkSession): DataFrame = {
-    import org.apache.spark.sql.types._
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(
-        StructField("vec_id", LongType),
-        StructField("v", ArrayType(DoubleType)),
-        StructField("cell2", LongType),
-        StructField("cell", LongType))))
+  /** The data columns of every cells file, fixed by [[save]] and the
+    * write step every mutation shares — so a read never infers them
+    * with a Spark job. `cell` is not stored in the file: the `cell=<v>`
+    * directory of each file names it. */
+  private val cellsDataSchema = StructType(Seq(
+    StructField("vec_id", LongType),
+    StructField("v", ArrayType(DoubleType)),
+    StructField("cell2", LongType)))
+  private val cellSchema = StructType(Seq(StructField("cell", LongType)))
+
+  /** The codebook's columns (cent_id, c, scell), fixed by [[save]]. */
+  private val quantizerSchema = StructType(Seq(
+    StructField("cent_id", LongType),
+    StructField("c", ArrayType(DoubleType)),
+    StructField("scell", LongType)))
+
+  /** The file index of one pinned snapshot: its files grouped by the
+    * cell their `cell=<v>` directory names. The snapshot already IS the
+    * listing, so nothing is listed again. `listFiles` keeps only the
+    * cells the partition filters accept, as Spark's
+    * PartitioningAwareFileIndex does — which is required, not just
+    * cheaper: Spark does not re-check partition filters after the
+    * scan. Equal when the file sets are (files are immutable once
+    * committed), so two reads of one snapshot plan as the same
+    * relation — as two InMemoryFileIndex reads did. */
+  private final class SnapshotFileIndex(parts: Seq[PartitionDirectory])
+      extends FileIndex {
+    private val statuses = parts.flatMap(_.files)
+    override val rootPaths: Seq[Path] = statuses.map(_.getPath)
+    override def partitionSchema: StructType = cellSchema
+    override def listFiles(partitionFilters: Seq[Expression],
+        dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+      val onCell = partitionFilters.filter(
+        _.references.forall(_.name == "cell"))
+      if (onCell.isEmpty) parts
+      else {
+        val keep = Predicate.createInterpreted(onCell.reduce(And).transform {
+          case a: AttributeReference => BoundReference(0, LongType, nullable = true)
+        })
+        parts.filter(p => keep.eval(p.values))
+      }
+    }
+    override def inputFiles: Array[String] = rootPaths.map(_.toString).toArray
+    override def refresh(): Unit = ()
+    override val sizeInBytes: Long = statuses.map(_.getLen).sum
+    override def equals(o: Any): Boolean = o match {
+      case s: SnapshotFileIndex => rootPaths.toSet == s.rootPaths.toSet
+      case _ => false
+    }
+    override def hashCode(): Int = rootPaths.toSet.hashCode()
   }
 
   /** A frame over an explicit committed file list — the PINNED read:
     * the file set is fixed here, so later compacts/appends (which only
     * add files and bump the manifest) cannot change what this frame
-    * returns. basePath recovers the `cell` partition column, and
-    * filters on it still prune to matching files at the scan. */
+    * returns. Metadata-only: the files are stat'ed on the driver (in
+    * parallel, like [[footerRowCount]]; a missing one fails here, not
+    * at query time) and no Spark job runs before an action. Filters on
+    * `cell` still prune to matching files at the scan. */
   private[graft] def readFiles(spark: SparkSession, dir: String,
-      files: Seq[String]): DataFrame =
-    if (files.isEmpty) emptyCells(spark)
-    else spark.read.option("basePath", s"$dir/cells")
-      .parquet(files.map(f => s"$dir/$f"): _*)
-      // partition-column type inference reads `cell=<v>` back as int;
-      // restore the build-side long so loaded and fresh frames agree
-      .withColumn("cell", col("cell").cast("long"))
+      files: Seq[String]): DataFrame = {
+    val fs = new Path(dir).getFileSystem(hconf(spark))
+    import scala.collection.parallel.CollectionConverters._
+    val stats = files.toArray.par.map { f =>
+      val p = fs.makeQualified(new Path(dir, f))
+      val cell = cellOfFile(f).getOrElse(throw new IllegalStateException(
+        s"ANN index at $dir: snapshot file $f is not under a cell=<v> dir"))
+      try (cell, fs.getFileStatus(p))
+      catch { case _: java.io.FileNotFoundException =>
+        throw new AnalysisException("PATH_NOT_FOUND",
+          Map("path" -> p.toString))
+      }
+    }.seq
+    // a zero-byte file holds no rows; Spark's own file index skips it too
+    val parts = stats.filter(_._2.getLen > 0).groupBy(_._1).toSeq
+      .sortBy(_._1).map { case (cell, fss) =>
+        PartitionDirectory(InternalRow(cell), fss.map(_._2).toArray)
+      }
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    session.baseRelationToDataFrame(HadoopFsRelation(
+      new SnapshotFileIndex(parts), cellSchema, cellsDataSchema,
+      bucketSpec = None, new ParquetFileFormat, Map.empty)(session))
+  }
 
   /** Load the persisted assignment, PINNED to the current snapshot:
     * the returned frame keeps serving this snapshot's files even if a
     * compact commits underneath it (the files stay on disk until
     * [[vacuum]]). Metadata-only by default (manifest + snapshot
-    * resolution); `verify = true` additionally checks the snapshot
-    * files' parquet-footer row count against the manifest — a
-    * partially-deleted cells dir fails there, not at query time —
-    * still without reading any column data. */
+    * resolution + a stat of each file, no Spark job); `verify = true`
+    * additionally checks the snapshot files' parquet-footer row count
+    * against the manifest — a partially-deleted cells dir fails there,
+    * not at query time — still without reading any column data. */
   def load(spark: SparkSession, dir: String,
       verify: Boolean = false): DataFrame = {
     val m = manifest(spark, dir)
@@ -458,9 +524,10 @@ object AnnIndexStore {
     readFiles(spark, dir, snap.files)
   }
 
-  /** The persisted codebook (cent_id, c, scell). */
+  /** The persisted codebook (cent_id, c, scell), read with its fixed
+    * schema: no schema-inference job. */
   def quantizer(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/quantizer")
+    spark.read.schema(quantizerSchema).parquet(s"$dir/quantizer")
 
   /** The two broadcastable quantizer frames the probe fold needs —
     * `supers` (one row: the kk2 super-centroids) and `groups` (kk2

@@ -55,8 +55,27 @@ object LogAnalyzerJob extends MrJob {
     Some((crawler, domain, url))
   }
 
+  /** `s.split("\\s+").filter(_.nonEmpty)` without a regex: splits on
+    * exactly Java's `\s` set (space, \t, \n, \x0B, \f, \r) — not
+    * `Character.isWhitespace`, which also takes U+001C..U+001F and the
+    * Unicode space, line and paragraph separators (U+2028, …). */
+  private[engine] def splitWs(s: String): Array[String] = {
+    val out = mutable.ArrayBuffer.empty[String]
+    var start = -1
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (c == ' ' || (c >= '\t' && c <= '\r')) {
+        if (start >= 0) { out += s.substring(start, i); start = -1 }
+      } else if (start < 0) start = i
+      i += 1
+    }
+    if (start >= 0) out += s.substring(start)
+    out.toArray
+  }
+
   override def fMap(file: String, lineNo: Long, line: String): Iterator[(String, String)] =
-    normalize(line.split("\\s+").filter(_.nonEmpty)) match {
+    normalize(splitWs(line)) match {
       case Some((crawler, domain, url)) if url.nonEmpty =>
         Iterator((s"$crawler $domain $url", "1"))
       case Some((crawler, domain, _)) =>
@@ -72,7 +91,7 @@ object LogAnalyzerJob extends MrJob {
     partition.foreach { case (key, value) =>
       // unparsable values skipped, log_analyzer.go:69-72
       value.trim.toLongOption.foreach { v =>
-        val ks = key.split("\\s+").filter(_.nonEmpty)
+        val ks = splitWs(key)
         if (ks.length >= 2) {
           crawlerMap(ks(0)) += v
           domainMap(ks(1)) += v

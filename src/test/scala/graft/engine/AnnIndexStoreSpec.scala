@@ -574,4 +574,82 @@ class AnnIndexStoreSpec extends SparkSpec {
     }
     assert(e2.getMessage.contains("manifest says"), e2.getMessage)
   }
+
+  test("a pinned read builds from the snapshot alone: no Spark job, same rows, cell pruning") {
+    import spark.implicits._
+    val d = java.nio.file.Files
+      .createTempDirectory("graft_annidx_meta").toString
+    AnnIndexStore.save(spark, sf(), d)
+    // append waves until the snapshot crosses Spark's parallel-listing
+    // threshold (32 paths), where a path-list read would list in a job
+    val emb = graft.Tables.t(spark, sf(), "embeddings")
+      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
+    var wave = 1L
+    while (AnnIndexStore.liveFiles(spark, d).size <= 32 && wave <= 8) {
+      AnnIndexStore.append(spark, d, emb.filter($"vec_id" % 50 === wave)
+        .select(($"vec_id" + wave * 1000000L).as("vec_id"), $"v"))
+      wave += 1
+    }
+    val files = AnnIndexStore.liveFiles(spark, d)
+    assert(files.size > 32, s"only ${files.size} live files")
+    val m = AnnIndexStore.manifest(spark, d)
+
+    // count the jobs that start while the frames are built; a marker
+    // job after them proves the listener has seen every earlier start
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val tag = "pinned-read-marker"
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(p =>
+            p.getProperty("spark.job.description") == tag)) marker.countDown()
+        else jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val (loaded, pinned, q) =
+      try {
+        val built = (AnnIndexStore.load(spark, d),
+          AnnIndexStore.loadSnapshot(spark, d, m.snapshot_id),
+          AnnIndexStore.quantizer(spark, d))
+        spark.sparkContext.setJobDescription(tag)
+        spark.sparkContext.parallelize(Seq(1), 1).count()
+        assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+        built
+      } finally {
+        spark.sparkContext.setJobDescription(null)
+        spark.sparkContext.removeSparkListener(listener)
+      }
+    assert(jobs.get == 0,
+      s"building load/loadSnapshot/quantizer ran ${jobs.get} Spark jobs")
+
+    // the same rows and schema as a path-list read of the same files
+    val byPaths = spark.read.option("basePath", s"$d/cells")
+      .parquet(files.map(f => s"$d/$f"): _*)
+      .withColumn("cell", $"cell".cast("long"))
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.mkString("|")).sorted.toSeq
+    val want = rows(byPaths)
+    assert(loaded.schema == byPaths.schema && pinned.schema == byPaths.schema)
+    assert(rows(loaded) == want && rows(pinned) == want)
+    assert(loaded.count() == m.n_vectors)
+    assert(q.schema == spark.read.parquet(s"$d/quantizer").schema)
+
+    // a filter on cell scans exactly that cell's snapshot files
+    val c = files.groupBy(f => f.split('/')(1)).maxBy(_._2.size)._1
+      .stripPrefix("cell=").toLong
+    val cellFiles = files.count(_.startsWith(s"cells/cell=$c/"))
+    assert(cellFiles > 1, s"cell $c holds $cellFiles files")
+    val probe = AnnIndexStore.load(spark, d).filter($"cell" === c)
+    assert(rows(probe) == rows(byPaths.filter($"cell" === c)))
+    val helper = new org.apache.spark.sql.execution.adaptive
+      .AdaptiveSparkPlanHelper {}
+    val scans = helper.collect(probe.queryExecution.executedPlan) {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+    }
+    assert(scans.size == 1 &&
+      scans.head.metrics("numFiles").value == cellFiles,
+      s"cell $c: scanned ${scans.map(_.metrics("numFiles").value)} " +
+        s"files, the snapshot holds $cellFiles")
+  }
 }

@@ -149,6 +149,19 @@ object EngineProps extends Properties("engine") {
       WordCountJob.fMap("f", 0, line).toList == wcFMapRef(line)
     }
 
+  // log_analyzer tokenizes map lines and reduce keys on the same \s set
+  private val logLineGen: Gen[String] = Gen.listOf(Gen.frequency(
+    4 -> Gen.oneOf("a", "GoogleBot", "http://www.x.y/p?q", "1.2.3.4:80"),
+    3 -> Gen.nonEmptyListOf(
+      Gen.oneOf(" ", "\t", "\n", "\u000b", "\f", "\r")).map(_.mkString),
+    2 -> Gen.oneOf("\u00a0", "\u001c", "\u0085", "\u2028"))).map(_.mkString)
+
+  property("log splitWs == split on regex \\s+, empty tokens dropped") =
+    forAll(logLineGen) { line =>
+      LogAnalyzerJob.splitWs(line).toList ==
+        line.split("\\s+").filter(_.nonEmpty).toList
+    }
+
   // BPE over ARBITRARY unicode words and arbitrary learned merge
   // tables (round 13) — the fixture spec pins specific corpora; these
   // laws must hold for any input, including surrogate-pair emoji and

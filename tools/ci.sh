@@ -23,7 +23,9 @@ cpu_before=$(head -1 /proc/stat)
 sbt -batch test || test_status=$?
 cpu_after=$(head -1 /proc/stat)
 echo "== per-suite test time =="
-# one row per suite report, slowest first; failures counts errors too
+# one row per suite report, slowest first; failures counts errors too.
+# sbt's reports of the ScalaCheck suites carry small negative times, so
+# each suite's seconds are clamped at 0 before they are shown or summed
 CPU_BEFORE="$cpu_before" CPU_AFTER="$cpu_after" python3 - <<'EOF'
 import glob
 import os
@@ -34,7 +36,7 @@ for path in glob.glob("target/test-reports/*.xml"):
     suite = ET.parse(path).getroot()
     rows.append((suite.get("name"), int(suite.get("tests", 0)),
                  int(suite.get("failures", 0)) + int(suite.get("errors", 0)),
-                 float(suite.get("time", 0))))
+                 max(0.0, float(suite.get("time", 0)))))
 rows.sort(key=lambda r: -r[3])
 rows.append(("TOTAL", sum(r[1] for r in rows), sum(r[2] for r in rows),
              sum(r[3] for r in rows)))
