@@ -83,7 +83,7 @@ class Catalog(spark: SparkSession, warehouse: String) {
     val tmp = new Path(warehouse,
       s".tmp.$name.${java.util.UUID.randomUUID().toString.take(8)}")
     val src = new Path(local)
-    val localFs = src.getFileSystem(new Configuration())
+    val localFs = src.getFileSystem(conf)
     val in = localFs.open(src)
     try {
       // explicit create so the block size is honored (copyFromLocalFile
@@ -346,7 +346,7 @@ class Catalog(spark: SparkSession, warehouse: String) {
     * (cl/dfs_actions.go:305-309). */
   def retrieve(name: String, localOut: String): Unit = {
     val out = new Path(localOut)
-    val localFs = out.getFileSystem(new Configuration())
+    val localFs = out.getFileSystem(conf)
     if (localFs.exists(out))
       throw new IllegalArgumentException(s"local file exists: $localOut")
     fs.copyToLocalFile(target(name), out)

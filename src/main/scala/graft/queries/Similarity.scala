@@ -203,8 +203,7 @@ object Similarity {
           "n_before", "n_after", "codebook_stale")
     val ids = victims.map(_._1)
     val m0 = AnnIndexStore.manifest(s, dir)
-    val (supers, groups) =
-      AnnIndexStore.quantizerFrames(AnnIndexStore.quantizer(s, dir))
+    val (supers, groups) = AnnIndexStore.storedCodebook(s, dir, m0)
     val cells = AnnIndexStore.probeCells(s, victims.toDF("q_id", "q"),
       supers, groups, 1).select($"cell").as[Long].collect().distinct
     val held = AnnIndexStore.load(s, dir)
@@ -307,13 +306,9 @@ object Similarity {
     // slowest file (same discipline as AnnIndexStore.footerRowCount)
     val srcP = fs.makeQualified(new org.apache.hadoop.fs.Path(src))
     val prefix = srcP.toString + "/"
-    val files = scala.collection.mutable.ArrayBuffer
-      .empty[org.apache.hadoop.fs.Path]
-    val it = fs.listFiles(srcP, true)
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.isFile) files += st.getPath
-    }
+    // the whole tree, `_SUCCESS` included, without a fork per file
+    val files = graft.engine.AnnIndexStore
+      .walkFiles(fs, srcP, skipHidden = false).map(_.getPath)
     import scala.collection.parallel.CollectionConverters._
     files.toArray.par.foreach { f =>
       val rel = f.toString.stripPrefix(prefix)
@@ -2117,8 +2112,8 @@ object Similarity {
         // checkpointed panel is bounded: |panel| × nprobe rows. Each
         // serve still ranks against ITS OWN snapshot-pinned load, which
         // is exactly what the bit-equality audit states.
-        val (supers, groups) = graft.engine.AnnIndexStore
-          .quantizerFrames(graft.engine.AnnIndexStore.quantizer(s, dir))
+        val (supers, groups) =
+          graft.engine.AnnIndexStore.storedCodebook(s, dir, m1)
         val probed = graft.engine.AnnIndexStore
           .probeCells(s, q3, supers, groups, nprobe = 2).localCheckpoint()
         val before = graft.engine.AnnIndexStore

@@ -41,6 +41,35 @@ class AnnIndexStoreSpec extends SparkSpec {
       .take(k).map(_._2)
   }
 
+  /** Runs `body` and returns the job description of every Spark job
+    * that started meanwhile (null when a job had none). A marker job
+    * run afterwards proves the listener has seen every earlier start. */
+  private def jobsDuring[T](body: => T): (T, Seq[String]) = {
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val tag = "jobs-during-marker"
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val d = Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+        if (d.contains(tag)) marker.countDown() else descs.add(d)
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      val prev = sc.getLocalProperty("spark.job.description")
+      sc.setJobDescription(tag)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("spark.job.description", prev)
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      import scala.jdk.CollectionConverters._
+      (out, descs.asScala.toSeq.map(_.orNull))
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("manifest records the real geometry") {
     val m = AnnIndexStore.manifest(spark, dir)
     assert(m.version == AnnIndexStore.Version)
@@ -651,5 +680,98 @@ class AnnIndexStoreSpec extends SparkSpec {
       scans.head.metrics("numFiles").value == cellFiles,
       s"cell $c: scanned ${scans.map(_.metrics("numFiles").value)} " +
         s"files, the snapshot holds $cellFiles")
+
+    // the codebook frames searchTopKStored and append probe with fold
+    // on the driver: building them, or the whole serve, starts no job
+    val panel = queries3
+    val (_, codebookJobs) =
+      jobsDuring(AnnIndexStore.storedCodebook(spark, d, m))
+    assert(codebookJobs.isEmpty,
+      s"building the codebook frames ran ${codebookJobs.size} Spark jobs")
+    val (serve, serveJobs) =
+      jobsDuring(AnnIndexStore.searchTopKStored(spark, d, panel, k = 5))
+    assert(serveJobs.isEmpty,
+      s"building a stored serve ran ${serveJobs.size} Spark jobs")
+    // and running it scans the cells and the panel, never the codebook
+    assert(serve.collect().nonEmpty)
+    val scanned = helper.collect(serve.queryExecution.executedPlan) {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+        s.relation.location.rootPaths.map(_.toString)
+    }.flatten
+    assert(scanned.exists(_.contains("/cells/")) &&
+      !scanned.exists(_.contains("/quantizer")), scanned)
+  }
+
+  test("the driver-read codebook equals the stored one and folds like SQL") {
+    import spark.implicits._
+    val m = AnnIndexStore.manifest(spark, dir)
+    val rows = AnnIndexStore.codebookRows(spark, dir, m.kk)
+    val q = AnnIndexStore.quantizer(spark, dir)
+    assert(rows.nonEmpty && rows.size <= m.kk)
+    assert(rows.sortBy(_.getLong(0)) == q.collect().toSeq.sortBy(_.getLong(0)))
+    // the local frames equal the SQL collect_list fold over the codebook
+    val sqlSupers = q.filter($"scell" === $"cent_id")
+      .select($"cent_id".as("s_id"), $"c")
+      .agg(expr("array_sort(collect_list(named_struct(" +
+        "'s_id', s_id, 'c', c)))").as("supers"))
+    val sqlGroups = q.groupBy($"scell")
+      .agg(expr("array_sort(collect_list(named_struct(" +
+        "'cent_id', cent_id, 'c', c)))").as("garr"))
+    val (supers, groups) = AnnIndexStore.codebookFrames(spark, rows)
+    assert(supers.schema == sqlSupers.schema)
+    assert(groups.schema == sqlGroups.schema)
+    assert(supers.collect().toSeq == sqlSupers.collect().toSeq)
+    assert(groups.collect().toSeq.sortBy(_.getLong(0)) ==
+      sqlGroups.collect().toSeq.sortBy(_.getLong(0)))
+  }
+
+  test("a codebook holding more than kk rows fails before its rows are read") {
+    val m = AnnIndexStore.manifest(spark, dir)
+    val n = AnnIndexStore.codebookRows(spark, dir, m.kk).size.toLong
+    val d = java.nio.file.Files.createTempDirectory("graft_annidx_cb")
+    val qd = java.nio.file.Files.createDirectory(d.resolve("quantizer"))
+    val parts = new java.io.File(s"$dir/quantizer").listFiles()
+      .filter(_.getName.endsWith(".parquet"))
+    assert(parts.length == 1, parts.mkString(", "))
+    // zero every byte between the leading magic and the footer, with no
+    // .crc beside the copy: the footer stays readable, the pages do not
+    val bytes = java.nio.file.Files.readAllBytes(parts.head.toPath)
+    val footerLen = java.nio.ByteBuffer.wrap(bytes, bytes.length - 8, 4)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt
+    java.util.Arrays.fill(bytes, 4, bytes.length - 8 - footerLen, 0.toByte)
+    java.nio.file.Files.write(qd.resolve(parts.head.getName), bytes)
+    // within the cap the rows are read, and the zeroed pages fail
+    val read = intercept[Exception] {
+      AnnIndexStore.codebookRows(spark, d.toString, n)
+    }
+    assert(!read.getMessage.contains("refusing"), read.getMessage)
+    // one row over the cap fails on the footer count alone
+    val e = intercept[IllegalStateException] {
+      AnnIndexStore.codebookRows(spark, d.toString, n - 1)
+    }
+    assert(e.getMessage.contains(s"holds $n rows"), e.getMessage)
+  }
+
+  test("an ANN operation's jobs carry its description; the caller's is restored") {
+    import spark.implicits._
+    val d = java.nio.file.Files
+      .createTempDirectory("graft_annidx_desc").toString
+    val sc = spark.sparkContext
+    sc.setJobDescription("caller")
+    try {
+      val (_, saveJobs) = jobsDuring(AnnIndexStore.save(spark, sf(), d))
+      assert(saveJobs.forall(_ == s"ann.save $d"), saveJobs)
+      val wave = graft.Tables.t(spark, sf(), "embeddings")
+        .select(($"vec_id" + 3000000L).as("vec_id"),
+          $"embedding".as("v")).limit(5)
+      val (_, appendJobs) = jobsDuring(AnnIndexStore.append(spark, d, wave))
+      assert(appendJobs.nonEmpty &&
+        appendJobs.forall(_ == s"ann.append $d"), appendJobs)
+      assert(sc.getLocalProperty("spark.job.description") == "caller")
+      // a returned frame's actions run under the caller's description
+      val (_, serveJobs) = jobsDuring(
+        AnnIndexStore.searchTopKStored(spark, d, queries3, k = 1).collect())
+      assert(serveJobs.nonEmpty && serveJobs.forall(_ == "caller"), serveJobs)
+    } finally sc.setJobDescription(null)
   }
 }

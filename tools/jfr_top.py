@@ -12,7 +12,13 @@ Reads the recording's jdk.ExecutionSample events through
   - the share of samples per thread group: the thread name up to " for ",
     with every run of digits shown as "#" (so all of Spark's
     "Executor task launch worker for task 3.0 in stage 7.0 (TID 40)"
-    threads are one group).
+    threads are one group);
+  - the jdk.ProcessStart events (child processes the JVM forked, such as
+    the `ls -ld` Hadoop's local filesystem runs per file to read a
+    permission when its native library is not loaded), counted by
+    command, with every argument that holds a "/" shown as <path>, and
+    by the first `graft.` frame on the event's stack. JDK 17's `default`
+    and `profile` settings both record them with stacks.
 
 Shares are of all execution samples in the recording. Stacks are read to
 64 frames, the recorder's own default limit (`jfr print` itself shows
@@ -26,12 +32,17 @@ import subprocess
 import sys
 
 
+SAMPLE = "jdk.ExecutionSample"
+PROCESS_START = "jdk.ProcessStart"
+
+
 def events(path):
-    """The `values` of every jdk.ExecutionSample event in `path`."""
-    cmd = ["jfr", "print", "--json", "--events", "jdk.ExecutionSample",
+    """(type, values) of every execution sample and process start in `path`."""
+    cmd = ["jfr", "print", "--json", "--events", f"{SAMPLE},{PROCESS_START}",
            "--stack-depth", "64", path]
     out = subprocess.run(cmd, capture_output=True, text=True, check=True).stdout
-    return [event["values"] for event in json.loads(out)["recording"]["events"]]
+    return [(event["type"], event["values"])
+            for event in json.loads(out)["recording"]["events"]]
 
 
 def frame_name(frame):
@@ -45,9 +56,15 @@ def thread_group(values):
     return re.sub(r"\d+", "#", name.split(" for ")[0])
 
 
-def table(title, label, counts, total, top):
+def command_shape(command):
+    """`command` with every argument that holds a "/" shown as <path>."""
+    words = (command or "?").split()
+    return " ".join(words[:1] + ["<path>" if "/" in w else w for w in words[1:]])
+
+
+def table(title, label, counts, total, top, unit="samples"):
     print(f"\n{title}")
-    print(f"{'share':>7} {'samples':>8}  {label}")
+    print(f"{'share':>7} {unit:>8}  {label}")
     for name, n in counts.most_common(top):
         print(f"{100.0 * n / total:6.1f}% {n:8d}  {name}")
 
@@ -61,11 +78,17 @@ def main():
     leaf = collections.Counter()
     inclusive = collections.Counter()
     groups = collections.Counter()
+    commands = collections.Counter()
+    callers = collections.Counter()
     total = 0
-    for values in events(args.recording):
+    for kind, values in events(args.recording):
+        frames = [frame_name(f) for f in (values.get("stackTrace") or {}).get("frames", [])]
+        if kind == PROCESS_START:
+            commands[command_shape(values.get("command"))] += 1
+            callers[next((f for f in frames if f.startswith("graft.")), "(no graft. frame)")] += 1
+            continue
         total += 1
         groups[thread_group(values)] += 1
-        frames = [frame_name(f) for f in (values.get("stackTrace") or {}).get("frames", [])]
         if frames:
             leaf[frames[0]] += 1
             inclusive.update(set(frames))
@@ -75,6 +98,11 @@ def main():
     table("top leaf frames", "frame", leaf, total, args.top)
     table("top inclusive frames", "frame", inclusive, total, args.top)
     table("samples per thread group", "thread group", groups, total, args.top)
+    starts = sum(commands.values())
+    print(f"\n{starts} process starts")
+    if starts:
+        table("process starts by command", "command", commands, starts, args.top, "starts")
+        table("process starts by first graft. frame", "frame", callers, starts, args.top, "starts")
 
 
 if __name__ == "__main__":
