@@ -1,9 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object GenGoldenLog {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions","4").config("spark.ui.enabled","false").getOrCreate()
+    val spark = GraftEngine.toolSession()
     spark.sparkContext.setLogLevel("ERROR")
     val input = graft.engine.MrPipeline.lines(spark,
       Seq("src/test/resources/crawler_logs.txt"))

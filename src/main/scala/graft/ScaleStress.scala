@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 /** Scaling smoke: replicate sf0.1 10x (~6M lineitem rows, 50k docs) into
   * /tmp and time headline queries — evidence the plans scale linearly.
@@ -8,17 +7,13 @@ import org.apache.spark.sql.functions._
   * runs the judge-r11 superlinear-tail spot check (~60M lineitem rows,
   * 500k docs) over the PINNED top-10 most-expensive bench rows — a 10x
   * ratio can hide an n^2 term behind a big linear constant; at 100x an
-  * n^2 term is 100x the linear prediction and cannot hide. Ratios land
-  * in PLANS.md ("Round-12 notes"). */
+  * n^2 term is 100x the linear prediction and cannot hide. Each row
+  * prints one `SCALE <row> sf0.1=… x<factor>=… ratio=…` line. */
 object ScaleStress {
   def main(args: Array[String]): Unit = {
     val factor = sys.env.getOrElse("SPARK_GRAFT_STRESS_FACTOR", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", 2 * cpus.toInt)
-      .config("spark.sql.session.timeZone","UTC")
-      .config("spark.sql.extensions","graft.GraftExtensions")
-      .config("spark.ui.enabled","false").getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
+    val spark = GraftEngine.session(s"local[$cpus]", 2 * cpus)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val src = "/root/testdata/sf0.1"

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Persistable ANN index artifacts — the missing production step
-  * between "build an index in-session" (the FrameMemo surface the
+  * between "build an index in-session" (the Artifact memos the
   * declared sim_* queries ride) and "serve queries tomorrow": a
   * 100 TB deployment builds the IVF assignment ONCE, writes it as a
   * table, and every later job — other sessions, other clusters —

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables.t
+import graft.engine.Artifact
 
 /** Deduplication operators for a training-data pipeline (SURVEY.md §2.5):
   * exact (hash group-by), word-shingle Jaccard, MinHash signatures,
@@ -139,10 +140,6 @@ object Dedup {
       .distinct()
   }
 
-  // shared-frame memo discipline lives in graft.engine.FrameMemo (also
-  // used by Similarity's materialized ANN index artifacts)
-  private type FrameMemo = graft.engine.FrameMemo
-
   /** Materialized LSH candidate pairs, computed ONCE per (session, data
     * dir) and shared by every consumer downstream of candidate
     * generation (`dedup_lsh_verified`'s exact-verify stage and the
@@ -155,39 +152,12 @@ object Dedup {
     * join shape stays under audit via InventorySpec's explicit
     * `lshPairs` entry.
     *
-    * Durable form (r7 verdict ask #5, the same seam as Similarity's
-    * pqIndex): with `spark.graft.indexWarehouse` set, the pair table is
-    * built once, written through Catalog.storeTable (write-once
-    * parquet), and every consumer reads the WRITTEN table — at 100 TB
-    * an executor loss replays a file read instead of the full
-    * shingle→signature→band-join build (DedupDurableSpec). */
-  private val lshPairsCache = new FrameMemo
-  private[queries] def lshPairsShared(s: SparkSession, d: String): DataFrame =
-    s.conf.getOption("spark.graft.indexWarehouse") match {
-      case Some(wh) =>
-        lshPairsCache.get(s, s"$d|durable=$wh") {
-          val name = "lsh_pairs_" + java.security.MessageDigest
-            .getInstance("MD5").digest(d.getBytes("UTF-8"))
-            .take(4).map("%02x".format(_)).mkString
-          val cat = new graft.engine.Catalog(s, wh)
-          try {
-            // losing the publish race to a concurrent builder is fine:
-            // the winner's table is the same content — read it. Only
-            // the documented race signal ("file exists: …") is
-            // swallowed; any other IAE from the build/write is a real
-            // failure and must propagate (ADVICE r8).
-            if (!cat.exists(name))
-              try cat.storeTable(lshPairs(s, d), name)
-              catch {
-                case e: IllegalArgumentException
-                  if e.getMessage != null &&
-                    e.getMessage.startsWith("file exists") =>
-              }
-            cat.readTable(name)
-          } finally cat.close()
-        }
-      case None => lshPairsCache.get(s, d)(lshPairs(s, d).localCheckpoint())
-    }
+    * Durable (the same storage as Similarity's pqIndex): with
+    * `spark.graft.indexWarehouse` set, the pair table is written once
+    * as `lsh_pairs_<md5>` and every consumer reads the WRITTEN table
+    * (DedupDurableSpec). */
+  private[queries] val lshPairsShared =
+    Artifact("dedup_lsh_pairs", Artifact.Durable("lsh_pairs"))(lshPairs)
 
   /** Exact 3-shingle Jaccard for every LSH candidate pair —
     * candidate-bounded BY CONSTRUCTION (review finding r8, now the
@@ -199,7 +169,7 @@ object Dedup {
     * @return (doc_a, doc_b, shared, jacc) with jacc rounded to 4 dp —
     *         a single float divide of exact integers, identical across
     *         engines. */
-  private[graft] def candJaccard3Raw(s: SparkSession, d: String): DataFrame = {
+  private def candJaccard3Raw(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val pairs = lshPairsShared(s, d).select($"doc_a", $"doc_b")
     val cand = pairs.select($"doc_a".as("doc_id"))
@@ -233,11 +203,9 @@ object Dedup {
     * dedup_threshold_sweep, dedup_audit_queue) — each was re-running
     * the candidate shingle explode + two pair joins per query (r16
     * optimization, the lshPairsShared discipline). One small row per
-    * candidate pair; Bench prices the real build as
-    * dedup_cand_jaccard_raw per the cache-read audit rule. */
-  private val candJacc3Cache = new FrameMemo
-  private def candJaccard3(s: SparkSession, d: String): DataFrame =
-    candJacc3Cache.get(s, d)(candJaccard3Raw(s, d).localCheckpoint())
+    * candidate pair; like every Artifact, its build is priced by
+    * construction as the dedup_cand_jaccard_raw Bench row. */
+  private val candJaccard3 = Artifact("dedup_cand_jaccard")(candJaccard3Raw)
 
   /** Materialized corpus shingle tables — the global n-gram index every
     * dedup pass builds once and every consumer reads (the text twin of
@@ -253,20 +221,17 @@ object Dedup {
     * Size trade, stated deliberately: unlike the constant-size sketch
     * tables these frames are O(corpus shingles) — exactly the pinning
     * an earlier per-query comment rejected. What changed: residency is
-    * now bounded (FrameMemo holds ≤ 8 (session, dir) entries,
+    * now bounded (an Artifact holds ≤ 8 (session, dir) entries,
     * insertion-order eviction; an evicted frame's checkpoint blocks
-    * are reclaimed by Spark's ContextCleaner once the frame is
-    * unreferenced) and the alternative — re-running the widest-
-    * intermediate distinct shuffle once PER CONSUMER — costs strictly
+    * are released at eviction) and the alternative — re-running the
+    * widest-intermediate distinct shuffle once PER CONSUMER — costs strictly
     * more at every scale. localCheckpoint stores on executor
     * local disk/memory, the residency a production n-gram index
     * would have anyway. */
-  private val shingles3Cache = new FrameMemo
-  private[queries] def shingles3Shared(s: SparkSession, d: String): DataFrame =
-    shingles3Cache.get(s, d)(shingles(s, d, 3, hashed = true).localCheckpoint())
-  private val shingles5Cache = new FrameMemo
-  private[queries] def shingles5Shared(s: SparkSession, d: String): DataFrame =
-    shingles5Cache.get(s, d)(shingles(s, d, 5, hashed = true).localCheckpoint())
+  private[queries] val shingles3Shared = Artifact("dedup_shingles3")(
+    (s, d) => shingles(s, d, 3, hashed = true))
+  private[queries] val shingles5Shared = Artifact("dedup_shingles5")(
+    (s, d) => shingles(s, d, 5, hashed = true))
 
   /** Connected components over the LSH candidate graph, computed ONCE per
     * (session, data dir) and shared: `dedup_clusters` and
@@ -275,18 +240,10 @@ object Dedup {
     * without sharing the iterative join rounds would execute twice per
     * run. The cache holds the checkpointed frame (small: one (doc_id,
     * component) row per clustered doc). */
-  private val componentsCache = new FrameMemo
-  private def components(s: SparkSession, d: String): DataFrame =
-    componentsCache.get(s, d)(componentsRaw(s, d))
-
-  /** The un-memoized propagation loop over the shared candidate pairs —
-    * what ScaleStress drives for dedup_clusters' scaling row (the
-    * declared query serves the memo, so timing it would measure a
-    * cache read; the loop is the operator). */
-  private[graft] def componentsRaw(s: SparkSession, d: String): DataFrame =
-    graft.engine.Components.connectedComponents(
+  private val components = Artifact("dedup_clusters", Artifact.AsBuilt)(
+    (s, d) => graft.engine.Components.connectedComponents(
         lshPairsShared(s, d), "doc_a", "doc_b", maxIter = 15)
-      .toDF("doc_id", "component")
+      .toDF("doc_id", "component"))
 
   /** 16-bit SimHash per doc (unordered — callers add their own sort):
     * bit_j set iff the signed sum over distinct tokens of
@@ -314,9 +271,7 @@ object Dedup {
     * md5-per-token fold runs up to four times in one query;
     * dedup_simhash is a fifth build of the same table. Raw plan under
     * InventorySpec audit via `simhash`. */
-  private val simhashCache = new FrameMemo
-  private def simhashShared(s: SparkSession, d: String): DataFrame =
-    simhashCache.get(s, d)(simhash(s, d).localCheckpoint())
+  private val simhashShared = Artifact("dedup_simhash")(simhash)
 
   /** DuckDB twin of `Components.connectedComponents` over [[lshPairs]]:
     * recursive min-label reachability ending in a `comp(doc_id, component)`

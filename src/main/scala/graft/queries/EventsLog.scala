@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables.t
+import graft.engine.Artifact
 
 /** The log_analyzer plugin family (SURVEY.md §2.3 L1-L9) on the `events`
   * table: group-counts (L7, `log_analyzer.go:58-79`), exact distinct (L8,
@@ -51,14 +52,10 @@ object EventsLog {
     * type alphabet) — at 100 TB that is the single largest duplicated
     * scan in the events family, for a result that is CALENDAR-bounded
     * (types × hours rows, ~3.6k at bench scale) and therefore cheap
-    * to pin. localCheckpoint + FrameMemo is the lshPairsShared
-    * discipline; the raw one-pass build stays benchable as the
-    * `log_dense_grid_raw` RawBuilds row. */
-  private val gridCache = new graft.engine.FrameMemo
-  private[graft] def denseHourGridShared(s: SparkSession, d: String): DataFrame =
-    gridCache.get(s, d)(denseHourGrid(t(s, d, "events")).localCheckpoint())
+    * to pin. Like every Artifact, the raw one-pass build is priced as
+    * the `log_dense_grid_raw` Bench row. */
+  private val denseHourGridShared = Artifact("log_dense_grid")(denseHourGridRaw)
 
-  /** Raw (non-memoized) grid build for RawBuilds/ScaleStress. */
   private[graft] def denseHourGridRaw(s: SparkSession, d: String): DataFrame =
     denseHourGrid(t(s, d, "events"))
 
@@ -6149,13 +6146,11 @@ object EventsLog {
     * qiClassMetrics — log_t_closeness and log_anonymize_release): the
     * two user-keyed event aggs + join were re-run per query (r16
     * optimization, the lshPairsShared discipline). One small row per
-    * user; Bench prices the real build as log_qi_profile_raw per the
-    * cache-read audit rule. */
-  private val qiProfileCache = new graft.engine.FrameMemo
-  private def qiProfile(s: SparkSession, d: String): DataFrame =
-    qiProfileCache.get(s, d)(qiProfileRaw(s, d).localCheckpoint())
+    * user; like every Artifact, its build is priced by construction as
+    * the log_qi_profile_raw Bench row. */
+  private val qiProfile = Artifact("log_qi_profile")(qiProfileRaw)
 
-  private[graft] def qiProfileRaw(s: SparkSession, d: String): DataFrame = {
+  private def qiProfileRaw(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val ev = graft.Tables.t(s, d, "events")
       .select($"user_id", $"event_type",
@@ -6192,13 +6187,11 @@ object EventsLog {
     * Materialized ONCE per (session, dir) and shared by both consumers
     * (r17, the qiProfile/candJaccard3 discipline — VERDICT r16 ask #4):
     * un-shared, log_t_closeness and log_anonymize_release each re-ran
-    * the spendband join + lattice windows. Bench prices the real build
-    * as log_qi_class_raw per the cache-read audit rule. */
-  private val qiClassCache = new graft.engine.FrameMemo
-  private def qiClassMetrics(s: SparkSession, d: String): DataFrame =
-    qiClassCache.get(s, d)(qiClassMetricsRaw(s, d).localCheckpoint())
+    * the spendband join + lattice windows. Like every Artifact, its
+    * build is priced by construction as the log_qi_class_raw Bench row. */
+  private val qiClassMetrics = Artifact("log_qi_class")(qiClassMetricsRaw)
 
-  private[graft] def qiClassMetricsRaw(s: SparkSession,
+  private def qiClassMetricsRaw(s: SparkSession,
       d: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window

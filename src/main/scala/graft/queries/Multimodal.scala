@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables.t
+import graft.engine.Artifact
 
 /** Multimodal-column surface (SURVEY.md §2.5): media payloads are opaque
   * `binary` columns with typed metadata. The declared query exercises the
@@ -25,7 +26,7 @@ object Multimodal {
     * other shared frame) — rebuilding it per consumer was the r12
     * drift source for `mm_neardup_clusters` (verdict r12 ask #1). The
     * genuine build cost stays benched as `mm_neardup_pairs_raw`. */
-  private[graft] def neardupPairsRaw(s: SparkSession, d: String): DataFrame = {
+  private def neardupPairsRaw(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val fd = t(s, d, "documents")
       .select($"doc_id".as("media_id"), $"text".as("payload"))
@@ -52,9 +53,7 @@ object Multimodal {
     * pair), so the checkpoint is cheap to hold; the CC loop downstream
     * then starts from a LogicalRDD instead of re-planning the whole
     * explode→band-join build into every iterate. */
-  private val neardupCache = new graft.engine.FrameMemo
-  private def neardupPairsShared(s: SparkSession, d: String): DataFrame =
-    neardupCache.get(s, d)(neardupPairsRaw(s, d).localCheckpoint())
+  private val neardupPairsShared = Artifact("mm_neardup_pairs")(neardupPairsRaw)
 
   /** Shared recursive-CC oracle preamble over the media pair graph. */
   private val mmPairsCte: String =

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables.t
+import graft.engine.Artifact
 
 /** Sketch operators for 100 TB-scale frequency/membership estimation
   * (SURVEY.md §2.5 north star; complements the exact L8 distinct counts
@@ -103,57 +104,45 @@ object Sketches {
   private[graft] def bloomBuild(s: SparkSession, d: String): DataFrame =
     bloomFold(words(s, d))
 
-  /** Raw shard-fold + merge plans for ScaleStress: the DECLARED merge
-    * queries ride the memoized shard tables (built once in the warm
-    * pass), so timing them would measure a cache read — these drive the
-    * full shard fold and the cell-wise/bit-wise merge in one plan. */
-  private[graft] def cmsMergeRaw(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    cmsFold(TextWordCount.docWords(s, d)
-        .select((col("doc_id") % 2).cast("int").as("shard"), col("word")),
-      "shard")
-      .groupBy($"h_row", $"bucket")
-      .agg(sum($"cnt").as("cnt"), count(lit(1)).as("n_shards"))
-  }
-  private[graft] def bloomMergeRaw(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    bloomFold(TextWordCount.docWords(s, d)
-        .select((col("doc_id") % 2).cast("int").as("shard"), col("word")),
-      "shard")
-      .groupBy($"word_j")
-      .agg(bit_or($"bits").as("bits"), count(lit(1)).as("n_shards"))
-  }
+  /** Shard-local sketch tables over doc-parity shards: the audited
+    * cmsFold/bloomFold with one extra group key. Still constant-size
+    * (shards × D·W cells / shards × MBits/63 longs). */
+  private def docShards(s: SparkSession, d: String): DataFrame =
+    TextWordCount.docWords(s, d)
+      .select((col("doc_id") % 2).cast("int").as("shard"), col("word"))
+  private def cmsShards(s: SparkSession, d: String): DataFrame =
+    cmsFold(docShards(s, d), "shard")
+  private def bloomShards(s: SparkSession, d: String): DataFrame =
+    bloomFold(docShards(s, d), "shard")
+
+  /** The cell-wise / bit-wise merges of the shard tables. */
+  private def cmsMerge(shards: DataFrame): DataFrame =
+    shards.groupBy(col("h_row"), col("bucket"))
+      .agg(sum(col("cnt")).as("cnt"), count(lit(1)).as("n_shards"))
+  private def bloomMerge(shards: DataFrame): DataFrame =
+    shards.groupBy(col("word_j"))
+      .agg(bit_or(col("bits")).as("bits"), count(lit(1)).as("n_shards"))
+
+  /** The DECLARED merge queries ride the memoized shard tables (built
+    * once in the warm pass), so timing them would measure a cache read;
+    * these drive the full shard fold and the merge in one plan. */
+  private[graft] def cmsMergeRaw(s: SparkSession, d: String): DataFrame =
+    cmsMerge(cmsShards(s, d))
+  private[graft] def bloomMergeRaw(s: SparkSession, d: String): DataFrame =
+    bloomMerge(bloomShards(s, d))
 
   /** Materialized sketch tables, built once per (session, dir) and
     * shared — sketches exist precisely to be built in one pass and
     * probed many times; before this, every estimate/probe query paid
     * the full corpus fold its sibling had already run. The
-    * checkpointed frames are constant-size at ANY corpus scale. */
-  private val cmsCache = new graft.engine.FrameMemo
-  private def cmsShared(s: SparkSession, d: String): DataFrame =
-    cmsCache.get(s, d)(cmsBuild(s, d).localCheckpoint())
-  private val bloomCache = new graft.engine.FrameMemo
-  private def bloomShared(s: SparkSession, d: String): DataFrame =
-    bloomCache.get(s, d)(bloomBuild(s, d).localCheckpoint())
-
-  /** Shard-local sketch tables (doc-parity shards), same build-once
-    * discipline: in production the shard sketches EXIST (each ingest
-    * partition folds its own) and merging is the cheap step — the
-    * memo models that. Still constant-size (shards × D·W cells /
-    * shards × 4 longs); the fold plan is the audited cmsFold/bloomFold
-    * with one extra group key. */
-  private val cmsShardCache = new graft.engine.FrameMemo
-  private def cmsShardShared(s: SparkSession, d: String): DataFrame =
-    cmsShardCache.get(s, d)(
-      cmsFold(TextWordCount.docWords(s, d)
-          .select((col("doc_id") % 2).cast("int").as("shard"), col("word")),
-        "shard").localCheckpoint())
-  private val bloomShardCache = new graft.engine.FrameMemo
-  private def bloomShardShared(s: SparkSession, d: String): DataFrame =
-    bloomShardCache.get(s, d)(
-      bloomFold(TextWordCount.docWords(s, d)
-          .select((col("doc_id") % 2).cast("int").as("shard"), col("word")),
-        "shard").localCheckpoint())
+    * checkpointed frames are constant-size at ANY corpus scale. The
+    * shard tables follow the same discipline: in production the shard
+    * sketches EXIST (each ingest partition folds its own) and merging
+    * is the cheap step — the memo models that. */
+  private val cmsShared = Artifact("sketch_cms")(cmsBuild)
+  private val bloomShared = Artifact("sketch_bloom")(bloomBuild)
+  private val cmsShardShared = Artifact("sketch_cms_shards")(cmsShards)
+  private val bloomShardShared = Artifact("sketch_bloom_shards")(bloomShards)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // CountMin sketch build: ONE pass over the corpus (all D buckets
@@ -203,10 +192,7 @@ object Sketches {
     // merge identically, the spec proves merging loses nothing).
     "sketch_cms_merge" -> ((s, d) => {
       import s.implicits._
-      val shardCells = cmsShardShared(s, d)
-      shardCells.groupBy($"h_row", $"bucket")
-        .agg(sum($"cnt").as("cnt"), count(lit(1)).as("n_shards"))
-        .orderBy($"h_row", $"bucket")
+      cmsMerge(cmsShardShared(s, d)).orderBy($"h_row", $"bucket")
     }),
 
     // Bloom merge: shard-local filters OR-folded — same contract as
@@ -214,10 +200,7 @@ object Sketches {
     // same bloomFold as the global build, so the bit layout cannot fork.
     "sketch_bloom_merge" -> ((s, d) => {
       import s.implicits._
-      val shardBits = bloomShardShared(s, d)
-      shardBits.groupBy($"word_j")
-        .agg(bit_or($"bits").as("bits"), count(lit(1)).as("n_shards"))
-        .orderBy($"word_j")
+      bloomMerge(bloomShardShared(s, d)).orderBy($"word_j")
     }),
 
     // HLL merge — the third mergeability contract, for the distinct-

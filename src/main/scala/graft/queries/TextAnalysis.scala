@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables.t
+import graft.engine.Artifact
 
 /** Text-analysis operators for a training-data pipeline (SURVEY.md §2.5):
   * language-ID (stopword-profile heuristic), quality scoring, token
@@ -63,28 +64,15 @@ object TextAnalysis {
     * lattice pair (text_log_odds, text_burrows_delta): un-shared,
     * each query ran its own tokenize AND pinned a fresh per-call
     * localCheckpoint every invocation (review finding, round 11 —
-    * exactly the accretion FrameMemo exists to prevent). The frame is
+    * exactly the accretion an Artifact's bound prevents). The frame is
     * |sources|×|vocab| rows; every marginal derives from it. */
-  private val swCache = new graft.engine.FrameMemo
-  private def sourceTokenCounts(s: SparkSession, d: String): DataFrame =
-    swCache.get(s, d)(
-      t(s, d, "documents")
-        .select(col("source"),
-          explode(split(lower(col("text")), "\\s+")).as("token"))
-        .filter(col("token") =!= "")
-        .groupBy(col("source"), col("token"))
-        .agg(count(lit(1)).as("y"))
-        .localCheckpoint())
-
-  /** Raw (non-memoized) cell-count build for RawBuilds/ScaleStress. */
-  private[graft] def sourceTokenCountsRaw(s: SparkSession,
-      d: String): DataFrame =
-    t(s, d, "documents")
+  private val sourceTokenCounts = Artifact("text_source_counts")(
+    (s, d) => t(s, d, "documents")
       .select(col("source"),
         explode(split(lower(col("text")), "\\s+")).as("token"))
       .filter(col("token") =!= "")
       .groupBy(col("source"), col("token"))
-      .agg(count(lit(1)).as("y"))
+      .agg(count(lit(1)).as("y")))
 
   /** WRITE-ONCE stored-tokenizer fixture per dataset dir (r15): the
     * persisted BpeStore artifact the token-currency consumers read
@@ -1248,11 +1236,8 @@ object TextAnalysis {
     * extraction stage both run over the identical input. Same
     * build-once index discipline as Dedup's shingle tables; the raw
     * plan stays under InventorySpec audit via winnowFingerprints. */
-  private val winnowCache = new graft.engine.FrameMemo
-  private[queries] def winnowShared(s: SparkSession, d: String)
-      : org.apache.spark.sql.DataFrame =
-    winnowCache.get(s, d)(
-      winnowFingerprints(t(s, d, "documents")).localCheckpoint())
+  private[queries] val winnowShared = Artifact("text_winnow")(
+    (s, d) => winnowFingerprints(t(s, d, "documents")))
 
   /** Winnowing fingerprint extraction (one (doc_id, fp) row per selected
     * window minimum; docs with fewer than 4 shingles are dropped) —

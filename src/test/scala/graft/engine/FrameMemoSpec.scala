@@ -2,81 +2,91 @@ package graft.engine
 
 import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 import graft.SparkSpec
 
-/** Contract of the shared-frame memo that now backs every materialized
-  * index artifact (LSH pairs, components, IVF cells, PQ index, shingle
-  * tables, winnow fingerprints, sketches, simhash): one compute per
-  * (session, dir), distinct entries per dir, and bounded size with
+/** Contract of the memo every shared build declared as an [[Artifact]]
+  * (LSH pairs, components, IVF cells, PQ index, shingle tables, winnow
+  * fingerprints, sketches, simhash, …) stores its frame in: one build
+  * per (session, dir), distinct entries per dir, and bounded size with
   * insertion-order eviction — the property that keeps stopped sessions
-  * and their checkpointed RDDs releasable. */
+  * and their checkpointed RDDs releasable. The artifacts here are not
+  * declared (no registry entry, no Bench row). */
 class FrameMemoSpec extends SparkSpec {
 
+  private def scratch(storage: Artifact.Storage)(
+      build: (SparkSession, String) => DataFrame): Artifact =
+    new Artifact("scratch", storage, build)
+
   test("computes once per key and returns the same frame after") {
-    val memo = new FrameMemo
     val builds = new AtomicInteger
-    def frame() = { builds.incrementAndGet(); spark.range(3).toDF() }
-    val a1 = memo.get(spark, "dirA")(frame())
-    val a2 = memo.get(spark, "dirA")(frame())
+    val art = scratch(Artifact.AsBuilt) { (s, _) =>
+      builds.incrementAndGet(); s.range(3).toDF() }
+    val a1 = art(spark, "dirA")
+    val a2 = art(spark, "dirA")
     assert(builds.get() == 1, "second get must not recompute")
     assert(a1 eq a2, "must return the memoized instance")
   }
 
   test("distinct dirs get distinct entries") {
-    val memo = new FrameMemo
     val builds = new AtomicInteger
-    def frame(n: Int) = { builds.incrementAndGet(); spark.range(n).toDF() }
-    val a = memo.get(spark, "dirA")(frame(1))
-    val b = memo.get(spark, "dirB")(frame(2))
+    val art = scratch(Artifact.AsBuilt) { (s, d) =>
+      builds.incrementAndGet(); s.range(d.length).toDF() }
+    val a = art(spark, "dirA")
+    val b = art(spark, "dirBB")
     assert(builds.get() == 2)
     assert(!(a eq b))
-    assert(memo.get(spark, "dirB")(frame(2)) eq b)
+    assert(art(spark, "dirBB") eq b)
   }
 
   test("bounded: eldest entry is evicted and recomputed on next access") {
-    val memo = new FrameMemo
     val builds = new AtomicInteger
-    def frame() = { builds.incrementAndGet(); spark.range(1).toDF() }
+    val art = scratch(Artifact.AsBuilt) { (s, _) =>
+      builds.incrementAndGet(); s.range(1).toDF() }
     // fill past MaxEntries (8): dir0 must age out
-    (0 to 8).foreach(i => memo.get(spark, s"dir$i")(frame()))
+    (0 to 8).foreach(i => art(spark, s"dir$i"))
     assert(builds.get() == 9)
-    memo.get(spark, "dir8")(frame())
+    art(spark, "dir8")
     assert(builds.get() == 9, "dir8 is still resident")
-    memo.get(spark, "dir0")(frame())
+    art(spark, "dir0")
     assert(builds.get() == 10, "evicted dir0 must recompute")
   }
 
   test("eviction unpersists the evicted entry's checkpoint blocks") {
-    val memo = new FrameMemo
     val sc = spark.sparkContext
-    def ckpt(n: Int) = spark.range(n).toDF().localCheckpoint(eager = true)
-    val first = memo.get(spark, "dir0")(ckpt(1))
+    // the default storage: the artifact localCheckpoints the build
+    val art = scratch(Artifact.Checkpoint)((s, _) => s.range(1).toDF())
+    val first = art(spark, "dir0")
     val firstRdd = Frames.checkpointRdd(first)
     assert(firstRdd.isDefined, "localCheckpoint frame must expose its RDD")
     val id = firstRdd.get.id
     assert(sc.getPersistentRDDs.contains(id), "checkpoint is persisted")
     // fill past MaxEntries (8) so dir0 ages out
-    (1 to 8).foreach(i => memo.get(spark, s"dir$i")(ckpt(1)))
+    (1 to 8).foreach(i => art(spark, s"dir$i"))
     assert(!sc.getPersistentRDDs.contains(id),
       "evicted entry's blocks must be released deterministically, " +
         "not left to GC + ContextCleaner")
     // the surviving entries are untouched
-    val last = memo.get(spark, "dir8")(sys.error("must be resident"))
+    val last = art.memo.get(spark, "dir8")(sys.error("must be resident"))._1
     val lastId = Frames.checkpointRdd(last).get.id
     assert(sc.getPersistentRDDs.contains(lastId))
   }
 
   test("race loser's checkpoint is released, winner's frame is returned") {
-    val memo = new FrameMemo
     val sc = spark.sparkContext
     val winner = spark.range(2).toDF().localCheckpoint(eager = true)
     val loser = spark.range(2).toDF().localCheckpoint(eager = true)
     val loserId = Frames.checkpointRdd(loser).get.id
-    // simulate the race: winner inserted while the loser's compute ran
-    val got = memo.get(spark, "dirR") {
-      memo.get(spark, "dirR")(winner) // "another thread" wins first
-      loser
+    val calls = new AtomicInteger
+    // simulate the race: winner inserted while the loser's build ran
+    lazy val art: Artifact = scratch(Artifact.AsBuilt) { (s, d) =>
+      if (calls.incrementAndGet() == 1) {
+        art(s, d) // "another thread" wins first
+        loser
+      } else winner
     }
+    val got = art(spark, "dirR")
     assert(got eq winner, "winner's instance must be returned")
     assert(!sc.getPersistentRDDs.contains(loserId),
       "losing compute's checkpoint must be released explicitly")

@@ -190,8 +190,8 @@ class TopKPlanSpec extends SparkSpec {
   //   q_window_top3          k=3 per customer  (Relational.scala)
   //   q_stratified_sample    k=5 per priority  (Relational.scala)
   //   text_keywords          k=3 per doc       (TextAnalysis.scala)
-  //   sim_mutual_knn         k=3 per src (one join side; the other is
-  //                          native WindowGroupLimit — see PLANS.md)
+  //   sim_mutual_knn         k=3 per src (one join side; Spark plans
+  //                          the other as its native WindowGroupLimit)
   //   q_lateral_topk         LIMIT 2 per nation (lateral subquery —
   //                          Spark rewrites to a rank window)
   // Documented non-riders: dedup_canonical (a second window —

@@ -958,11 +958,10 @@ class AnnInvariantsSpec extends SparkSpec {
   }
 
   test("embShape memo holds at most EmbShapeMax entries") {
-    val dirs = Seq.fill(Similarity.EmbShapeMax + 3)(embDir(unitVecs(4)))
+    val dirs = Seq.fill(graft.engine.Memo.MaxEntries + 3)(embDir(unitVecs(4)))
     dirs.foreach { d =>
       assert(Similarity.embShape(spark, d) == ((4L, 2L, 1L, 1L)))
-      assert(Similarity.embShapeCache.synchronized(
-        Similarity.embShapeCache.size) <= Similarity.EmbShapeMax)
+      assert(Similarity.embShapeMemo.size <= graft.engine.Memo.MaxEntries)
     }
   }
 }

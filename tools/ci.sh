@@ -65,7 +65,7 @@ python3 tools/check.py /root/testdata/sf0.01 /tmp/ci_v01 | tail -1
 echo "== bench sf0.1 =="
 # benches must run alone: a bench chained straight after the 8-minute
 # test phase read 25 false regressions from residual CPU/page-cache
-# state (PLANS.md round-8 disposition). Let the machine settle first;
+# state. Let the machine settle first;
 # treat any regression list from a ci-chained bench as advisory and
 # re-run isolated before committing a baseline.
 sleep 60
