@@ -33,16 +33,14 @@ object Bench {
     val spark = GraftEngine.toolSession()
     spark.sparkContext.setLogLevel("WARN")
 
-    // default 3 reps: the r5→r6 phantom-regression investigation (PLANS.md
-    // "Round-6 notes") measured ~1.7x run-to-run variance on identical
-    // code at min-of-2 but stable numbers at min-of-3
+    // default 3 reps: identical code measured ~1.7x run-to-run variance
+    // at min-of-2 but stable numbers at min-of-3
     val reps = sys.env.get("SPARK_GRAFT_BENCH_REPS").flatMap(_.toIntOption)
       .filter(_ >= 1).getOrElse(3)
-    // The declared inventory PLUS the *_raw builds of memo-backed frames
-    // (RawBuilds): a declared query that reads a FrameMemo table times a
-    // cache read at min-of-N reps, so the raw rows carry the real build
-    // cost in bench_detail.json and keep the auto-diff honest (ADVICE
-    // r7 — text_bigram_lm's 0.758→0.028 s "win" was a memo hit).
+    // The declared inventory PLUS the *_raw builds of the shared
+    // artifacts (RawBuilds): a declared query that reads an Artifact
+    // times a cache read at min-of-N reps, so the raw rows carry the
+    // real build cost (text_bigram_lm's 0.758→0.028 s "win" was a hit).
     val inventory = SparkEntry.queries ++ RawBuilds.map
     val wanted: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] =
       if (args.isEmpty) inventory
@@ -69,10 +67,8 @@ object Bench {
       }
     }
     // deterministic (sorted) timing order: hash-map order reshuffles
-    // every query's neighborhood whenever the inventory grows, which is
-    // exactly the round-over-round noise source diagnosed in PLANS.md
-    // "Round-4 notes" — a fixed order keeps per-query numbers comparable
-    // across rounds
+    // every query's neighborhood whenever the inventory grows, a measured
+    // round-over-round noise source; a fixed order keeps rows comparable
     val results = wanted.toSeq.sortBy(_._1).map { case (name, fn) =>
       // collect the PREVIOUS query's garbage before this one's clock
       // starts (see scaladoc — kills the heavy-neighbor noise class)

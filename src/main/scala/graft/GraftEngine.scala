@@ -49,10 +49,10 @@ object GraftEngine {
   def apply(spark: SparkSession, warehouse: String): GraftEngine =
     new GraftEngine(spark, warehouse)
 
-  /** The tool mains' session (Bench, Verify, Smoke, JobCount, Explain,
-    * ExplainExecuted, GenGolden, GenGoldenLog): `local[N]` with N
-    * shuffle partitions, N read from SPARK_GRAFT_CPUS (default 4), so
-    * every tool measures under Bench's settings. */
+  /** The tool mains' session (Bench, Verify, Smoke, Profile,
+    * GenGolden, GenGoldenLog): `local[N]` with N shuffle partitions, N
+    * read from SPARK_GRAFT_CPUS (default 4), so every tool measures
+    * under Bench's settings. */
   def toolSession(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     session(s"local[$cpus]", cpus)

@@ -1,5 +1,7 @@
 package graft.engine
 
+import java.util.concurrent.atomic.AtomicLong
+
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -10,8 +12,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * compute may run twice, the first value stored wins, and no lock is
   * held across the compute (a Spark job runs there). Data dirs are
   * immutable for an entry's useful life (TESTDATA.md), so entries
-  * never go stale. */
+  * never go stale. Over all keys, the memo counts its computes (racing
+  * losers too), hits and compute time, which `graft.Profile` reports. */
 final class Memo[V <: AnyRef](release: V => Unit) {
+  val builds = new AtomicLong
+  val hits = new AtomicLong
+  val buildNanos = new AtomicLong
+
   private val m = new java.util.LinkedHashMap[(SparkSession, String), V](
       16, 0.75f, false) {
     override def removeEldestEntry(
@@ -25,9 +32,12 @@ final class Memo[V <: AnyRef](release: V => Unit) {
   def get(s: SparkSession, key: String)(compute: => V): V = {
     val k = (s, key)
     val hit = m.synchronized(m.get(k))
-    if (hit != null) hit
+    if (hit != null) { hits.incrementAndGet(); hit }
     else {
+      val t0 = System.nanoTime()
       val v = compute // outside the lock
+      buildNanos.addAndGet(System.nanoTime() - t0)
+      builds.incrementAndGet()
       m.synchronized {
         val again = m.get(k)
         if (again != null) { release(v); again }

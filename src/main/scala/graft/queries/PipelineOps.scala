@@ -246,9 +246,9 @@ object PipelineOps {
     * corpus-wide conditional bigram probability c(w1 w2)/c(w1 ·). The
     * hashed bigram stream feeds THREE consumers (doc stream + both
     * count aggs) — materialized once via eager localCheckpoint, the
-    * tokenize-once discipline any real corpus pipeline uses (verified
-    * via ExplainExecuted: AQE does not merge the differently-keyed
-    * subtrees); 24 bytes/bigram, executor-resident. */
+    * tokenize-once discipline any real corpus pipeline uses (the
+    * executed plan `graft.Profile` prints shows AQE does not merge the
+    * differently-keyed subtrees); 24 bytes/bigram, executor-resident. */
   private[graft] def lmScoresRaw(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     // NO fanOut here (r17, reverting half of f3c2ba9 per VERDICT r16
@@ -392,7 +392,7 @@ object PipelineOps {
     * domain, and each doc adds a within-bucket row_number — the same
     * two-level design as doc_token_budget. Tier = 1 + (3·(rank-1))
     * div n, integer division on both engines. Takes the lm frame as an
-    * argument so ScaleStress can drive the raw end-to-end pipeline. */
+    * argument so `text_perplexity_tiers_raw` drives the raw pipeline. */
   private[graft] def perplexityTiers(lm: DataFrame): DataFrame = {
     val s = lm.sparkSession
     import s.implicits._
@@ -971,10 +971,10 @@ object PipelineOps {
     // xxhash64 keys so the shuffle carries no shingle strings. The
     // hashed bigram stream feeds THREE consumers (the doc stream and
     // both count aggs) — without a barrier the scan + regex tokenize +
-    // explode runs three times (verified via ExplainExecuted: AQE does
-    // not merge the differently-keyed subtrees), so it is materialized
-    // once via eager localCheckpoint — the tokenize-once discipline any
-    // real corpus pipeline uses; 24 bytes/bigram, executor-resident.
+    // explode runs three times (`graft.Profile`'s executed plan: AQE
+    // does not merge the differently-keyed subtrees), so it is
+    // materialized once via eager localCheckpoint — the tokenize-once
+    // discipline any real corpus pipeline uses; 24 bytes/bigram.
     "text_bigram_lm" -> ((s, d) => lmScoresShared(s, d)),
 
     // CCNet-style perplexity tiering: rank every scored doc by its

@@ -92,8 +92,8 @@ object Similarity {
     * The assignment is an INDEX BUILD — identical for all four pairwise
     * consumers — so like pqIndex it is materialized once per (session,
     * dir), as the [[ivfCells]] Artifact; the within-cell pair JOIN (the
-    * actual O(n^1.5) term) stays per-query and is what ScaleStress
-    * measures.
+    * actual O(n^1.5) term) stays per-query and is what the rows' scale
+    * fit in `profile_detail.json` measures.
     * The raw build plan stays under InventorySpec audit via
     * ivfCellsRaw. */
   private[graft] def ivfCellsRaw(s: SparkSession, d: String): DataFrame = {

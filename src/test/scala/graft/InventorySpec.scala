@@ -205,12 +205,10 @@ class InventorySpec extends SparkSpec {
     "log_ab_cuped",          // 1-row ts min/max bounds scalar + 1-row
                              // pooled-sums scalar (was 6 global
                              // windows, r17 verdict ask #7)
-    "text_kl_source_drift",  // 1-row corpus-token-total scalar (was a
-                             // global window, r17 verdict ask #7)
-    // log_markov_stationary / mm_bytes_balance: broadcast-scalar form
-    // tried and reverted (exchange reuse defeated by pruning /
-    // pushed-filter asymmetry — see the query comments); they keep
-    // their bounded global windows and plan no BNLJ
+    // log_markov_stationary / mm_bytes_balance / text_kl_source_drift:
+    // broadcast-scalar form tried and reverted (exchange reuse defeated
+    // by pruning / pushed-filter asymmetry — see the query comments);
+    // they keep their bounded global windows and plan no BNLJ
     "doc_mixture_targets",   // 1-row (n_src, ttok) + 1-row teff scalars
                              // (was 3 global windows, r17 verdict
                              // ask #7)

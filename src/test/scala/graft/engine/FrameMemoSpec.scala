@@ -27,6 +27,9 @@ class FrameMemoSpec extends SparkSpec {
     val a2 = art(spark, "dirA")
     assert(builds.get() == 1, "second get must not recompute")
     assert(a1 eq a2, "must return the memoized instance")
+    assert(art.memo.builds.get == 1 && art.memo.hits.get == 1,
+      "the memo counts one build and one hit")
+    assert(art.memo.buildNanos.get > 0, "the build's time is counted")
   }
 
   test("distinct dirs get distinct entries") {
@@ -38,6 +41,7 @@ class FrameMemoSpec extends SparkSpec {
     assert(builds.get() == 2)
     assert(!(a eq b))
     assert(art(spark, "dirBB") eq b)
+    assert(art.memo.builds.get == 2 && art.memo.hits.get == 1)
   }
 
   test("bounded: eldest entry is evicted and recomputed on next access") {
@@ -51,6 +55,8 @@ class FrameMemoSpec extends SparkSpec {
     assert(builds.get() == 9, "dir8 is still resident")
     art(spark, "dir0")
     assert(builds.get() == 10, "evicted dir0 must recompute")
+    assert(art.memo.builds.get == 10 && art.memo.hits.get == 1,
+      "a recompute after eviction counts as a build, not a hit")
   }
 
   test("eviction unpersists the evicted entry's checkpoint blocks") {
@@ -88,6 +94,8 @@ class FrameMemoSpec extends SparkSpec {
     }
     val got = art(spark, "dirR")
     assert(got eq winner, "winner's instance must be returned")
+    assert(art.memo.builds.get == 2 && art.memo.hits.get == 0,
+      "the racing loser's compute counts as a build")
     assert(!sc.getPersistentRDDs.contains(loserId),
       "losing compute's checkpoint must be released explicitly")
   }
